@@ -31,22 +31,31 @@ def compact_partition(
     filesystem listing, no data read), then rewrites via a temp dir so a
     crash never leaves the partition half-compacted. Returns the new file
     count. Run per-partition (importdate=...), never on the whole table.
+
+    A partition that already IS its target layout -- one data file no
+    larger than the target -- is left in place and costs no Spark job
+    (returns 1). merge_snapshot writes each bucket as one file, so the
+    weekly compaction of freshly merged buckets is a stat call per
+    bucket; only a multi-file partition, or one file over the target,
+    is rewritten.
     """
     import glob
     import os
     import shutil
 
-    files = [
+    files = {
         f
         for f in glob.glob(os.path.join(path, "*.parquet"))
         + glob.glob(os.path.join(path, "part-*"))
         if os.path.isfile(f)
-    ]
-    total = sum(os.path.getsize(f) for f in set(files))
+    }
+    total = sum(os.path.getsize(f) for f in files)
     n_out = max(1, -(-total // target_file_bytes))  # ceil div
+    if n_out == 1 and len(files) == 1:
+        return 1
     df = spark.read.parquet(path)
     tmp = path.rstrip("/") + "__compacting"
-    # n_out == 1 (the common weekly-bucket case): coalesce merges the
+    # n_out == 1 (several small files): coalesce merges the
     # input splits in ONE task with no shuffle write+read; repartition
     # would round-trip every row through a 1-partition exchange for the
     # same single output file (r16, opt guide 2.4). Multi-file outputs
@@ -473,6 +482,14 @@ def _acquire_writer_lock(path: str, *, tag: str = "") -> str:
     return lock
 
 
+def _write_buckets(df: DataFrame, path: str) -> None:
+    """Write ``df`` as ``__bucket=<b>/`` dirs, one file per bucket (see
+    the Layout note of _merge_snapshot_locked). The rebalance hint
+    needs AQE; with AQE off Spark drops it and a bucket keeps one file
+    per input partition, which compact_partition then merges."""
+    df.hint("rebalance", _BUCKET_COL).write.partitionBy(_BUCKET_COL).parquet(path)
+
+
 def merge_snapshot(
     spark: SparkSession,
     path: str,
@@ -529,7 +546,12 @@ def _merge_snapshot_locked(
 
     Layout: parquet hash-partitioned on ``pmod(xxhash64(key),
     n_buckets)`` with every row stamped by the epoch that last rewrote
-    its bucket. A merge touches ONLY the buckets containing delta keys:
+    its bucket. Each written bucket is ONE file: both the bootstrap and
+    the staging write rebalance on the bucket column first (under AQE,
+    get_spark's default), so the merge's own job lands the bucket's
+    final layout; AQE still splits a bucket above its advisory size
+    into several files. A merge touches ONLY the buckets containing
+    delta keys:
 
     1. affected buckets  = distinct bucket ids of the delta's keys
        (<= n_buckets rows collected -- metadata scale). NULL join keys
@@ -573,7 +595,15 @@ def _merge_snapshot_locked(
 
     Scale shape: one partition-pruned scan of the affected buckets, one
     anti-join against the (small) delta key set -- AQE broadcasts it in
-    the common deltas<<snapshot case -- and a bucket-local rewrite.
+    the common deltas<<snapshot case -- and one rebalance exchange on
+    the bucket column ahead of the write. The exchange is the price of
+    one file per bucket. It saves work when compaction follows
+    (run_weekly's compact_merged) and each rewritten bucket is under
+    AQE's advisory partition size: the bucket's compaction job (read
+    it back, rewrite it) becomes a listing. A merge with no compaction
+    after it (stream_cdc_apply, compact_merged=False) gets fewer files
+    for the next read; a bucket above the advisory size is split by
+    AQE and compact_partition still rewrites it, so it pays for both.
     Untouched buckets are never read; a fully-replayed epoch reads no
     buckets at all.
 
@@ -595,7 +625,7 @@ def _merge_snapshot_locked(
                 f"merge_snapshot: NULL values in key column {key!r} -- "
                 "the upsert contract requires non-null keys"
             )
-        stamped.write.partitionBy(_BUCKET_COL).parquet(path)
+        _write_buckets(stamped, path)
         # the partitionBy write already materialized one dir per
         # bucket -- list them instead of re-running the upsert lineage
         # through a distinct().collect() (r16: one less evaluation of
@@ -750,7 +780,7 @@ def _merge_snapshot_locked(
         merged = survivors.unionByName(fresh)
     else:
         merged = fresh
-    merged.write.partitionBy(_BUCKET_COL).parquet(staging)
+    _write_buckets(merged, staging)
     written, cleared = _commit_staging(path, staging, epoch, pending)
     assert written + cleared == len(pending)
     return {"written": written, "skipped": len(done), "cleared": cleared}

@@ -59,9 +59,10 @@ class WeeklyConfig:
     #: scale see maintenance.MERGE_BUCKETS sizing note).
     merge_buckets: int = maintenance.MERGE_BUCKETS
     #: after a merge, compact exactly the buckets THIS epoch rewrote
-    #: (marker == epoch) back to ~target-sized files -- the weekly
+    #: (marker == epoch) to ~target-sized files -- the weekly
     #: small-file hygiene pass, scoped so untouched buckets never
-    #: rewrite.
+    #: rewrite. The merge already writes one file per bucket, so this
+    #: is a stat call per bucket unless AQE split an oversized bucket.
     compact_merged: bool = False
     results: dict = field(default_factory=dict)
 
@@ -201,11 +202,12 @@ def _merge_and_compact(
             )
             and maintenance._read_mark(path, b) == epoch
         ]
-        # Buckets are independent directories; compacting them from a
-        # small thread pool lets the next bucket's read back-fill the
-        # executor slots the previous bucket's single-file write leaves
-        # idle (opt guide 2.6 -- overlap independent jobs). Each job is
-        # still the same crash-safe per-bucket rewrite.
+        # Buckets are independent directories. The merge writes each
+        # one as a single file, so most calls return after a listing
+        # with no Spark job; the small thread pool matters only for
+        # buckets AQE split above its advisory size, whose crash-safe
+        # rewrites then overlap (opt guide 2.6 -- overlap independent
+        # jobs) instead of running one after another.
         if len(todo) > 1:
             from concurrent.futures import ThreadPoolExecutor, as_completed
 

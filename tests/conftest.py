@@ -45,6 +45,16 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def aqe_on(spark):
+    """AQE on for one test, as in production sessions: for behaviour
+    that exists only under adaptive execution (the rebalance hint that
+    gives merge_snapshot one file per bucket is dropped without it)."""
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    yield spark
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+
+
 @pytest.fixture(scope="session")
 def ddb():
     con = duckdb.connect()

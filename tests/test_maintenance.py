@@ -24,6 +24,29 @@ def test_compaction_reduces_file_count(spark, tmp_path):
     assert back.agg(F.sum("v")).first()[0] == df.agg(F.sum("v")).first()[0]
 
 
+def test_compact_partition_leaves_target_layout_in_place(spark, tmp_path):
+    """A partition that already is one file under target is left alone
+    (same file, same mtime, no rewrite); one file OVER target is still
+    split as before."""
+    import glob
+    import os
+
+    path = str(tmp_path / "one")
+    spark.range(5000).coalesce(1).write.parquet(path)
+    [f] = glob.glob(f"{path}/part-*")
+    mtime = os.stat(f).st_mtime_ns
+    assert maintenance.compact_partition(spark, path) == 1
+    assert glob.glob(f"{path}/part-*") == [f]
+    assert os.stat(f).st_mtime_ns == mtime
+
+    n_out = maintenance.compact_partition(
+        spark, path, target_file_bytes=os.path.getsize(f) // 2
+    )
+    assert n_out >= 2
+    assert f not in glob.glob(f"{path}/part-*")
+    assert spark.read.parquet(path).count() == 5000
+
+
 def test_transform_registry_applies_location_rules(spark):
     df = spark.createDataFrame(
         [("p1", " vic ", "30-00"), ("p2", "nsw", "800")],
@@ -370,6 +393,51 @@ def test_merge_snapshot_weekly_replay(spark, tmp_path):
     assert r3b["written"] == 0 and r3b["skipped"] > 0
     assert table_rows() == {tuple(r) for r in s2.collect()}
     assert r3["written"] + r3["cleared"] > 0
+
+
+def _bucket_files(path):
+    """__bucket=<b> dir name -> its data files."""
+    import os
+
+    return {
+        d: [f for f in os.listdir(os.path.join(path, d)) if f.startswith("part-")]
+        for d in os.listdir(path)
+        if d.startswith("__bucket=")
+    }
+
+
+def test_merge_snapshot_writes_one_file_per_bucket(spark, aqe_on, tmp_path):
+    """Bootstrap and incremental merges land each written bucket as ONE
+    file, even from inputs spread over several partitions (each of
+    which holds rows of every bucket), so the weekly compaction has
+    nothing left to rewrite. AQE on, as in production sessions."""
+    from abr_etl_spark.operators.maintenance import _read_mark, merge_snapshot
+
+    path = str(tmp_path / "state_layout")
+    base = spark.createDataFrame(
+        [(k, k * 2) for k in range(1, 401)], "pid long, amt long"
+    ).repartition(6)
+    rep1 = merge_snapshot(spark, path, base, None, key="pid", epoch=1, n_buckets=8)
+    files = _bucket_files(path)
+    assert rep1["written"] == len(files) == 8
+    assert all(len(v) == 1 for v in files.values()), files
+
+    ups = spark.createDataFrame(
+        [(k, -k) for k in range(1, 401, 7)] + [(k, k) for k in range(401, 431)],
+        "pid long, amt long",
+    ).repartition(5)
+    removed = {k for k in range(3, 401, 11) if k % 7 != 1}
+    rem = spark.createDataFrame([(k,) for k in sorted(removed)], "pid long")
+    rep2 = merge_snapshot(spark, path, ups, rem, key="pid", epoch=2, n_buckets=8)
+    assert rep2["written"] > 0
+    files = _bucket_files(path)
+    rewritten = [d for d in files if _read_mark(path, int(d.split("=")[1])) == 2]
+    assert len(rewritten) == rep2["written"]
+    assert all(len(files[d]) == 1 for d in rewritten), files
+    expected = {
+        (k, -k if k % 7 == 1 else k * 2) for k in range(1, 401) if k not in removed
+    } | {(k, k) for k in range(401, 431)}
+    assert _rows(spark, path) == expected
 
 
 def test_merge_snapshot_clears_emptied_bucket(spark, tmp_path):

@@ -142,7 +142,6 @@ def test_run_weekly_cdc_chain_two_drops(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from abr_etl_spark.operators import delta as d
-    from abr_etl_spark.operators.maintenance import read_merged_snapshot
 
     drop = tmp_path / "drop"
     drop.mkdir()
@@ -162,20 +161,12 @@ def test_run_weekly_cdc_chain_two_drops(spark, tmp_path):
         compact_merged=True,
     )
 
-    def merged_rows():
-        return {
-            (r["pid"], r["abn"])
-            for r in read_merged_snapshot(
-                spark, str(tmp_path / "merged/Agency_Data")
-            ).collect()
-        }
-
     # ---- week 1: bootstrap
     (drop / "VIC190422_ABR_Agency_Data.txt").write_text("\n".join(week1) + "\n")
     out1 = pipeline.run_weekly(spark, pipeline.WeeklyConfig(**cfg_kw))
     rep1 = out1.results["Agency_Data"]["merge"]
     assert rep1["written"] > 0 and rep1["skipped"] == 0
-    assert merged_rows() == {(f"p{i}", i) for i in range(20)}
+    assert _merged_rows(spark, tmp_path) == {(f"p{i}", i) for i in range(20)}
 
     # ---- week 2 drop lands; full chain incl. delta + merge + compaction
     (drop / "VIC190429_ABR_Agency_Data.txt").write_text("\n".join(week2) + "\n")
@@ -186,7 +177,7 @@ def test_run_weekly_cdc_chain_two_drops(spark, tmp_path):
     want2 = {(f"p{i}", 999 if i < 5 else i) for i in range(18)} | {
         ("q1", 1001)
     }
-    assert merged_rows() == want2
+    assert _merged_rows(spark, tmp_path) == want2
 
     # the merged table IS snapshot_latest minus the removed keys
     table = spark.read.parquet(str(tmp_path / "lake/DATA/Agency_Data"))
@@ -201,14 +192,14 @@ def test_run_weekly_cdc_chain_two_drops(spark, tmp_path):
         .select("pid", "abn")
         .collect()
     }
-    assert merged_rows() == expect
+    assert _merged_rows(spark, tmp_path) == expect
 
     # ---- replaying week 2 (operator retry) is a per-bucket no-op
     out3 = pipeline.run_weekly(spark, pipeline.WeeklyConfig(**cfg_kw))
     rep3 = out3.results["Agency_Data"]["merge"]
     assert rep3["written"] == 0 and rep3["cleared"] == 0
     assert rep3["skipped"] == rep2["written"] + rep2["cleared"] + rep2["skipped"]
-    assert merged_rows() == want2
+    assert _merged_rows(spark, tmp_path) == want2
 
 
 def test_run_weekly_schema_evolution_across_weeks(spark, tmp_path):
@@ -271,3 +262,146 @@ def test_run_weekly_schema_evolution_across_weeks(spark, tmp_path):
     out3 = pipeline.run_weekly(spark, cfg(drop2))
     rep3 = out3.results["Agency_Data"]["merge"]
     assert rep3["written"] == 0 and rep3["cleared"] == 0
+
+
+# ------------------------------------------- merge + compaction, two weeks
+
+
+def _two_week_drops(tmp_path):
+    """Week 1: p0..p119. Week 2: every 4th pid updated, every 9th
+    removed (unless updated), q0..q9 added. Returns (week-1 drop dir,
+    week-2 drop dir that still holds week 1's file, week 2's rows)."""
+    week1 = [(f"p{i}", i) for i in range(120)]
+    week2 = [
+        (f"p{i}", -i if i % 4 == 0 else i)
+        for i in range(120)
+        if i % 4 == 0 or i % 9
+    ] + [(f"q{i}", 1000 + i) for i in range(10)]
+    drops = (tmp_path / "drop_w1", tmp_path / "drop_w2")
+    for d in drops:
+        d.mkdir()
+    for name, rows, dirs in (
+        ("VIC190422", week1, drops),
+        ("VIC190429", week2, drops[1:]),
+    ):
+        text = "\n".join(["pid|abn"] + [f"{p}|{a}" for p, a in rows]) + "\n"
+        for d in dirs:
+            (d / f"{name}_ABR_Agency_Data.txt").write_text(text)
+    return *drops, set(week2)
+
+
+def _merge_cfg(tmp_path, drop):
+    return pipeline.WeeklyConfig(
+        drop_dir=str(drop),
+        lake_root=str(tmp_path / "lake"),
+        datasets=("Agency_Data",),
+        merge_dir=str(tmp_path / "merged"),
+        merge_buckets=8,
+        compact_merged=True,
+    )
+
+
+def _merged_rows(spark, tmp_path):
+    from abr_etl_spark.operators.maintenance import read_merged_snapshot
+
+    return {
+        (r["pid"], r["abn"])
+        for r in read_merged_snapshot(
+            spark, str(tmp_path / "merged/Agency_Data")
+        ).collect()
+    }
+
+
+def _group_jobs(spark, group):
+    """Finished jobs of job group ``group`` in the status store."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)
+    n = 0
+    for i in range(jobs.size()):
+        g = jobs.apply(i).jobGroup()
+        n += bool(g.isDefined() and g.get() == group)
+    return n
+
+
+def test_weekly_compaction_launches_no_spark_job(
+    spark, aqe_on, tmp_path, monkeypatch
+):
+    """Job budget of the weekly compaction step: merge_snapshot writes
+    every bucket as one file, so compacting the buckets a week rewrote
+    is a listing per bucket and launches ZERO Spark jobs. Each
+    compaction call labels its jobs with a job group (thread-local, so
+    the pool's calls are labelled too). AQE is on, as in production
+    (the merge's rebalance hint needs it); no bucket here comes near
+    AQE's advisory size, so none is split and the count is
+    deterministic. A merge that leaves several files per bucket makes
+    this count non-zero."""
+    import uuid
+
+    from abr_etl_spark.operators import maintenance
+
+    group = f"compact-{uuid.uuid4().hex}"
+    real = maintenance.compact_partition
+    calls = []
+
+    def labelled(spark_, path, **kw):
+        sc = spark_.sparkContext
+        sc.setJobGroup(group, "weekly compaction")
+        try:
+            calls.append(path)
+            return real(spark_, path, **kw)
+        finally:
+            sc._jsc.clearJobGroup()
+
+    monkeypatch.setattr(maintenance, "compact_partition", labelled)
+    drop1, drop2, week2 = _two_week_drops(tmp_path)
+    rep1 = pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop1)).results
+    rep2 = pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop2)).results
+    rep1, rep2 = rep1["Agency_Data"]["merge"], rep2["Agency_Data"]["merge"]
+    assert rep1["compacted"] == rep1["written"] == 8
+    assert rep2["compacted"] == rep2["written"] > 1
+    assert len(calls) == rep1["compacted"] + rep2["compacted"]
+    assert _group_jobs(spark, group) == 0
+    assert _merged_rows(spark, tmp_path) == week2
+
+
+def test_run_weekly_replay_after_partial_compaction_failure(
+    spark, tmp_path, monkeypatch
+):
+    """A compaction that fails for one bucket fails the run and names
+    that bucket; replaying the same week afterwards succeeds and the
+    merged table is exactly the week's snapshot. The failure is raised
+    before compact_partition touches the disk; a crash between its
+    rmtree and rename is a different case, not covered here."""
+    import threading
+
+    from abr_etl_spark.operators import maintenance
+
+    drop1, drop2, week2 = _two_week_drops(tmp_path)
+    pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop1))
+
+    real = maintenance.compact_partition
+    lock = threading.Lock()
+    failed = []
+
+    def flaky(spark_, path, **kw):
+        with lock:
+            fail = not failed
+            if fail:
+                failed.append(path)
+        if fail:
+            raise OSError(f"injected compaction failure for {path}")
+        return real(spark_, path, **kw)
+
+    monkeypatch.setattr(maintenance, "compact_partition", flaky)
+    with pytest.raises(RuntimeError, match="compaction failed") as err:
+        pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop2))
+    [bad] = failed
+    assert os.path.basename(bad).startswith("__bucket=")
+    assert bad in str(err.value)
+
+    monkeypatch.undo()
+    out = pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop2))
+    rep = out.results["Agency_Data"]["merge"]
+    assert rep["written"] == 0 and rep["cleared"] == 0
+    assert _merged_rows(spark, tmp_path) == week2
