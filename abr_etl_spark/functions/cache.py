@@ -1,57 +1,60 @@
-"""Result-cache lifecycle for eager pair/materialized operators.
+"""Ownership of the engine's cached intermediates: three pieces.
 
-Several operators (the four pair-dedup families, embedding_dup_pairs,
-incremental_agg) materialize their -- tiny -- result with ``persist()`` +
-``count()`` so their large intermediate caches (shingle sets, signatures,
-vectors, classify joins) can be unpersisted immediately instead of living
-until eviction pressure.  The result cache itself is the documented reuse
-contract: a repeat invocation canonicalizes to the same plan, Spark's
-CacheManager dedups it (no second entry), and downstream consumers (e.g.
-cluster canonicalization calling a pair op again) get the pairs for free.
+1. **Family registry.**  Several operators (the pair-dedup families,
+   embedding_dup_pairs, incremental_agg, ...) persist a small result or
+   index so their large intermediates can be dropped at once.
+   ``materialize_result`` (persist + count now) and ``register_cache``
+   (persist lazily) record every such frame under a FAMILY tag, and
+   ``release_result_caches(*families)`` unpersists one family's frames
+   once its last consumer is done, or every frame with no argument.
+   A long benchmark needs this: with ~150 keys in one JVM, never
+   releasing piles every family into the unified memory region until
+   execution memory evicts the cache the running key re-reads (the r16
+   32-core minhash_perm_sweep 1.0 s -> 11.7 s cliff), while releasing
+   everything between keys would throw away the cross-key reuse.
+   CacheManager dedups identical canonical plans, so the registry holds
+   at most one JVM cache per distinct (operator, input), and
+   ``unpersist`` is idempotent.  Caveat: two call sites that cache the
+   SAME canonical plan under different families share one JVM entry, so
+   releasing either family drops it for both; keep such sites on one
+   family (tools/bench_cache_probe.py reports a registration that finds
+   a pre-existing entry).
 
-What was missing (round-5 advice) is an OWNER for those result caches:
-nothing ever unpersisted them.  ``materialize_result`` registers every
-such cache here, and ``release_result_caches()`` frees them -- callers
-that embed the engine long-term (driver loops, benchmarks) can call it
-between workloads; short-lived sessions can ignore it (caches die with the
-session).  Registry growth is bounded: CacheManager dedups identical
-canonical plans, so at most one JVM-side cache exists per distinct
-(operator, input) regardless of how many times it is registered, and
-``unpersist`` is idempotent.
+2. **Session memo.**  Some intermediates cannot be shared through
+   CacheManager: a connected-components fixpoint or a power iteration
+   localCheckpoints every round, so each invocation's plan is unique,
+   and a collected k-means codebook is not a plan at all.
+   ``session_memo(spark, family, key, build)`` keeps one value per
+   (applicationId, family, key) for as long as that SparkContext lives.
+   A hit on a DataFrame that a release unpersisted re-registers it
+   under its family, so every memoized frame has an owner.
 
-Round-17 addition (r16 verdict item 1): caches carry a FAMILY tag so a
-long-running benchmark can release one operator family's frames as soon
-as its last consumer finishes, instead of all-or-nothing.  With ~150
-headline keys in one 8 GB local JVM, never releasing anything piles every
-family's storage into the unified region until execution memory evicts
-the very caches the in-flight key is re-reading (the r16 32-core
-minhash_perm_sweep 1.0 s -> 11.7 s cliff); releasing everything between
-keys would instead destroy the documented cross-key warm-reuse contract.
-Family-scoped release is the middle path: ``release_result_caches(fam)``
-frees exactly the frames whose consumers are done.
-
-CacheManager-dedup caveat: two call sites that materialize the SAME
-canonical plan under different family tags share one JVM cache entry, so
-releasing either family drops it for both.  Keep overlapping call sites
-on one family name (tools/bench_cache_probe.py flags overlaps: a
-``materialize_result`` that observes a pre-existing JVM cache entry under
-a different family is reported).
+3. **Count memo.**  ``materialize_result`` stashes the result's row
+   count on the frame.  A repeat registration whose cache is still
+   populated reuses the count instead of launching a job.  The memo is
+   keyed on the live cache entry itself -- the id of the cached RDD --
+   so a release (which drops the entry) or a re-persist (which builds
+   a new RDD) can never be served a stale count.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Optional
+import threading
+import weakref
+from typing import Callable, Hashable, Optional, TypeVar
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
-#: every eagerly-materialized result cache, in registration order,
-#: tagged with its owning family.
+T = TypeVar("T")
+
+#: every registered cache, in registration order, tagged with its
+#: owning family.
 _RESULT_CACHES: list[tuple[str, DataFrame]] = []
 
-#: probe hook (tools/bench_cache_probe.py): called as
-#: ``observer(family, already_cached, eager)`` on every registration.
-#: None in production -- the JVM cache lookup is only paid when a probe
-#: installs an observer.
+#: probe hook (tools/bench_cache_probe.py, perfbench's tracer): called
+#: as ``observer(family, already_cached, eager)`` on every registration
+#: and on every session-memo hit on a frame.  None in production -- the
+#: JVM cache lookup is only paid when a probe installs an observer.
 _OBSERVER: Optional[Callable[[str, bool, bool], None]] = None
 
 
@@ -60,24 +63,19 @@ def set_cache_observer(fn: Optional[Callable[[str, bool, bool], None]]) -> None:
     _OBSERVER = fn
 
 
+def _cached_data(df: DataFrame):
+    """df's CacheManager entry (a Scala Option[CachedData])."""
+    cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    return cm.lookupCachedData(df._jdf)
+
+
 def _already_cached(df: DataFrame) -> bool:
     """True if df's canonical plan already has a JVM cache entry (i.e.
     this registration is a CacheManager dedup hit, not a new build)."""
     try:
-        cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
-        return cm.lookupCachedData(df._jdf).isDefined()
+        return _cached_data(df).isDefined()
     except Exception:
         return False
-
-
-def note_cache_touch(family: str) -> None:
-    """Report a cache CONSUMER that reaches a registered frame through a
-    module-level memo (e.g. jaccard_canonical's _CC_CACHE hit path, which
-    returns the frame without re-registering).  No-op in production; lets
-    tools/bench_cache_probe.py see every consumer, so the bench release
-    schedule is derived from the full toucher set."""
-    if _OBSERVER is not None:
-        _OBSERVER(family, True, False)
 
 
 def register_cache(df: DataFrame, family: str = "misc") -> DataFrame:
@@ -94,22 +92,88 @@ def register_cache(df: DataFrame, family: str = "misc") -> DataFrame:
     return out
 
 
-#: (applicationId, canonical-plan semanticHash) -> row count, recorded by
-#: the materializing count.  Lets a repeat registration that CacheManager
-#: dedups to an ALREADY-POPULATED cache skip its count job entirely: when
-#: the plan is cached, count() would be served from those same blocks, so
-#: the memoized value is identical by CacheManager's own same-plan
-#: contract -- no new assumption.  Entries are only consulted together
-#: with a live cache entry, so a release (which removes the CacheManager
-#: entry) automatically forces the next registration to re-count.
+#: (applicationId, family, key) -> (value, weakref to its SparkContext)
+_SESSION_MEMO: dict[tuple[str, str, Hashable], tuple[object, weakref.ref]] = {}
+#: guards _SESSION_MEMO and _BUILD_LOCKS; never held across a build
+_MEMO_LOCK = threading.Lock()
+#: one lock per memo key: a build runs under its own key's lock only
+_BUILD_LOCKS: dict[tuple[str, str, Hashable], threading.Lock] = {}
+
+
+def _context_stopped(ref: weakref.ref) -> bool:
+    sc = ref()
+    return sc is None or getattr(sc, "_jsc", None) is None
+
+
+def session_memo(
+    spark: SparkSession, family: str, key: Hashable, build: Callable[[], T]
+) -> T:
+    """The value memoized under (spark's applicationId, family, key),
+    or ``build()``'s result, stored there.
+
+    applicationId is never reused by a later session in-process (unlike
+    id(spark)), so a new session can never be served a value bound to a
+    dead JVM context.  Builds of one key are serialized; different keys
+    build concurrently (the registry sweeps run keys on a thread pool).
+    A miss evicts every entry whose SparkContext is gone or stopped --
+    its blocks died with the JVM state, so dropping the entry is the
+    whole cleanup -- and keeps entries of live sibling sessions.
+
+    A hit on a DataFrame reports the consumer to the observer; if a
+    family-scoped release unpersisted the frame, the hit re-registers
+    it under ``family`` instead, so the next consumer pays one rebuild
+    and a later release frees it again.  Other values (collected rows,
+    counts, lists of checkpointed frames) own no cache and are returned
+    as they are."""
+    sc = spark.sparkContext
+    full = (sc.applicationId, family, key)
+    with _MEMO_LOCK:
+        lock = _BUILD_LOCKS.setdefault(full, threading.Lock())
+    with lock:
+        with _MEMO_LOCK:
+            entry = _SESSION_MEMO.get(full)
+        if entry is not None:
+            value = entry[0]
+            if isinstance(value, DataFrame):
+                if not _already_cached(value):
+                    register_cache(value, family)
+                elif _OBSERVER is not None:
+                    _OBSERVER(family, True, False)
+            return value
+        with _MEMO_LOCK:
+            for k, (_, ref) in list(_SESSION_MEMO.items()):
+                if _context_stopped(ref):
+                    del _SESSION_MEMO[k]
+                    _BUILD_LOCKS.pop(k, None)
+        value = build()
+        with _MEMO_LOCK:
+            _SESSION_MEMO[full] = (value, weakref.ref(sc))
+        return value
+
+
+#: (applicationId, id of the cached RDD) -> row count, recorded by the
+#: materializing count.  Only a POPULATED cache entry is looked up or
+#: stored: count() over it is served from those same blocks, so the
+#: memoized value is exact.  A release drops the entry and a re-persist
+#: builds a new RDD with a new id, so neither can match an old count.
 _COUNT_MEMO: dict[tuple[str, int], int] = {}
 
 
-def _plan_key(df: DataFrame) -> tuple[str, int] | None:
+def _loaded_cache_key(df: DataFrame) -> tuple[str, int] | None:
+    """(applicationId, cached RDD id) of df's cache entry if its column
+    buffers are fully loaded, else None.  The loaded check comes first:
+    ``cachedColumnBuffers()`` on a builder that is not loaded builds
+    the buffers (and under AQE launches a stage)."""
     try:
+        cached = _cached_data(df)
+        if not cached.isDefined():
+            return None
+        builder = cached.get().cachedRepresentation().cacheBuilder()
+        if not builder.isCachedColumnBuffersLoaded():
+            return None
         return (
             df.sparkSession.sparkContext.applicationId,
-            df._jdf.queryExecution().analyzed().semanticHash(),
+            builder.cachedColumnBuffers().id(),
         )
     except Exception:
         return None
@@ -123,20 +187,20 @@ def materialize_result(df: DataFrame, family: str = "misc") -> DataFrame:
     The materializing ``count()`` is stashed on the returned frame as
     ``_abr_result_count`` so consumers that need the result's size (e.g.
     dedup_weighted_jaccard's broadcast guard) read it for free instead of
-    launching a second count job over the cache.  Repeat registrations of
-    a plan whose cache is still live reuse the memoized count (r17): at
-    32 local cores even a cached-frame count job costs ~0.1-0.3 s of pure
-    stage latency, paid per rep by every consumer of a shared family."""
-    hit = _already_cached(df)
+    launching a second count job over the cache.  A repeat registration
+    of a plan whose cache is still populated reuses the count memo (r17):
+    at 32 local cores even a cached-frame count job costs ~0.1-0.3 s of
+    pure stage latency, paid per rep by every consumer of a shared
+    family."""
     if _OBSERVER is not None:
-        _OBSERVER(family, hit, True)
+        _OBSERVER(family, _already_cached(df), True)
     out = df.persist()
-    key = _plan_key(out)
-    memo = _COUNT_MEMO.get(key) if key is not None else None
-    if hit and memo is not None:
-        out._abr_result_count = memo
+    key = _loaded_cache_key(out)
+    if key is not None and key in _COUNT_MEMO:
+        out._abr_result_count = _COUNT_MEMO[key]
     else:
         out._abr_result_count = out.count()
+        key = _loaded_cache_key(out)
         if key is not None:
             _COUNT_MEMO[key] = out._abr_result_count
     _RESULT_CACHES.append((family, out))

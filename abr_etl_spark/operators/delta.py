@@ -93,14 +93,6 @@ def delta_classify(
     )
 
 
-def _keys_of(new_df, old_df, key, exclude, kind: str) -> DataFrame:
-    return (
-        delta_classify(new_df, old_df, key, exclude=exclude)
-        .where(F.col("change") == kind)
-        .select(key)
-    )
-
-
 def delta_updated(
     new_df: DataFrame,
     old_df: DataFrame,
@@ -163,39 +155,6 @@ def delta_removed(
 ) -> DataFrame:
     """Rows in previous with no key in newest (complement of added)."""
     return old_df.join(new_df.select(key), on=key, how="left_anti")
-
-
-def delta_wide_classify(
-    new_df: DataFrame,
-    old_df: DataFrame,
-    key: str,
-    *,
-    exclude: tuple[str, ...] = ("importdate",),
-) -> DataFrame:
-    """ONE full-outer classify join carrying the NEW side's full rows --
-    the fused frame the weekly pipeline derives updated/added/removed
-    from (r16 verdict item 8). Columns: every new_df column (NULL on
-    removed keys) + ``__k_old`` (the old side's key, NULL on added) +
-    ``__h_new``/``__h_old``.
-
-    Consumers filter:
-        upserts  = __h_new IS NOT NULL AND (__h_old IS NULL OR differs)
-        updated  = both hashes present and differing
-        added    = __h_old IS NULL (new key)
-        removed  = __h_new IS NULL (key only, via __k_old)
-    all row-identical (including multiplicity under duplicate keys) to
-    the separate delta_updated/delta_added/delta_removed joins, which
-    each re-scan and re-join the same snapshot pair. Persist THIS frame
-    once and the week's whole CDC is one join: bounded by the snapshot
-    pair already being diffed, and the default MEMORY_AND_DISK level
-    spills rather than OOMs at scale.
-    """
-    cols = _payload_cols(new_df, key, exclude)
-    n = row_hash(new_df, cols).withColumnRenamed(_HASH_COL, "__h_new")
-    o = row_hash(old_df, cols).select(
-        F.col(key).alias("__k_old"), F.col(_HASH_COL).alias("__h_old")
-    )
-    return n.join(o, n[key] == o["__k_old"], "full_outer")
 
 
 def delta_unchanged_count(

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from abr_etl_spark.functions import texthash as th
-from abr_etl_spark.functions.cache import materialize_result
+from abr_etl_spark.functions.cache import materialize_result, session_memo
 
 # Deterministic hyperplane seeds (inlined into both engines' expressions).
 HYPERPLANE_BITS = 8
@@ -28,24 +28,6 @@ HYPERPLANE_BITS = 8
 #: expression plan end-to-end (measured A/B: tools/bench_arrow_crossover
 #: -- expr wins at 10k, ~even at 30k, arrow 2.8x at 100k vectors).
 ARROW_MIN_VECTORS = 50_000
-
-#: use_arrow="auto" probe results, keyed on df.semanticHash() so repeat
-#: calls over the same (canonicalized) input plan never re-count.
-#: Staleness caveat: semanticHash covers the PLAN, not the files under
-#: it -- if the parquet directory's contents change within a session the
-#: memoized count silently picks the arrow/expr path for the OLD size
-#: (a perf-only risk, never correctness; pass ``n_vectors`` or pin
-#: ``use_arrow`` to escape). Bounded FIFO so the module-level dict
-#: cannot grow without limit in a long-lived session.
-_AUTO_PROBE_CACHE: dict[int, int] = {}
-_AUTO_PROBE_CACHE_MAX = 256
-
-
-def _auto_probe_cache_put(key: int, n: int) -> None:
-    if len(_AUTO_PROBE_CACHE) >= _AUTO_PROBE_CACHE_MAX:
-        _AUTO_PROBE_CACHE.pop(next(iter(_AUTO_PROBE_CACHE)))
-    _AUTO_PROBE_CACHE[key] = n
-
 
 def _hyperplane_sign(bit: int, dim_expr: str) -> str:
     """Pseudo-random +-1 for (hyperplane bit, dimension) -- an LCG on the
@@ -482,11 +464,48 @@ def kmeans_centroids(
 #: unset -> indexes live only in the session memo below.
 IVF_INDEX_ENV = "SPARK_GRAFT_INDEX_DIR"
 
-#: (applicationId, fingerprint) -> (collected centroid rows, weakref to
-#: the SparkContext) -- the same memo discipline as llm_pipeline's
-#: _CC_CACHE: weakref-liveness eviction so a stopped session's entry
-#: never serves a new one. Rows (k x dim floats) are metadata-scale.
-_KMEANS_INDEX_MEMO: dict = {}
+
+def _index_rows(spark, kind: str, fp: str, index_dir, field: str, compute):
+    """Rows of a persisted index (``kind`` "ivf" or "pq"): session memo
+    keyed on the fingerprint -> sidecar JSON under ``index_dir`` (or
+    $SPARK_GRAFT_INDEX_DIR) -> ``compute()`` and write the sidecar. The
+    sidecar stores the fingerprint; a stale or mismatched one is
+    rebuilt, never trusted. Rows are (int ids..., float list or None)
+    -- metadata scale."""
+    import hashlib
+    import json
+    import os
+
+    def load():
+        d = index_dir if index_dir is not None else os.environ.get(IVF_INDEX_ENV)
+        sidecar = (
+            os.path.join(
+                d, f"{kind}_{hashlib.sha256(fp.encode()).hexdigest()[:24]}.json"
+            )
+            if d
+            else None
+        )
+        if sidecar and os.path.exists(sidecar):
+            with open(sidecar) as fh:
+                payload = json.load(fh)
+            if payload.get("fingerprint") == fp:
+                return [
+                    (
+                        *map(int, r[:-1]),
+                        None if r[-1] is None else list(map(float, r[-1])),
+                    )
+                    for r in payload[field]
+                ]
+        rows = compute()
+        if sidecar:
+            os.makedirs(d, exist_ok=True)
+            tmp = sidecar + ".tmp"
+            with open(tmp, "w") as fh:
+                json.dump({"fingerprint": fp, field: [list(r) for r in rows]}, fh)
+            os.replace(tmp, sidecar)
+        return rows
+
+    return session_memo(spark, f"{kind}_index", fp, load)
 
 
 def _kmeans_fingerprint(source_path: str, k: int, iters: int) -> str:
@@ -530,65 +549,24 @@ def kmeans_index(
     100 TB the k-means (several full-corpus passes) runs once per
     ingest epoch, and every later search session pays only a sidecar
     read."""
-    import hashlib
-    import json
-    import os
-    import weakref
-
     fp = _kmeans_fingerprint(source_path, k, iters)
-    schema = f"centroid_id int, {vec_col} array<float>"
-    memo_key = (spark.sparkContext.applicationId, fp)
-    entry = _KMEANS_INDEX_MEMO.get(memo_key)
-    if entry is not None and entry[1]() is not None:
-        return spark.createDataFrame(entry[0], schema)
-    for mk, (_, ref) in list(_KMEANS_INDEX_MEMO.items()):
-        if ref() is None:
-            _KMEANS_INDEX_MEMO.pop(mk, None)
 
-    index_dir = (
-        index_dir if index_dir is not None else os.environ.get(IVF_INDEX_ENV)
-    )
-    sidecar = (
-        os.path.join(
-            index_dir,
-            f"ivf_{hashlib.sha256(fp.encode()).hexdigest()[:24]}.json",
-        )
-        if index_dir
-        else None
-    )
-    rows = None
-    if sidecar and os.path.exists(sidecar):
-        with open(sidecar) as fh:
-            payload = json.load(fh)
-        if payload.get("fingerprint") == fp:
-            rows = [
-                (int(c), None if v is None else list(map(float, v)))
-                for c, v in payload["centroids"]
-            ]
-    if rows is None:
+    def compute():
         cents = kmeans_centroids(
             df, k, id_col=id_col, vec_col=vec_col, iters=iters
         )
         # NULL-payload lakes yield NULL centroid vectors (the degenerate-
         # lake net's contract: keys run, downstream cosines are NULL)
-        rows = [
+        return [
             (
                 r["centroid_id"],
                 None if r[vec_col] is None else list(r[vec_col]),
             )
             for r in cents.orderBy("centroid_id").collect()
         ]
-        if sidecar:
-            os.makedirs(index_dir, exist_ok=True)
-            tmp = sidecar + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump(
-                    {"fingerprint": fp, "centroids": [[c, v] for c, v in rows]},
-                    fh,
-                )
-            os.replace(tmp, sidecar)
-    _KMEANS_INDEX_MEMO[memo_key] = (rows, weakref.ref(spark.sparkContext))
-    return spark.createDataFrame(rows, schema)
+
+    rows = _index_rows(spark, "ivf", fp, index_dir, "centroids", compute)
+    return spark.createDataFrame(rows, f"centroid_id int, {vec_col} array<float>")
 
 
 def pq_subspace_kmeans(
@@ -758,11 +736,10 @@ def pq_index(
     variant: str | None = None,
 ) -> DataFrame:
     """pq_subspace_kmeans behind the same PERSISTED-index discipline as
-    kmeans_index: session memo (weakref-evicted) -> fingerprinted
-    sidecar JSON under ``index_dir`` / $SPARK_GRAFT_INDEX_DIR ->
-    compute + persist. The codebook is n_sub x k rows of sub_dim
-    float32s -- metadata scale -- and float32 values round-trip the
-    JSON exactly (float32 -> double -> JSON -> float32), so an index
+    kmeans_index: session memo -> fingerprinted sidecar JSON under
+    ``index_dir`` / $SPARK_GRAFT_INDEX_DIR -> compute + persist. The
+    codebook is n_sub x k rows of sub_dim float32s -- metadata scale --
+    and float32 values round-trip the JSON exactly (float32 -> double -> JSON -> float32), so an index
     probe is bit-identical to a fresh subspace k-means
     (tests/test_kmeans_ivf.py proves the no-jobs reuse).
 
@@ -770,42 +747,9 @@ def pq_index(
     (iters corpus passes) runs once per ingest epoch; every later
     search session pays a sidecar read, then encodes/scans with
     broadcast codebooks only."""
-    import hashlib
-    import json
-    import os
-    import weakref
-
     fp = _pq_fingerprint(source_path, n_sub, sub_dim, k, iters, variant)
-    schema = "m int, c int, cvec array<float>"
-    memo_key = (spark.sparkContext.applicationId, fp)
-    entry = _KMEANS_INDEX_MEMO.get(memo_key)
-    if entry is not None and entry[1]() is not None:
-        return spark.createDataFrame(entry[0], schema)
-    for mk, (_, ref) in list(_KMEANS_INDEX_MEMO.items()):
-        if ref() is None:
-            _KMEANS_INDEX_MEMO.pop(mk, None)
 
-    index_dir = (
-        index_dir if index_dir is not None else os.environ.get(IVF_INDEX_ENV)
-    )
-    sidecar = (
-        os.path.join(
-            index_dir,
-            f"pq_{hashlib.sha256(fp.encode()).hexdigest()[:24]}.json",
-        )
-        if index_dir
-        else None
-    )
-    rows = None
-    if sidecar and os.path.exists(sidecar):
-        with open(sidecar) as fh:
-            payload = json.load(fh)
-        if payload.get("fingerprint") == fp:
-            rows = [
-                (int(m), int(c), None if v is None else list(map(float, v)))
-                for m, c, v in payload["codebook"]
-            ]
-    if rows is None:
+    def compute():
         cb = pq_subspace_kmeans(
             df,
             n_sub=n_sub,
@@ -815,24 +759,13 @@ def pq_index(
             id_col=id_col,
             vec_col=vec_col,
         )
-        rows = [
+        return [
             (r["m"], r["c"], None if r["cvec"] is None else list(r["cvec"]))
             for r in cb.orderBy("m", "c").collect()
         ]
-        if sidecar:
-            os.makedirs(index_dir, exist_ok=True)
-            tmp = sidecar + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump(
-                    {
-                        "fingerprint": fp,
-                        "codebook": [[m, c, v] for m, c, v in rows],
-                    },
-                    fh,
-                )
-            os.replace(tmp, sidecar)
-    _KMEANS_INDEX_MEMO[memo_key] = (rows, weakref.ref(spark.sparkContext))
-    return spark.createDataFrame(rows, schema)
+
+    rows = _index_rows(spark, "pq", fp, index_dir, "codebook", compute)
+    return spark.createDataFrame(rows, "m int, c int, cvec array<float>")
 
 
 def ivf_ann_topk(
@@ -947,11 +880,15 @@ def embedding_dup_pairs(
         )
     if use_arrow == "auto":
         if n_vectors is None:
-            key = df.semanticHash()
-            n_vectors = _AUTO_PROBE_CACHE.get(key)
-            if n_vectors is None:
-                n_vectors = df.count()
-                _auto_probe_cache_put(key, n_vectors)
+            # keyed on the PLAN, not the files under it: if the parquet
+            # directory's contents change within a session, the memoized
+            # count picks the path for the OLD size, or a 32-bit hash
+            # collision borrows another plan's count. Either only picks
+            # the slower path, never a wrong result; pass ``n_vectors``
+            # or pin ``use_arrow`` to escape.
+            n_vectors = session_memo(
+                df.sparkSession, "arrow_probe", df.semanticHash(), df.count
+            )
         use_arrow = n_vectors >= ARROW_MIN_VECTORS
     width = bits // n_bands
     mask = (1 << width) - 1

@@ -250,14 +250,11 @@ def _weekly_cdc(
     """(updated, added, upserts, removed_keys) for one snapshot pair.
 
     ONE left-outer classify join serves updated, added and the merge's
-    upsert frame (r16 verdict item 8, adjusted after paired A/B runs):
-    all three are filters of new LEFT JOIN old-(key, hash), and a left
-    join keeps the broadcast-hash strategy AQE picks when the narrow
-    old side fits. The full-outer delta_wide_classify variant was
-    built, property-tested, and MEASURED SLOWER here (weekly medians
-    8.2 s -> 10.6 s at sf0.1/32c: full outer cannot broadcast, so it
-    traded three broadcast joins for a sort-merge shuffle of both
-    snapshots). Removed keys stay the narrow anti-join."""
+    upsert frame: all three are filters of new LEFT JOIN old-(key,
+    hash). A left join keeps the broadcast-hash strategy AQE picks when
+    the narrow old side fits; a full outer join cannot broadcast and
+    measured slower (weekly medians 8.2 s -> 10.6 s at sf0.1/32c).
+    Removed keys stay the narrow anti-join."""
     lj = delta.row_hash(
         new_df, delta._payload_cols(new_df, key, ("importdate",))
     ).withColumnRenamed(delta._HASH_COL, "__h_new").join(

@@ -212,48 +212,24 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (applicationId, sf_dir) -> (canonical_df, weakref(SparkContext)) --
-#: the CC fixpoint over the verified Jaccard pair graph, shared by
-#: dedup_canonical AND dedup_cluster_sizes (llm_pipeline5). The CC loop
-#: localCheckpoints per round, making every invocation's plan UNIQUE,
-#: so CacheManager canonical-plan dedup (the pair-cache mechanism)
-#: cannot reuse it -- this Python-level memo is the sanctioned
-#: alternative (the llm_pipeline3 incremental-index precedent:
-#: weakref-liveness eviction so a stopped session's entry never serves
-#: a new one).
-_CC_CACHE: dict = {}
-
-
 def jaccard_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized (doc_id, canonical_id) over the tau={JACCARD_TAU}
-    verified pair graph: pairs come from the materialized pair cache,
-    the CC fixpoint runs ONCE per (session, sf_dir), and the tiny
-    result is persisted through the cache.py registry."""
-    import weakref
-
-    from abr_etl_spark.functions.cache import materialize_result
+    verified pair graph, shared by dedup_canonical AND
+    dedup_cluster_sizes (llm_pipeline5): pairs come from the
+    materialized pair cache, the CC fixpoint runs ONCE per (session,
+    sf_dir), and the tiny result is persisted through the cache.py
+    registry. The CC loop localCheckpoints per round, so every
+    invocation's plan is unique and CacheManager plan dedup cannot
+    reuse it; the session memo does."""
+    from abr_etl_spark.functions.cache import materialize_result, session_memo
     from abr_etl_spark.operators.graph import canonicalize_pairs
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    entry = _CC_CACHE.get(key)
-    if entry is not None and entry[1]() is not None:
-        from abr_etl_spark.functions.cache import note_cache_touch
+    def build() -> DataFrame:
+        d = load_table(spark, sf_dir, "documents")
+        pairs = dedup.ngram_jaccard_pairs(d, threshold=JACCARD_TAU)
+        return materialize_result(canonicalize_pairs(pairs), family="canon_cc")
 
-        note_cache_touch("canon_cc")
-        if not entry[0].is_cached:
-            # a family-scoped release_result_caches() dropped the
-            # persisted blocks; re-mark for caching so consumers after
-            # the release pay the rebuild once, not per action
-            entry[0].persist()
-        return entry[0]
-    for k, (_, ref) in list(_CC_CACHE.items()):
-        if ref() is None:
-            _CC_CACHE.pop(k, None)
-    d = load_table(spark, sf_dir, "documents")
-    pairs = dedup.ngram_jaccard_pairs(d, threshold=JACCARD_TAU)
-    comp = materialize_result(canonicalize_pairs(pairs), family="canon_cc")
-    _CC_CACHE[key] = (comp, weakref.ref(spark.sparkContext))
-    return comp
+    return session_memo(spark, "canon_cc", sf_dir, build)
 
 
 def q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -25,13 +25,6 @@ from abr_etl_spark.sources.lake import load_table
 QUERIES: dict = {}
 ORACLES: dict = {}
 
-#: (applicationId, sf_dir) -> (canonical_df, weakref(SparkContext)) --
-#: the CC fixpoint over the simhash pair graph (jaccard_canonical's
-#: memo discipline: the CC loop localCheckpoints per round, so
-#: CacheManager plan-dedup cannot reuse it; weakref-liveness eviction
-#: keeps a stopped session's entry from serving a new one).
-_SIMHASH_CC_CACHE: dict = {}
-
 SIMHASH_MAX_HAMMING = 3  # dedup_simhash's radius (llm_pipeline.py)
 
 
@@ -39,35 +32,20 @@ def simhash_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized (doc_id, canonical_id) over the hamming <=
     {SIMHASH_MAX_HAMMING} simhash pair graph: pairs come from the
     piece-multiprobe exact search's materialized result cache, the CC
-    fixpoint runs ONCE per (session, sf_dir), and the tiny result is
-    persisted through the cache.py registry."""
-    import weakref
-
-    from abr_etl_spark.functions.cache import materialize_result
+    fixpoint runs ONCE per (session, sf_dir) through the session memo
+    (jaccard_canonical's discipline), and the tiny result is persisted
+    through the cache.py registry."""
+    from abr_etl_spark.functions.cache import materialize_result, session_memo
     from abr_etl_spark.operators.graph import canonicalize_pairs
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    entry = _SIMHASH_CC_CACHE.get(key)
-    if entry is not None and entry[1]() is not None:
-        from abr_etl_spark.functions.cache import note_cache_touch
+    def build() -> DataFrame:
+        d = load_table(spark, sf_dir, "documents")
+        pairs = dedup.simhash_pairs(d, max_hamming=SIMHASH_MAX_HAMMING)
+        return materialize_result(
+            canonicalize_pairs(pairs), family="simhash_cc"
+        )
 
-        note_cache_touch("simhash_cc")
-        if not entry[0].is_cached:
-            # a family-scoped release_result_caches() dropped the
-            # persisted blocks; re-mark for caching so consumers after
-            # the release pay the rebuild once, not per action
-            entry[0].persist()
-        return entry[0]
-    for k, (_, ref) in list(_SIMHASH_CC_CACHE.items()):
-        if ref() is None:
-            _SIMHASH_CC_CACHE.pop(k, None)
-    d = load_table(spark, sf_dir, "documents")
-    pairs = dedup.simhash_pairs(d, max_hamming=SIMHASH_MAX_HAMMING)
-    comp = materialize_result(
-        canonicalize_pairs(pairs), family="simhash_cc"
-    )
-    _SIMHASH_CC_CACHE[key] = (comp, weakref.ref(spark.sparkContext))
-    return comp
+    return session_memo(spark, "simhash_cc", sf_dir, build)
 
 
 def dedup_simhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -34,8 +34,6 @@ primitives a 100 TB curation pipeline needs.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -195,54 +193,24 @@ def dedup_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Repeat invocations therefore measure what the operator IS: an
     O(increment + touched buckets) probe, not an O(corpus) rebuild.
     """
+    from abr_etl_spark.functions.cache import register_cache, session_memo
+
     d = load_table(spark, sf_dir, "documents")
     corpus = d.where(F.col("doc_id") % INCR_MOD != 0)
     drop = d.where(F.col("doc_id") % INCR_MOD == 0)
-    # applicationId is stable for a session's lifetime and never reused by a
-    # later session in-process (unlike id(spark), which a new session can
-    # inherit after GC and receive an index bound to a dead JVM context).
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    entry = _INCR_INDEX_CACHE.get(cache_key)
-    if entry is None:
-        # Evict only entries whose owning SparkContext is actually STOPPED
-        # (r6 advice: a second LIVE session in this process must keep its
-        # index -- evicting by applicationId != current thrashed index
-        # rebuilds between alternating live sessions and leaked their
-        # persisted blocks without unpersist). A stopped context's blocks
-        # died with its JVM state, so popping is the whole cleanup.
-        for k, (_, sc_ref) in list(_INCR_INDEX_CACHE.items()):
-            sc = sc_ref()
-            if sc is None or getattr(sc, "_jsc", None) is None:
-                _INCR_INDEX_CACHE.pop(k, None)
-        # lazy persist: the FIRST probe materializes the index in-flow
-        # (no separate build pass), later probes hit the cache. The
-        # persist is REGISTERED (family-owned, functions/cache.py) so a
-        # long benchmark can reclaim it after the key's last rep.
-        from abr_etl_spark.functions.cache import register_cache
-
-        index = register_cache(
-            dedup_incremental.build_minhash_index(corpus),
-            family="dedup_incr",
-        )
-        _INCR_INDEX_CACHE[cache_key] = (
-            index,
-            weakref.ref(spark.sparkContext),
-        )
-    else:
-        index = entry[0]
-        from abr_etl_spark.functions.cache import note_cache_touch
-
-        note_cache_touch("dedup_incr")
-        if not index.is_cached:
-            index.persist()  # re-mark after a family-scoped release
+    # lazy persist: the FIRST probe materializes the index in-flow (no
+    # separate build pass), later probes hit the cache. The persist is
+    # REGISTERED (family-owned) so a long benchmark can reclaim it after
+    # the key's last rep.
+    index = session_memo(
+        spark,
+        "dedup_incr",
+        sf_dir,
+        lambda: register_cache(
+            dedup_incremental.build_minhash_index(corpus), family="dedup_incr"
+        ),
+    )
     return dedup_incremental.probe_index(drop, index, threshold=INCR_TAU)
-
-
-#: session-lifetime materialized corpus indexes, keyed by
-#: (applicationId, sf_dir) -> (index_df, weakref(SparkContext)); entries
-#: whose owning context has stopped are evicted on the next cache miss
-#: (see dedup_incremental_probe). Live sibling sessions' entries survive.
-_INCR_INDEX_CACHE: dict = {}
 
 
 QUERIES = {

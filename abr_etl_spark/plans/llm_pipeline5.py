@@ -875,30 +875,23 @@ def _rayleigh(cmat: DataFrame, v: DataFrame) -> DataFrame:
     )
 
 
-#: (applicationId, sf_dir) -> (comps list, weakref(SparkContext)) --
-#: the power-loop vectors localCheckpoint per iteration, making every
-#: invocation's plan unique, so CacheManager canonical-plan dedup can't
-#: share them across embedding_pca_topk and embedding_whiten_topk; this
-#: Python-level memo is the sanctioned alternative (the llm_pipeline
-#: _CC_CACHE precedent, weakref-liveness eviction included).
-_EIG_CACHE: dict = {}
-
-
 def _deflation_vectors(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
     """The EIG_K unit eigenvectors (each a (j, vj) frame) by power
     iteration + deflation on the shared scatter -- the component loop
     behind embedding_pca_topk, factored out (and memoized per
     (session, sf_dir)) so embedding_whiten_topk consumes the SAME
-    vectors without re-running the iterations."""
-    import weakref
+    vectors without re-running the iterations. The power loop
+    localCheckpoints per iteration, so every invocation's plan is unique
+    and CacheManager plan dedup cannot share the vectors; the session
+    memo does."""
+    from abr_etl_spark.functions.cache import session_memo
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    entry = _EIG_CACHE.get(key)
-    if entry is not None and entry[1]() is not None:
-        return entry[0]
-    for k, (_, ref) in list(_EIG_CACHE.items()):
-        if ref() is None:
-            _EIG_CACHE.pop(k, None)
+    return session_memo(
+        spark, "eig_vectors", sf_dir, lambda: _power_deflation(spark, sf_dir)
+    )
+
+
+def _power_deflation(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
     cmat = _scatter_cmat(spark, sf_dir).select(
         "i", "j", F.col("c").cast("double").alias("c")
     )
@@ -934,9 +927,6 @@ def _deflation_vectors(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
             .localCheckpoint(eager=True)
             .coalesce(1)
         )
-    import weakref as _wr
-
-    _EIG_CACHE[key] = (comps, _wr.ref(spark.sparkContext))
     return comps
 
 

@@ -5,6 +5,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
+from abr_etl_spark import pipeline
 from abr_etl_spark.operators import delta
 
 KEYS = st.integers(min_value=0, max_value=15)
@@ -75,36 +76,21 @@ def test_added_removed_are_symmetric(spark, new, old):
 @pytest.mark.slow
 @_set
 @given(new=SNAPSHOT, old=SNAPSHOT)
-def test_wide_classify_matches_separate_deltas(spark, new, old):
-    """The fused full-outer classify frame (r17: the weekly pipeline's
-    one-join CDC) derives row-identical updated / added / removed /
-    upsert sets to the three separate join formulations."""
+def test_weekly_cdc_matches_separate_deltas(spark, new, old):
+    """run_weekly's one-join CDC (pipeline._weekly_cdc) derives
+    row-identical updated / added / upsert / removed-key sets to the
+    separate delta_* join formulations."""
     n, o = _df(spark, new, "d2"), _df(spark, old, "d1")
-    wide = delta.delta_wide_classify(n, o, "pid")
-    new_side = F.col("__h_new").isNotNull()
-    differs = F.col("__h_old").isNull() | (
-        F.col("__h_new") != F.col("__h_old")
-    )
+    updated, added, ups, removed = pipeline._weekly_cdc(n, o, "pid")
 
     def rows(df):
         return sorted(map(tuple, df.collect()))
 
-    assert rows(
-        wide.where(new_side & F.col("__h_old").isNotNull() & differs)
-        .select(*n.columns)
-    ) == rows(delta.delta_updated(n, o, "pid"))
-    assert rows(
-        wide.where(new_side & F.col("__h_old").isNull()).select(*n.columns)
-    ) == rows(delta.delta_added(n, o, "pid"))
-    assert rows(
-        wide.where(F.col("__h_new").isNull()).select(
-            F.col("__k_old").alias("pid")
-        )
-    ) == rows(delta.delta_removed(n, o, "pid").select("pid"))
-    assert rows(
-        wide.where(new_side & differs).select("pid", "v")
-    ) == rows(
+    assert rows(updated) == rows(delta.delta_updated(n, o, "pid"))
+    assert rows(added) == rows(delta.delta_added(n, o, "pid"))
+    assert rows(ups) == rows(
         delta.delta_updated(n, o, "pid")
         .unionByName(delta.delta_added(n, o, "pid"))
         .select("pid", "v")
     )
+    assert rows(removed) == rows(delta.delta_removed(n, o, "pid").select("pid"))

@@ -153,6 +153,130 @@ def test_result_cache_lifecycle(spark):
     assert pairs.count() >= 0
 
 
+def _tagged_frame(spark, tag):
+    """37 rows under a plan no other test caches (CacheManager dedups
+    by plan), rebuilt identically from the same ``tag``."""
+    return spark.range(37).select(
+        F.lit(tag).alias("tag"), (F.col("id") % 5).alias("m")
+    )
+
+
+def _cache_builder(df):
+    cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    return cm.lookupCachedData(df._jdf).get().cachedRepresentation().cacheBuilder()
+
+
+def test_session_memo_reowns_released_frame(spark):
+    """A memoized frame that a family release unpersisted is registered
+    again on its next hit, so a second release frees it again."""
+    import uuid
+
+    from abr_etl_spark.functions import cache
+
+    fam = "test_memo_reown"
+    key = uuid.uuid4().hex
+    df = _tagged_frame(spark, key)
+    built = cache.session_memo(
+        spark, fam, key, lambda: cache.register_cache(df, family=fam)
+    )
+    assert cache.release_result_caches(fam) == 1
+    assert not built.storageLevel.useMemory
+
+    def rebuild():
+        raise AssertionError("a hit must not rebuild")
+
+    again = cache.session_memo(spark, fam, key, rebuild)
+    assert again is built
+    assert (fam, built) in cache._RESULT_CACHES
+    assert built.storageLevel.useMemory
+    assert cache.release_result_caches(fam) == 1
+    assert not built.storageLevel.useMemory
+
+
+def test_session_memo_builds_each_key_once_under_threads(spark):
+    """16 threads on 2 keys: each key is built exactly once and every
+    caller gets that one value; the two keys' builds overlap (a barrier
+    both builds must reach), so one key's build never blocks another."""
+    import sys
+    import threading
+    import time
+    import uuid
+    from concurrent.futures import ThreadPoolExecutor
+
+    from abr_etl_spark.functions import cache
+
+    fam = f"test_memo_threads_{uuid.uuid4().hex}"
+    both_building = threading.Barrier(2, timeout=30)
+    builds = []
+    lock = threading.Lock()
+
+    def build(key):
+        with lock:
+            builds.append(key)
+        both_building.wait()
+        time.sleep(0.2)  # a window for a racing caller of the same key
+        return object()
+
+    def call(i):
+        key = i % 2
+        return key, cache.session_memo(spark, fam, key, lambda: build(key))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            got = list(pool.map(call, range(64), timeout=60))
+    finally:
+        sys.setswitchinterval(old)
+    assert sorted(builds) == [0, 1]
+    assert len({id(v) for k, v in got if k == 0}) == 1
+    assert len({id(v) for k, v in got if k == 1}) == 1
+
+
+def test_count_memo_recounts_unpopulated_cache(spark):
+    """A lazily re-persisted plan has a cache entry but no blocks: the
+    next materialize_result must count (populating it), not serve the
+    count memoized before the release."""
+    import uuid
+
+    from abr_etl_spark.functions import cache
+
+    fam = "test_count_memo"
+    df = _tagged_frame(spark, uuid.uuid4().hex)
+    assert cache.materialize_result(df, family=fam)._abr_result_count == 37
+    cache.release_result_caches(fam)
+    cache.register_cache(df, family=fam)
+    assert not _cache_builder(df).isCachedColumnBuffersLoaded()
+    out = cache.materialize_result(df, family=fam)
+    assert _cache_builder(out).isCachedColumnBuffersLoaded()
+    assert out._abr_result_count == df.count()
+    cache.release_result_caches(fam)
+
+
+def test_count_memo_hit_launches_no_job(spark):
+    """Repeat materialize_result of a plan whose cache is still
+    populated reuses the memoized count: no Spark job."""
+    import uuid
+
+    from abr_etl_spark.functions import cache
+    from tests.conftest import group_jobs
+
+    fam = "test_count_memo_hit"
+    tag = uuid.uuid4().hex
+    first = cache.materialize_result(_tagged_frame(spark, tag), family=fam)
+    same_plan = _tagged_frame(spark, tag)
+    group = f"count-memo-{uuid.uuid4().hex}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "repeat materialize_result")
+    try:
+        again = cache.materialize_result(same_plan, family=fam)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert group_jobs(spark, group) == 0
+    assert again._abr_result_count == first._abr_result_count == 37
+    cache.release_result_caches(fam)
+
+
 def test_ntile_distributed_degenerate_inputs(spark):
     """Distributed ntile on n < tiles and on an all-equal metric must
     still produce valid tiles (ties split purely by the key)."""

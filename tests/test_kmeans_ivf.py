@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from abr_etl_spark.functions import cache
 from abr_etl_spark.operators.similarity import (
     cosine_topk,
     ivf_ann_topk,
@@ -79,7 +80,7 @@ def test_kmeans_index_persists_and_reuses(spark, tmp_path, monkeypatch):
 
     # "second session": clear the memo AND poison the k-means -- any
     # recompute would raise, so equality proves a pure index probe
-    similarity._KMEANS_INDEX_MEMO.clear()
+    cache._SESSION_MEMO.clear()
 
     def boom(*a, **k):
         raise AssertionError("index probe must not run k-means")
@@ -96,7 +97,7 @@ def test_kmeans_index_persists_and_reuses(spark, tmp_path, monkeypatch):
     # param change -> different fingerprint -> rebuild is attempted
     import pytest
 
-    similarity._KMEANS_INDEX_MEMO.clear()
+    cache._SESSION_MEMO.clear()
     with pytest.raises(AssertionError, match="index probe"):
         similarity.kmeans_index(
             spark, e, 9, iters=2,
@@ -110,7 +111,7 @@ def test_kmeans_index_persists_and_reuses(spark, tmp_path, monkeypatch):
     payload = json.load(open(sc))
     payload["fingerprint"] = "stale"
     json.dump(payload, open(sc, "w"))
-    similarity._KMEANS_INDEX_MEMO.clear()
+    cache._SESSION_MEMO.clear()
     rebuilt = rows(
         similarity.kmeans_index(
             spark, e, 8, iters=2,
@@ -176,7 +177,7 @@ def test_pq_index_persists_and_reuses(spark, tmp_path, monkeypatch):
         similarity.pq_subspace_kmeans(e, n_sub=4, sub_dim=16, k=8, iters=1)
     )
 
-    similarity._KMEANS_INDEX_MEMO.clear()
+    cache._SESSION_MEMO.clear()
 
     def boom(*a, **k):
         raise AssertionError("index probe must not train codebooks")
@@ -191,7 +192,7 @@ def test_pq_index_persists_and_reuses(spark, tmp_path, monkeypatch):
     payload = json.load(open(sc))
     payload["fingerprint"] = "stale"
     json.dump(payload, open(sc, "w"))
-    similarity._KMEANS_INDEX_MEMO.clear()
+    cache._SESSION_MEMO.clear()
     rebuilt = rows(similarity.pq_index(spark, e, **kw))
     assert rebuilt == first
     assert json.load(open(sc))["fingerprint"] != "stale"

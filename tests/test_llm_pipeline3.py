@@ -91,30 +91,34 @@ def test_containment_catches_quote_inclusion(spark):
 
 
 def test_incr_index_cache_keeps_live_entries_evicts_dead(spark):
-    """Eviction must spare entries owned by LIVE contexts (a second
-    session in-process) and drop only stopped-context entries."""
+    """A session_memo miss (here dedup_incremental_probe's corpus index)
+    must spare entries owned by LIVE contexts (a second session
+    in-process) and drop only entries whose context is gone or
+    stopped."""
     import weakref
 
+    from abr_etl_spark.functions import cache
     from abr_etl_spark.plans import llm_pipeline3 as lp3
 
-    lp3._INCR_INDEX_CACHE.clear()
+    memo = cache._SESSION_MEMO
+    memo.pop((spark.sparkContext.applicationId, "dedup_incr", SF_ORACLE), None)
     # a fake "sibling live session" entry: same live context, foreign app id
     sentinel = object()
-    lp3._INCR_INDEX_CACHE[("other-live-app", "x")] = (
-        sentinel,
-        weakref.ref(spark.sparkContext),
-    )
+    memo[("other-live-app", "f", "x")] = (sentinel, weakref.ref(spark.sparkContext))
 
     class _DeadSC:
         _jsc = None
 
+    stopped = _DeadSC()  # alive in Python, but its JVM context is gone
+    memo[("stopped-app", "f", "z")] = (object(), weakref.ref(stopped))
     dead = _DeadSC()
-    lp3._INCR_INDEX_CACHE[("dead-app", "y")] = (object(), weakref.ref(dead))
+    memo[("dead-app", "f", "y")] = (object(), weakref.ref(dead))
     del dead  # weakref now returns None too
 
     lp3.dedup_incremental_probe(spark, SF_ORACLE).count()
-    keys = set(lp3._INCR_INDEX_CACHE)
-    assert ("other-live-app", "x") in keys, "live sibling entry evicted"
-    assert ("dead-app", "y") not in keys, "dead entry not evicted"
-    assert lp3._INCR_INDEX_CACHE[("other-live-app", "x")][0] is sentinel
-    lp3._INCR_INDEX_CACHE.pop(("other-live-app", "x"))
+    keys = set(memo)
+    assert ("other-live-app", "f", "x") in keys, "live sibling entry evicted"
+    assert ("dead-app", "f", "y") not in keys, "dead entry not evicted"
+    assert ("stopped-app", "f", "z") not in keys, "stopped entry not evicted"
+    assert memo[("other-live-app", "f", "x")][0] is sentinel
+    memo.pop(("other-live-app", "f", "x"))

@@ -7,6 +7,7 @@ import os
 import pytest
 
 from abr_etl_spark import pipeline
+from tests.conftest import group_jobs
 
 
 def _write_drop(drop):
@@ -312,18 +313,6 @@ def _merged_rows(spark, tmp_path):
     }
 
 
-def _group_jobs(spark, group):
-    """Finished jobs of job group ``group`` in the status store."""
-    jsc = spark.sparkContext._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty()
-    jobs = jsc.statusStore().jobsList(None)
-    n = 0
-    for i in range(jobs.size()):
-        g = jobs.apply(i).jobGroup()
-        n += bool(g.isDefined() and g.get() == group)
-    return n
-
-
 def test_weekly_compaction_launches_no_spark_job(
     spark, aqe_on, tmp_path, monkeypatch
 ):
@@ -361,7 +350,7 @@ def test_weekly_compaction_launches_no_spark_job(
     assert rep1["compacted"] == rep1["written"] == 8
     assert rep2["compacted"] == rep2["written"] > 1
     assert len(calls) == rep1["compacted"] + rep2["compacted"]
-    assert _group_jobs(spark, group) == 0
+    assert group_jobs(spark, group) == 0
     assert _merged_rows(spark, tmp_path) == week2
 
 
