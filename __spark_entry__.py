@@ -20,9 +20,10 @@ def entry(spark: SparkSession) -> DataFrame:
     return q1_pricing_summary(spark, "/root/testdata/sf0.001")
 
 
-# Round-17 priority head (r16 verdict items 2 and 4), ordered by how
-# badly each key needs a fresh CORRECTNESS row under the driver's
-# ~50-row budget:
+# Priority head: the driver checks queries in registry order under a
+# ~50-row budget, so the keys that most need a fresh CORRECTNESS row
+# come first, ordered by need:
+# 0. dedup_weighted_jaccard, rewritten in r17 with no driver row since;
 # 1. keys whose plans were RESTRUCTURED in r16 (MMR fold, shared doc-df
 #    frame, link-prediction edge cache, ann one-stream sweep, rule
 #    census) -- none of them landed in the r16 driver sample because
@@ -32,9 +33,11 @@ def entry(spark: SparkSession) -> DataFrame:
 #    (minhash/lsh cold build, stratified one-pass, rule prefix filter);
 # 3. stalest rotation: keys with a row in NEITHER the r15 nor the r16
 #    driver sample, alphabetical.
-# Everything after the budget line keeps module order; all keys pass
+# Every other key follows in plans-module name order; all keys pass
 # the local full-registry gate regardless.
-_R17_PRIORITY: list[str] = [
+PRIORITY: list[str] = [
+    # --- 0. rewritten in r17, no post-rewrite driver row ---
+    "dedup_weighted_jaccard",
     # --- 1. restructured in r16, no post-restructure driver row ---
     "mmr_diversify_topk",
     "mmr_lambda_sweep",
@@ -108,148 +111,31 @@ _R17_PRIORITY: list[str] = [
 
 
 def _registry() -> tuple[dict, dict]:
+    """Every ``plans/`` module's QUERIES and ORACLES, found by listing
+    the package in name order. A module that fails to import raises
+    (it would otherwise drop all its keys unseen), and so does a key
+    that two modules define."""
+    import importlib
+    import pkgutil
+
+    import abr_etl_spark.plans as plans
+
     queries: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     oracles: dict[str, str] = {}
-    import abr_etl_spark.plans.analytics as analytics
-    import abr_etl_spark.plans.analytics2 as analytics2
-    import abr_etl_spark.plans.analytics3 as analytics3
-    import abr_etl_spark.plans.semistructured as semistructured
-
-    import abr_etl_spark.plans.analytics4 as analytics4
-    import abr_etl_spark.plans.analytics5 as analytics5
-    import abr_etl_spark.plans.analytics6 as analytics6
-    import abr_etl_spark.plans.analytics7 as analytics7
-    import abr_etl_spark.plans.analytics8 as analytics8
-    import abr_etl_spark.plans.analytics9 as analytics9
-    import abr_etl_spark.plans.analytics10 as analytics10
-    import abr_etl_spark.plans.analytics11 as analytics11
-    import abr_etl_spark.plans.analytics12 as analytics12
-    import abr_etl_spark.plans.analytics13 as analytics13
-    import abr_etl_spark.plans.analytics14 as analytics14
-    import abr_etl_spark.plans.analytics15 as analytics15
-
-    modules = [
-        analytics,
-        analytics2,
-        analytics3,
-        analytics4,
-        analytics5,
-        analytics6,
-        analytics7,
-        analytics8,
-        analytics9,
-        analytics10,
-        analytics11,
-        analytics12,
-        analytics13,
-        analytics14,
-        analytics15,
-        semistructured,
-    ]
-    try:
-        import abr_etl_spark.plans.etl_parity as etl_parity
-
-        modules.append(etl_parity)
-    except ImportError:
-        pass
-    try:
-        import abr_etl_spark.plans.llm_pipeline as llm_pipeline
-
-        modules.append(llm_pipeline)
-    except ImportError:
-        pass
-    try:
-        import abr_etl_spark.plans.streaming_queries as streaming_queries
-
-        modules.append(streaming_queries)
-    except ImportError:
-        pass
-    try:
-        import abr_etl_spark.plans.llm_pipeline2 as llm_pipeline2
-
-        modules.append(llm_pipeline2)
-    except ImportError:
-        pass
-    try:
-        import abr_etl_spark.plans.llm_pipeline3 as llm_pipeline3
-
-        modules.append(llm_pipeline3)
-    except ImportError:
-        pass
-    try:
-        import abr_etl_spark.plans.llm_pipeline4 as llm_pipeline4
-
-        modules.append(llm_pipeline4)
-    except ImportError:
-        pass
-    try:
-        import abr_etl_spark.plans.llm_pipeline5 as llm_pipeline5
-
-        modules.append(llm_pipeline5)
-    except ImportError:
-        pass
-    try:
-        import abr_etl_spark.plans.llm_pipeline6 as llm_pipeline6
-
-        modules.append(llm_pipeline6)
-    except ImportError:
-        pass
-    try:
-        import abr_etl_spark.plans.llm_pipeline7 as llm_pipeline7
-
-        modules.append(llm_pipeline7)
-    except ImportError:
-        pass
-    try:
-        import abr_etl_spark.plans.llm_pipeline8 as llm_pipeline8
-
-        modules.append(llm_pipeline8)
-    except ImportError:
-        pass
-    try:
-        import abr_etl_spark.plans.llm_pipeline9 as llm_pipeline9
-
-        modules.append(llm_pipeline9)
-    except ImportError:
-        pass
-    try:
-        import abr_etl_spark.plans.llm_pipeline11 as llm_pipeline11
-
-        modules.append(llm_pipeline11)
-    except ImportError:
-        pass
-    try:
-        import abr_etl_spark.plans.llm_pipeline10 as llm_pipeline10
-
-        modules.append(llm_pipeline10)
-    except ImportError:
-        pass
-    try:
-        import abr_etl_spark.plans.llm_pipeline12 as llm_pipeline12
-
-        modules.append(llm_pipeline12)
-    except ImportError:
-        pass
-    try:
-        import abr_etl_spark.plans.llm_pipeline13 as llm_pipeline13
-
-        modules.append(llm_pipeline13)
-    except ImportError:
-        pass
-    try:
-        import abr_etl_spark.plans.llm_pipeline14 as llm_pipeline14
-
-        modules.append(llm_pipeline14)
-    except ImportError:
-        pass
-    for m in modules:
+    owner: dict[str, str] = {}
+    for info in sorted(pkgutil.iter_modules(plans.__path__), key=lambda i: i.name):
+        m = importlib.import_module(f"{plans.__name__}.{info.name}")
+        for k in m.QUERIES:
+            if k in owner:
+                raise ValueError(
+                    f"queries() key {k!r} is defined by both "
+                    f"{owner[k]} and {m.__name__}"
+                )
+            owner[k] = m.__name__
         queries.update(m.QUERIES)
         oracles.update(m.ORACLES)
 
-    # Priority ordering: the driver checks queries in registry order under a
-    # ~50-row budget, so put the keys that most need a fresh CORRECTNESS row
-    # first (see _R17_PRIORITY), then everything else in module order.
-    ordered = {k: queries[k] for k in _R17_PRIORITY if k in queries}
+    ordered = {k: queries[k] for k in PRIORITY if k in queries}
     ordered.update({k: v for k, v in queries.items() if k not in ordered})
     return ordered, oracles
 

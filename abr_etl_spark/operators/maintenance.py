@@ -28,9 +28,14 @@ def compact_partition(
     """Rewrite a lake partition directory into ~target-sized files.
 
     Sizes the output file count from the actual input bytes (cheap
-    filesystem listing, no data read), then rewrites via a temp dir so a
-    crash never leaves the partition half-compacted. Returns the new file
-    count. Run per-partition (importdate=...), never on the whole table.
+    filesystem listing, no data read), then stages the rewrite in a
+    hidden sibling (``.<name>__compacting``, which Spark's file index
+    skips) and swaps it in. A crash mid-way leaves either the staged
+    copy without ``_SUCCESS`` next to an intact partition, or a
+    finished staged copy next to a partition that may be partly or
+    wholly deleted; finish_compactions settles both. Returns the new
+    file count. Run per-partition (importdate=...), never on the whole
+    table.
 
     A partition that already IS its target layout -- one data file no
     larger than the target -- is left in place and costs no Spark job
@@ -41,7 +46,6 @@ def compact_partition(
     """
     import glob
     import os
-    import shutil
 
     files = {
         f
@@ -54,7 +58,7 @@ def compact_partition(
     if n_out == 1 and len(files) == 1:
         return 1
     df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + "__compacting"
+    tmp = _compact_staging(path)
     # n_out == 1 (several small files): coalesce merges the
     # input splits in ONE task with no shuffle write+read; repartition
     # would round-trip every row through a 1-partition exchange for the
@@ -62,9 +66,47 @@ def compact_partition(
     # keep repartition so file sizes stay even.
     out = df.coalesce(1) if n_out == 1 else df.repartition(int(n_out))
     out.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
-    os.rename(tmp, path)
+    _swap_in(tmp, path)
     return int(n_out)
+
+
+def _compact_staging(path: str) -> str:
+    import os
+
+    head, name = os.path.split(path.rstrip("/"))
+    return os.path.join(head, f".{name}__compacting")
+
+
+def _swap_in(staged: str, path: str) -> None:
+    import os
+    import shutil
+
+    shutil.rmtree(path, ignore_errors=True)
+    os.rename(staged, path)
+
+
+def finish_compactions(table: str) -> int:
+    """Settle the staged rewrites that crashed compact_partition calls
+    left in ``table``: one with ``_SUCCESS`` holds all of its
+    partition's rows and replaces the partition (whose delete may have
+    been cut short or done); one without is dropped, its partition
+    never having been touched. Reads directory names only, so a table
+    with nothing to settle costs one listing. Returns the number
+    settled."""
+    import os
+    import shutil
+
+    settled = 0
+    for d in sorted(os.listdir(table)):
+        if not (d.startswith(".") and d.endswith("__compacting")):
+            continue
+        staged = os.path.join(table, d)
+        if os.path.exists(os.path.join(staged, "_SUCCESS")):
+            _swap_in(staged, os.path.join(table, d[1 : -len("__compacting")]))
+        else:
+            shutil.rmtree(staged)
+        settled += 1
+    return settled
 
 
 # ---------------------------------------------------------------- transforms

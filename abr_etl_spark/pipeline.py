@@ -181,9 +181,13 @@ def _merge_and_compact(
 ) -> dict:
     """Apply one week's CDC to <merge_dir>/<ds> (epoch = yyyymmdd as
     int, so replays gate on the bucket markers) and, when configured,
-    compact exactly the buckets this epoch rewrote."""
+    compact exactly the buckets this epoch rewrote. A compaction that
+    crashed in an earlier run is settled first: the marker gate would
+    skip its bucket, so nothing else would restore it."""
     path = os.path.join(cfg.merge_dir, ds)
     epoch = int(date.replace("-", ""))
+    if os.path.isdir(path):
+        maintenance.finish_compactions(path)
     rep = maintenance.merge_snapshot(
         spark,
         path,

@@ -1,0 +1,64 @@
+"""The bench tools: their key lists name real queries() keys, and the
+paired A/B harness runs end to end."""
+
+import json
+import os
+import subprocess
+import sys
+
+import pytest
+
+from tests.conftest import SF_SMOKE
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_bench_key_lists_name_registry_keys():
+    """A renamed key must fail here, not as a KeyError partway through
+    an sf100 run."""
+    import __spark_entry__ as entry
+    import bench
+    from tools import bench_scale
+
+    qs = entry.queries()
+    lists = {
+        "HEADLINERS": bench.HEADLINERS,
+        "R1_SUBSET": bench.R1_SUBSET,
+        "RELEASE_AFTER": list(bench.RELEASE_AFTER),
+        **{f"bench_scale {n}": f["keys"] for n, f in bench_scale.FAMILIES.items()},
+    }
+    for name, keys in lists.items():
+        assert [k for k in keys if k not in qs] == [], name
+        assert len(keys) == len(set(keys)), name
+    assert set(bench.RELEASE_AFTER) <= set(bench.HEADLINERS)
+
+
+@pytest.mark.slow
+def test_bench_ab_runs_a_ref_against_the_working_tree(tmp_path):
+    """HEAD (extracted with git archive) against the working tree: exit
+    0, one JSON line with the payload fields, temp trees removed."""
+    env = {
+        **os.environ,
+        "SPARK_GRAFT_SF_DIR": SF_SMOKE,
+        "SPARK_GRAFT_CPUS": "2",
+        "TMPDIR": str(tmp_path),
+    }
+    run = subprocess.run(
+        [sys.executable, "tools/bench_ab.py", "HEAD", ".", "q1_pricing_summary", "1"],
+        cwd=ROOT,
+        env=env,
+        stdout=subprocess.PIPE,
+        stderr=subprocess.DEVNULL,
+        text=True,
+        timeout=600,
+    )
+    assert run.returncode == 0
+    out = json.loads(run.stdout.strip().splitlines()[-1])
+    assert set(out) == {
+        "a", "b", "key", "sf_dir", "cpus", "mode", "pairs",
+        "a_median", "b_median", "ratio_median", "b_wins", "n",
+    }
+    assert (out["a"], out["b"], out["key"]) == ("HEAD", ".", "q1_pricing_summary")
+    assert out["mode"] == "cold" and out["n"] == 1 and len(out["pairs"]) == 1
+    assert all(t > 0 for t in out["pairs"][0])
+    assert not any(p.name.startswith("bench_ab_") for p in tmp_path.iterdir())

@@ -47,6 +47,43 @@ def test_compact_partition_leaves_target_layout_in_place(spark, tmp_path):
     assert spark.read.parquet(path).count() == 5000
 
 
+
+def test_unfinished_compaction_neither_duplicates_nor_loses_rows(
+    spark, tmp_path, monkeypatch
+):
+    """A compaction that crashed after its staged rewrite finished
+    leaves that copy next to the bucket. Spark must not read it as one
+    more bucket (the rows would be counted twice), and
+    finish_compactions swaps it in."""
+    import os
+
+    path = str(tmp_path / "merged")
+    rows = spark.range(100).select(
+        F.col("id").alias("k"), (F.col("id") * 3).alias("v")
+    )
+    maintenance.merge_snapshot(spark, path, rows, None, key="k", epoch=1, n_buckets=4)
+    bucket = os.path.join(path, "__bucket=1")
+    # the test session runs with AQE off, so the bucket has one file
+    # per input partition and compaction rewrites it
+    assert len([f for f in os.listdir(bucket) if f.startswith("part-")]) > 1
+
+    def crash(staged, dst):
+        raise OSError("injected crash before the swap")
+
+    monkeypatch.setattr(maintenance, "_swap_in", crash)
+    with pytest.raises(OSError, match="injected"):
+        maintenance.compact_partition(spark, bucket)
+    monkeypatch.undo()
+    assert any(d.endswith("__compacting") for d in os.listdir(path))
+    assert maintenance.read_merged_snapshot(spark, path).count() == 100
+
+    assert maintenance.finish_compactions(path) == 1
+    assert not any(d.endswith("__compacting") for d in os.listdir(path))
+    assert len([f for f in os.listdir(bucket) if f.startswith("part-")]) == 1
+    back = maintenance.read_merged_snapshot(spark, path)
+    assert sorted(map(tuple, back.collect())) == [(i, 3 * i) for i in range(100)]
+
+
 def test_transform_registry_applies_location_rules(spark):
     df = spark.createDataFrame(
         [("p1", " vic ", "30-00"), ("p2", "nsw", "800")],

@@ -360,8 +360,8 @@ def test_run_weekly_replay_after_partial_compaction_failure(
     """A compaction that fails for one bucket fails the run and names
     that bucket; replaying the same week afterwards succeeds and the
     merged table is exactly the week's snapshot. The failure is raised
-    before compact_partition touches the disk; a crash between its
-    rmtree and rename is a different case, not covered here."""
+    before compact_partition touches the disk; the test below covers a
+    crash between its delete and its rename."""
     import threading
 
     from abr_etl_spark.operators import maintenance
@@ -393,4 +393,60 @@ def test_run_weekly_replay_after_partial_compaction_failure(
     out = pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop2))
     rep = out.results["Agency_Data"]["merge"]
     assert rep["written"] == 0 and rep["cleared"] == 0
+    assert _merged_rows(spark, tmp_path) == week2
+
+
+def test_run_weekly_replay_after_compaction_crash_after_delete(
+    spark, tmp_path, monkeypatch
+):
+    """Week 2's compaction crashes after deleting each bucket it
+    rewrites and before renaming the rewrite in, so those buckets are
+    gone while their epoch markers say week 2 is done. The replay
+    swaps the staged rewrites in, and the table is week 2 again."""
+    import shutil
+
+    from abr_etl_spark.operators import maintenance
+
+    drop1, drop2, week2 = _two_week_drops(tmp_path)
+    pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop1))
+
+    def crash_after_delete(staged, path):
+        shutil.rmtree(path)
+        raise OSError(f"injected crash before renaming {staged}")
+
+    monkeypatch.setattr(maintenance, "_swap_in", crash_after_delete)
+    with pytest.raises(RuntimeError, match="compaction failed"):
+        pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop2))
+    monkeypatch.undo()
+    table = tmp_path / "merged/Agency_Data"
+    assert any(d.name.endswith("__compacting") for d in table.iterdir())
+
+    out = pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop2))
+    rep = out.results["Agency_Data"]["merge"]
+    assert rep["written"] == 0 and rep["cleared"] == 0
+    assert not any(d.name.endswith("__compacting") for d in table.iterdir())
+    assert _merged_rows(spark, tmp_path) == week2
+
+
+def test_run_weekly_clean_replay_compacts_nothing(spark, tmp_path, monkeypatch):
+    """Replaying a week that finished cleanly calls compact_partition
+    for no bucket."""
+    from abr_etl_spark.operators import maintenance
+
+    drop1, drop2, week2 = _two_week_drops(tmp_path)
+    pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop1))
+    pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop2))
+
+    real = maintenance.compact_partition
+    calls = []
+
+    def counted(spark_, path, **kw):
+        calls.append(path)
+        return real(spark_, path, **kw)
+
+    monkeypatch.setattr(maintenance, "compact_partition", counted)
+    out = pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop2))
+    rep = out.results["Agency_Data"]["merge"]
+    assert rep["written"] == 0
+    assert calls == []
     assert _merged_rows(spark, tmp_path) == week2
