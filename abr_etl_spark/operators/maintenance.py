@@ -16,6 +16,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from abr_etl_spark.sources.lake import PARQUET_COMPRESSION
+
 TARGET_FILE_BYTES = 128 * 1024 * 1024  # cluster-friendly parquet file size
 
 
@@ -65,7 +67,9 @@ def compact_partition(
     # same single output file (r16, opt guide 2.4). Multi-file outputs
     # keep repartition so file sizes stay even.
     out = df.coalesce(1) if n_out == 1 else df.repartition(int(n_out))
-    out.write.mode("overwrite").parquet(tmp)
+    out.write.mode("overwrite").option(
+        "compression", PARQUET_COMPRESSION
+    ).parquet(tmp)
     _swap_in(tmp, path)
     return int(n_out)
 
@@ -528,8 +532,14 @@ def _write_buckets(df: DataFrame, path: str) -> None:
     """Write ``df`` as ``__bucket=<b>/`` dirs, one file per bucket (see
     the Layout note of _merge_snapshot_locked). The rebalance hint
     needs AQE; with AQE off Spark drops it and a bucket keeps one file
-    per input partition, which compact_partition then merges."""
-    df.hint("rebalance", _BUCKET_COL).write.partitionBy(_BUCKET_COL).parquet(path)
+    per input partition, which compact_partition then merges. Files are
+    zstd, as in the lake (``lake.PARQUET_COMPRESSION``)."""
+    (
+        df.hint("rebalance", _BUCKET_COL)
+        .write.partitionBy(_BUCKET_COL)
+        .option("compression", PARQUET_COMPRESSION)
+        .parquet(path)
+    )
 
 
 def merge_snapshot(

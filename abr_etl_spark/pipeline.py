@@ -1,11 +1,20 @@
 """Weekly ETL pipeline orchestration -- the reference's abr-etl.go main()
 (abr-etl.go:22-41) as one Spark-native flow:
 
-    kill-switch check -> routed ingest -> per-dataset transform ->
-    partitioned lake write -> (per-dataset post actions) delta ->
-    stable-named CSV export -> CDC apply (merge_snapshot current-state
-    table, bootstrapped from the first snapshot) -> per-bucket
-    compaction of exactly the buckets the week rewrote
+    kill-switch check -> text-table check -> routed ingest -> per-dataset
+    transform -> partitioned lake write -> (per-dataset post actions)
+    delta -> CDC apply (merge_snapshot current-state table, bootstrapped
+    from the first snapshot) -> per-bucket compaction of exactly the
+    buckets the week rewrote -> stable-named CSV export
+
+Like the reference, which lands each drop file unchanged and compares
+text in its delta SQL, the flow lands every column as text: ingest
+reads the drop's header on the driver (``routed_ingest.probe_drop_header``)
+instead of inferring types, so ABN, ACN, postcode and DPID keep their
+leading zeros and ingest launches no Spark job. Lake and merged tables
+are zstd parquet (``lake.PARQUET_COMPRESSION``). A table landed by an
+older, type-inferring version is refused until ``lake.migrate_to_text``
+has rewritten it.
 
 Transport concerns (SFTP download, S3 sync, CloudWatch) are out of engine
 scope -- the data path is complete. The kill switch mirrors the
@@ -248,15 +257,24 @@ def _merge_and_compact(
     return rep
 
 
+#: flag column of _weekly_cdc's changed-rows frame (``__`` like the
+#: delta operators' own bookkeeping columns, so no feed column clashes)
+_ADDED = "__added"
+
+
 def _weekly_cdc(
     new_df: DataFrame, old_df: DataFrame, key: str
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """(updated, added, upserts, removed_keys) for one snapshot pair.
+) -> tuple[DataFrame, DataFrame]:
+    """(changed, removed_keys) for one snapshot pair.
 
-    ONE left-outer classify join serves updated, added and the merge's
-    upsert frame: all three are filters of new LEFT JOIN old-(key,
-    hash). A left join keeps the broadcast-hash strategy AQE picks when
-    the narrow old side fits; a full outer join cannot broadcast and
+    ``changed`` is every new row whose key is new or whose row hash
+    differs, with a boolean ``__added`` flag (key absent from the old
+    snapshot): the merge's upserts are all of it, the UPDATED export the
+    rows with the flag false, the ADDED export those with it true.
+    run_weekly persists this one frame, so the classify join -- new LEFT
+    JOIN old-(key, hash) -- runs once for the merge and both exports. A
+    left join keeps the broadcast-hash strategy AQE picks when the
+    narrow old side fits; a full outer join cannot broadcast and
     measured slower (weekly medians 8.2 s -> 10.6 s at sf0.1/32c).
     Removed keys stay the narrow anti-join."""
     lj = delta.row_hash(
@@ -268,23 +286,36 @@ def _weekly_cdc(
         on=key,
         how="left_outer",
     )
-    differs = F.col("__h_old").isNull() | (
-        F.col("__h_new") != F.col("__h_old")
-    )
-    updated = lj.where(F.col("__h_old").isNotNull() & differs).select(
-        *new_df.columns
-    )
-    added = lj.where(F.col("__h_old").isNull()).select(*new_df.columns)
-    ups = lj.where(differs).select(
-        *[c for c in new_df.columns if c != "importdate"]
-    )
+    changed = lj.where(
+        F.col("__h_old").isNull() | (F.col("__h_new") != F.col("__h_old"))
+    ).select(*new_df.columns, F.col("__h_old").isNull().alias(_ADDED))
     rem = delta.delta_removed(new_df, old_df, key).select(key)
-    return updated, added, ups, rem
+    return changed, rem
+
+
+def _require_text_tables(cfg: WeeklyConfig) -> None:
+    """Refuse, before anything lands, a lake or merged table that still
+    stores inferred types: this flow lands text, and a table mixing the
+    two cannot be read (lake.require_text; one footer per table, no
+    Spark job)."""
+    for ds in cfg.datasets:
+        lake.require_text(os.path.join(cfg.lake_root, "DATA", ds))
+        if cfg.merge_dir and ds in cfg.delta_datasets:
+            lake.require_text(os.path.join(cfg.merge_dir, ds))
 
 
 def run_weekly(spark: SparkSession, cfg: WeeklyConfig) -> WeeklyConfig:
-    """Execute the weekly flow; per-dataset results land in cfg.results."""
+    """Execute the weekly flow; per-dataset results land in cfg.results.
+
+    Each dataset lands as text (``routed_ingest.ingest_delimited`` with
+    no schema: a driver-side header probe, no Spark job) into zstd
+    parquet. Snapshot discovery lists the table's partition directories
+    (no Spark job). A dataset with no file in the drop is skipped; any
+    other ingest error, such as a zero-byte file, raises. A lake or
+    merged table landed with inferred types raises before anything
+    lands, naming ``lake.migrate_to_text``."""
     check_disabled(cfg.lake_root)
+    _require_text_tables(cfg)
 
     if cfg.zip_path:
         extracted = unzip_drop(cfg.zip_path, cfg.drop_dir)
@@ -299,8 +330,8 @@ def run_weekly(spark: SparkSession, cfg: WeeklyConfig) -> WeeklyConfig:
             df = routed_ingest.ingest_delimited(
                 spark, cfg.drop_dir, ds, sep=cfg.sep
             )
-        except Exception as exc:  # analysis error when no files match
-            log.info("dataset %s: no files in drop (%s)", ds, exc)
+        except FileNotFoundError as exc:
+            log.info("dataset %s: %s", ds, exc)
             continue
         df = maintenance.apply_transform(ds, df)
         table_path = os.path.join(cfg.lake_root, "DATA", ds)
@@ -311,7 +342,7 @@ def run_weekly(spark: SparkSession, cfg: WeeklyConfig) -> WeeklyConfig:
             continue
         table = lake.read_lake(spark, table_path)
         try:
-            newest, previous = lake.newest_previous(table)
+            newest, previous = lake.newest_previous(table_path)
         except ValueError as exc:
             log.info("dataset %s: %s", ds, exc)
             if cfg.merge_dir:
@@ -329,35 +360,49 @@ def run_weekly(spark: SparkSession, cfg: WeeklyConfig) -> WeeklyConfig:
         new_df, old_df = delta.snapshot_pair(
             table, cfg.key_col, newest=newest, previous=previous
         )
-        updated, added, ups, rem = _weekly_cdc(new_df, old_df, cfg.key_col)
+        changed, rem = _weekly_cdc(new_df, old_df, cfg.key_col)
         cfg.results[ds].update(
             {"newest": newest, "previous": previous}
         )
-        if cfg.merge_dir:
-            # merge_snapshot evaluates the upsert frame twice (bucket
-            # stats collect, then the staging write) and the removed
-            # keys once more inside the survivor anti-join; persisting
-            # the two delta frames turns those re-evaluations into
-            # cache reads (bounded: deltas are the week's changed rows,
-            # released right after the merge).
-            ups = ups.persist()
-            rem = rem.persist()
-            try:
-                cfg.results[ds]["merge"] = _merge_and_compact(
-                    spark, cfg, ds, ups, rem, newest
-                )
-            finally:
-                ups.unpersist()
-                rem.unpersist()
-        if cfg.export_dir:
-            for action, frame in (("updated", updated), ("added", added)):
-                out_dir = os.path.join(
-                    cfg.export_dir,
-                    f"DELTA/{action.upper()}/{ds}/importdate={newest}",
-                )
-                os.makedirs(out_dir, exist_ok=True)
-                path = lake.export_stable_csv(
-                    frame.drop("importdate"), out_dir, f"{ds}_{action}.csv"
-                )
-                cfg.results[ds][f"{action}_csv"] = path
+        # The merge reads the upserts twice (bucket stats collect, then
+        # the staging write) and the removed keys once more inside the
+        # survivor anti-join, and each export filters the changed rows
+        # again; persisting the two delta frames turns every read after
+        # the first into a cache read. Each is released as soon as its
+        # last reader is done, also when a step raises: a cached plan
+        # keeps its broadcast relations alive, and the longer it lives
+        # the likelier they outlive the run in the old generation.
+        changed = changed.persist()
+        try:
+            if cfg.merge_dir:
+                rem = rem.persist()
+                try:
+                    cfg.results[ds]["merge"] = _merge_and_compact(
+                        spark,
+                        cfg,
+                        ds,
+                        changed.drop(_ADDED, "importdate"),
+                        rem,
+                        newest,
+                    )
+                finally:
+                    rem.unpersist()
+            if cfg.export_dir:
+                for action, rows in (
+                    ("updated", ~F.col(_ADDED)),
+                    ("added", F.col(_ADDED)),
+                ):
+                    out_dir = os.path.join(
+                        cfg.export_dir,
+                        f"DELTA/{action.upper()}/{ds}/importdate={newest}",
+                    )
+                    os.makedirs(out_dir, exist_ok=True)
+                    path = lake.export_stable_csv(
+                        changed.where(rows).drop(_ADDED, "importdate"),
+                        out_dir,
+                        f"{ds}_{action}.csv",
+                    )
+                    cfg.results[ds][f"{action}_csv"] = path
+        finally:
+            changed.unpersist()
     return cfg

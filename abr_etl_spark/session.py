@@ -79,6 +79,15 @@ def get_spark(
         )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Tungsten page size. Spark sizes it from the heap (64 MB at an
+        # 8g driver), and a broadcast hash relation on a string key
+        # holds at least one page however few rows it has, on the heap
+        # until the context cleaner drops the broadcast after a GC.
+        # run_weekly's persisted delta frames keep their broadcasts
+        # alive long enough to reach the old generation, so at 64 MB
+        # pages ~330 MB of dead relations outlived a run; 1 MB (Spark's
+        # own floor) bounds that at a few MB.
+        .config("spark.buffer.pageSize", "1m")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

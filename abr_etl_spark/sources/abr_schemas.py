@@ -12,9 +12,11 @@ Raw drops are pipe-delimited text with a header row; every field
 arrives as text. ``abr_schema`` returns the all-string *wire* schema
 (what the file actually contains -- keeps PERMISSIVE/corrupt-record
 policies byte-faithful, and preserves leading zeros in ABN/ACN/
-postcode); ``ingest_abr`` reads with that schema and then casts the
-``*_dt`` date columns, giving a typed frame ready for
-``lake.write_partitioned`` and the delta operators.
+postcode); ``ingest_abr`` lands the drop as text through
+``routed_ingest.ingest_delimited``, checks its header against that
+schema and then casts the ``*_dt`` date columns, giving a typed frame
+for the delta operators. ``pipeline.run_weekly`` lands the text itself,
+without the date cast.
 """
 
 from __future__ import annotations
@@ -118,49 +120,8 @@ def abr_schema(dataset: str) -> StructType:
 
 
 def date_columns(dataset: str) -> tuple[str, ...]:
-    """The ``*_dt`` columns to type as DATE after ingest."""
+    """The declared ``*_dt`` columns, typed as DATE after ingest."""
     return tuple(c for c in DATASET_COLUMNS[dataset] if c.endswith("_dt"))
-
-
-def probe_drop_header(
-    drop_dir: str, dataset: str, sep: str = "|"
-) -> list[str] | None:
-    """Driver-side header probe for one dataset's files in a drop.
-
-    Reads the FIRST LINE of each ``VIC<yymmdd>_ABR_<Dataset>.txt`` file
-    (metadata-scale: a weekly drop holds one file per dataset; on an
-    object store the same probe is one small ranged GET per file).
-    Returns the shared header column list, or None when the drop holds
-    no files for the dataset or isn't a local directory (remote URIs
-    skip probing and use the declared wire schema). Files within ONE
-    drop disagreeing on their header raise ValueError -- a drop is one
-    weekly schema by contract."""
-    import os
-    import re
-
-    from abr_etl_spark.sources.routed_ingest import FILE_ROUTES
-
-    if not os.path.isdir(drop_dir):
-        return None
-    pat = re.compile(FILE_ROUTES[dataset])
-    headers: dict[str, tuple[str, ...]] = {}
-    for fn in sorted(os.listdir(drop_dir)):
-        if pat.search(fn):
-            with open(
-                os.path.join(drop_dir, fn), encoding="utf-8", errors="replace"
-            ) as fh:
-                first = fh.readline().rstrip("\r\n")
-            headers[fn] = tuple(first.split(sep)) if first else ()
-    if not headers:
-        return None
-    distinct = set(headers.values())
-    if len(distinct) > 1:
-        raise ValueError(
-            f"ingest_abr: files in one drop disagree on the {dataset} "
-            f"header: { {f: list(h) for f, h in headers.items()} } -- "
-            "a drop is one weekly schema; split mixed-schema drops"
-        )
-    return list(next(iter(distinct)))
 
 
 def ingest_abr(
@@ -176,29 +137,32 @@ def ingest_abr(
     """Typed ingest of one ABR dataset from a heterogeneous drop folder.
 
     ``ingest_delimited`` restricts the scan to the dataset's
-    ``VIC<yymmdd>_ABR_<Dataset>.txt`` files (pathGlobFilter), applies the
-    explicit wire schema (no inference -- heterogeneous folders make
-    inference order-dependent), and derives ``importdate`` from the
-    filename; this wrapper then casts date columns.
+    ``VIC<yymmdd>_ABR_<Dataset>.txt`` files (pathGlobFilter), lands every
+    column as text and derives ``importdate`` from the filename; this
+    wrapper then casts the ``*_dt`` columns to DATE.
 
-    Schema-evolution contract (``evolve=True``, the default): the drop's
-    actual header is probed driver-side (``probe_drop_header``) and
-    compared against the declared wire schema. ADDITIVE evolution is
-    accepted -- a header carrying every declared column plus new ones
-    ingests with the header-ordered schema, new columns as nullable
-    strings (``*_dt`` extras get the same date cast), so the week a feed
-    adds a column flows through without redeploying the schema module;
-    weeks before the column read it as NULL via the lake's mergeSchema
-    reads. A header MISSING a declared column raises ValueError: CSV
-    maps columns positionally, so ingesting a narrowed file against the
-    declared schema would silently shift every later column one slot.
-    ``evolve=False`` (or a non-local drop_dir) pins the declared wire
-    schema exactly, as before.
+    Schema-evolution contract (``evolve=True``, the default): the columns
+    are the drop's actual header, read on the driver by ingest's header
+    probe (``routed_ingest.probe_drop_header``) and checked against the
+    declared wire schema. ADDITIVE evolution is accepted -- a header
+    carrying every declared column plus new ones ingests in header
+    order, new columns as nullable strings (``*_dt`` extras get the same
+    date cast), so the week a feed adds a column flows through without
+    redeploying the schema module; weeks before the column read it as
+    NULL via the lake's mergeSchema reads. A header MISSING a declared
+    column raises ValueError: CSV maps columns positionally, so ingesting
+    a narrowed file against the declared schema would silently shift
+    every later column one slot. ``evolve=False`` (or a non-local
+    drop_dir, which the probe cannot read) pins the declared wire schema
+    exactly.
     """
-    declared = list(DATASET_COLUMNS[dataset])
-    header = probe_drop_header(drop_dir, dataset) if evolve else None
-    if header is not None and header != declared:
-        missing = [c for c in declared if c not in header]
+    import os
+
+    if evolve and os.path.isdir(drop_dir):
+        df = ingest_delimited(
+            spark, drop_dir, dataset, mode=mode, corrupt_col=corrupt_col
+        )
+        missing = [c for c in DATASET_COLUMNS[dataset] if c not in df.columns]
         if missing:
             raise ValueError(
                 f"ingest_abr: drop header for {dataset} is missing "
@@ -206,23 +170,16 @@ def ingest_abr(
                 "is additive-only -- a narrowed or renamed feed needs "
                 "an explicit schema change, not silent positional drift"
             )
-        schema = StructType(
-            [StructField(c, StringType(), True) for c in header]
-        )
-        dt_cols = tuple(c for c in header if c.endswith("_dt"))
     else:
-        schema = abr_schema(dataset)
-        dt_cols = date_columns(dataset)
-    df = ingest_delimited(
-        spark,
-        drop_dir,
-        dataset,
-        sep="|",
-        header=True,
-        schema=schema,
-        mode=mode,
-        corrupt_col=corrupt_col,
-    )
-    for c in dt_cols:
-        df = df.withColumn(c, F.to_date(F.col(c), date_format))
+        df = ingest_delimited(
+            spark,
+            drop_dir,
+            dataset,
+            schema=abr_schema(dataset),
+            mode=mode,
+            corrupt_col=corrupt_col,
+        )
+    for c in df.columns:
+        if c.endswith("_dt"):
+            df = df.withColumn(c, F.to_date(F.col(c), date_format))
     return df

@@ -75,27 +75,149 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
+#: Parquet codec of every table the weekly flow writes: the lake
+#: (write_partitioned), the merged current-state table and its
+#: compaction (operators/maintenance). The lake holds text, which snappy
+#: packs poorly; zstd keeps the weekly bytes written below what inferred
+#: numeric columns cost under snappy.
+PARQUET_COMPRESSION = "zstd"
+
+
 def write_partitioned(
     df: DataFrame,
     path: str,
     *,
     partition_col: str = "importdate",
-    fmt: str = "parquet",
     mode: str = "append",
-    compression: str | None = None,
 ) -> None:
     """Write a snapshot into the lake partitioned by ``partition_col``.
 
     The reference gzips whole text files and names keys by hand
-    (load.go:19-36); here the writer emits partition directories
+    (load.go:19-36); here the writer emits parquet partition directories
     (``importdate=<date>/``) that any engine -- Spark, Athena/Trino, DuckDB
-    -- discovers natively, with columnar compression instead of whole-file
-    gzip. dynamic partitionOverwriteMode only rewrites touched snapshots.
+    -- discovers natively, compressed with ``PARQUET_COMPRESSION`` (zstd)
+    instead of whole-file gzip. Weekly ingest lands every column as text
+    (``routed_ingest.ingest_delimited``), so the lake keeps the drop's
+    values exactly. dynamic partitionOverwriteMode only rewrites touched
+    snapshots.
     """
-    w = df.write.format(fmt).mode(mode).partitionBy(partition_col)
-    if compression:
-        w = w.option("compression", compression)
-    w.option("partitionOverwriteMode", "dynamic").save(path)
+    (
+        df.write.mode(mode)
+        .partitionBy(partition_col)
+        .option("compression", PARQUET_COMPRESSION)
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(path)
+    )
+
+
+def _partition_dirs(table: str) -> list[str]:
+    """The table's Hive-style partition directories, in name order
+    (hidden as Spark hides them: a leading dot, or no ``=``)."""
+    import os
+
+    return [
+        os.path.join(table, d)
+        for d in sorted(os.listdir(table))
+        if "=" in d
+        and not d.startswith(".")
+        and os.path.isdir(os.path.join(table, d))
+    ]
+
+
+def _data_file(part_dir: str) -> str | None:
+    import os
+
+    for f in sorted(os.listdir(part_dir)):
+        if not f.startswith((".", "_")) and os.path.isfile(
+            os.path.join(part_dir, f)
+        ):
+            return os.path.join(part_dir, f)
+    return None
+
+
+def _non_text_columns(parquet_file: str) -> dict[str, str]:
+    """Data columns of one parquet footer that are not strings, with
+    their types. Columns named ``__*`` are bookkeeping (merge_snapshot's
+    ``__epoch``) and keep their type."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    return {
+        f.name: str(f.type)
+        for f in pq.read_schema(parquet_file)
+        if not f.name.startswith("__")
+        and not (pa.types.is_string(f.type) or pa.types.is_large_string(f.type))
+    }
+
+
+def require_text(table: str) -> None:
+    """Raise ValueError when ``table`` stores a data column as anything
+    but text, naming the column and ``migrate_to_text``. Reads one
+    parquet footer with pyarrow -- that of the last partition in name
+    order, which migrate_to_text rewrites last -- and launches no Spark
+    job. A missing or empty table passes: it has nothing to mix with."""
+    import os
+
+    if not os.path.isdir(table):
+        return
+    for part in reversed(_partition_dirs(table)):
+        f = _data_file(part)
+        if f is None:
+            continue
+        bad = _non_text_columns(f)
+        if bad:
+            col, typ = next(iter(bad.items()))
+            raise ValueError(
+                f"{table}: column {col!r} is stored as {typ}, not as text; "
+                f"run lake.migrate_to_text(spark, {table!r}) once before "
+                "landing a new week, so the table never mixes types"
+            )
+        return
+
+
+def migrate_to_text(spark: SparkSession, table: str) -> int:
+    """One-time rewrite of a table landed with inferred types: every
+    partition that stores a data column as anything but a string is
+    rewritten with each data column cast to string (``__*`` bookkeeping
+    columns keep their type). Returns the number of partitions
+    rewritten.
+
+    Leading zeros that type inference already dropped stay lost: a
+    postcode landed as the integer 800 becomes the text "800", not
+    "0800"; only landing the original drops again restores them.
+
+    Each partition is staged in a hidden sibling and swapped in, the
+    way ``maintenance.compact_partition`` does, and a crashed migration
+    is settled first (``maintenance.finish_compactions``). Text
+    partitions are skipped, so running it again resumes. Partitions go
+    in name order, oldest snapshot first, and ``require_text`` checks
+    the last one, so the weekly run accepts the table only once the
+    migration has finished.
+    """
+    from abr_etl_spark.operators import maintenance
+
+    maintenance.finish_compactions(table)
+    rewritten = 0
+    for part in _partition_dirs(table):
+        f = _data_file(part)
+        if f is None or not _non_text_columns(f):
+            continue
+        df = spark.read.option("mergeSchema", "true").parquet(part)
+        text = df.select(
+            *[
+                F.col(c)
+                if c.startswith("__")
+                else F.col(c).cast("string").alias(c)
+                for c in df.columns
+            ]
+        )
+        staged = maintenance._compact_staging(part)
+        text.write.mode("overwrite").option(
+            "compression", PARQUET_COMPRESSION
+        ).parquet(staged)
+        maintenance._swap_in(staged, part)
+        rewritten += 1
+    return rewritten
 
 
 def read_lake(spark: SparkSession, path: str) -> DataFrame:

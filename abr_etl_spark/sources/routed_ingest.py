@@ -11,6 +11,13 @@ whole drop folder as one distributed scan, attach
 JVM regexp functions -- routing becomes a filter, executed where the data
 is. At 100 TB of weekly drops this is a single scan + partitioned write, no
 driver-side file iteration.
+
+Drops land as text: with no declared schema, the dataset's header is
+read from the first line of its files on the driver
+(``probe_drop_header``) and every column is a string, so building the
+ingest frame launches no Spark job (no type-inference pass over the
+data) and the landed values are the drop's text, leading zeros
+included.
 """
 
 from __future__ import annotations
@@ -19,6 +26,7 @@ import re
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 # Dataset routing table (load.go:46-53). Keys are dataset names, values the
 # filename regex; the first capture group is the yymmdd snapshot date.
@@ -69,19 +77,68 @@ def route_files(filenames: DataFrame, file_col: str = "filename") -> DataFrame:
     )
 
 
+def probe_drop_header(drop_dir: str, dataset: str, sep: str = "|") -> list[str]:
+    """Driver-side header probe for one dataset's files in a local drop.
+
+    Reads the FIRST LINE of each ``VIC<yymmdd>_ABR_<Dataset>.txt`` file
+    (metadata-scale: a weekly drop holds one file per dataset; on an
+    object store the same probe is one small ranged GET per file) and
+    returns their shared header. Raises FileNotFoundError when the drop
+    holds no file of the dataset, and ValueError naming the file when
+    one is zero bytes long (it has no header, so no columns) or when
+    files of one drop disagree on the header -- a drop is one weekly
+    schema by contract."""
+    import os
+
+    pat = re.compile(FILE_ROUTES[dataset])
+    headers: dict[str, tuple[str, ...]] = {}
+    for fn in sorted(os.listdir(drop_dir)):
+        if not pat.search(fn):
+            continue
+        path = os.path.join(drop_dir, fn)
+        if os.path.getsize(path) == 0:
+            raise ValueError(
+                f"{path}: zero-byte {dataset} file -- no header, so "
+                "nothing to land; remove it or replace it with the "
+                "complete file"
+            )
+        with open(path, encoding="utf-8", errors="replace") as fh:
+            headers[fn] = tuple(fh.readline().rstrip("\r\n").split(sep))
+    if not headers:
+        raise FileNotFoundError(f"{drop_dir}: no {dataset} file in the drop")
+    if len(set(headers.values())) > 1:
+        raise ValueError(
+            f"files in one drop disagree on the {dataset} header: "
+            f"{ {f: list(h) for f, h in headers.items()} } -- a drop is "
+            "one weekly schema; split mixed-schema drops"
+        )
+    return list(next(iter(headers.values())))
+
+
 def ingest_delimited(
     spark: SparkSession,
     drop_dir: str,
     dataset: str,
     *,
     sep: str = "|",
-    header: bool = True,
     schema=None,
     mode: str = "PERMISSIVE",
     corrupt_col: str | None = None,
 ) -> DataFrame:
     """Read every file of one dataset from a drop folder as a single
     distributed scan, with importdate derived from the filename.
+
+    With no ``schema``, the drop's header is read on the driver
+    (``probe_drop_header``, so ``drop_dir`` must be a local directory)
+    and every column lands as a string: the file's text exactly, leading
+    zeros of ABN, ACN, postcode and DPID included, as the reference
+    lands its drops unchanged and compares text. Building the frame
+    launches no Spark job. A drop with no file of the dataset raises
+    FileNotFoundError; a zero-byte file raises ValueError naming it and
+    lands nothing (it carries no header, so it cannot be told apart
+    from a file cut off in transfer). Rows are parsed PERMISSIVE by
+    default: a ragged line lands with its missing fields NULL and its
+    extra fields dropped, a truncated last line as far as it goes.
 
     One scan handles any number of weekly snapshots in the folder; the
     result is ready for ``lake.write_partitioned`` (partition pruning on
@@ -90,31 +147,32 @@ def ingest_delimited(
     pattern = FILE_ROUTES[dataset]
     # Restrict the SCAN (not just the result) to this dataset's files:
     # the drop folder is heterogeneous (8 datasets, different column
-    # sets), and a folder-wide read would infer column names/types from
-    # whichever file lists first, silently mistyping every other dataset.
+    # sets), so a folder-wide read would map one dataset's header onto
+    # another's rows.
     glob = f"VIC{'[0-9]' * 6}_ABR_{dataset}.txt"
+    if schema is None:
+        schema = StructType(
+            [
+                StructField(c, StringType())
+                for c in probe_drop_header(drop_dir, dataset, sep)
+            ]
+        )
     # mode: PERMISSIVE (null-fill bad fields; capture raw line in
-    # corrupt_col when given a schema), DROPMALFORMED, or FAILFAST --
-    # weekly drops DO contain broken lines and the pipeline must choose a
+    # corrupt_col when given), DROPMALFORMED, or FAILFAST -- weekly
+    # drops DO contain broken lines and the pipeline must choose a
     # policy, not die row-by-row.
     reader = (
         spark.read.option("sep", sep)
-        .option("header", header)
+        .option("header", True)
         .option("mode", mode)
         .option("pathGlobFilter", glob)
     )
-    if schema is not None:
-        if corrupt_col is not None:
-            from pyspark.sql.types import StringType, StructField, StructType
-
-            schema = StructType(
-                list(schema.fields) + [StructField(corrupt_col, StringType())]
-            )
-            reader = reader.option("columnNameOfCorruptRecord", corrupt_col)
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    df = reader.csv(drop_dir)
+    if corrupt_col is not None:
+        schema = StructType(
+            list(schema.fields) + [StructField(corrupt_col, StringType())]
+        )
+        reader = reader.option("columnNameOfCorruptRecord", corrupt_col)
+    df = reader.schema(schema).csv(drop_dir)
     fname = F.element_at(F.split(F.input_file_name(), "/"), -1)
     return df.withColumn("importdate", importdate_column(fname)).where(
         fname.rlike(pattern)

@@ -79,9 +79,14 @@ def test_added_removed_are_symmetric(spark, new, old):
 def test_weekly_cdc_matches_separate_deltas(spark, new, old):
     """run_weekly's one-join CDC (pipeline._weekly_cdc) derives
     row-identical updated / added / upsert / removed-key sets to the
-    separate delta_* join formulations."""
+    separate delta_* join formulations. The first three are filters of
+    its changed-rows frame, as run_weekly takes them."""
     n, o = _df(spark, new, "d2"), _df(spark, old, "d1")
-    updated, added, ups, removed = pipeline._weekly_cdc(n, o, "pid")
+    changed, removed = pipeline._weekly_cdc(n, o, "pid")
+    is_added = F.col(pipeline._ADDED)
+    updated = changed.where(~is_added).drop(pipeline._ADDED)
+    added = changed.where(is_added).drop(pipeline._ADDED)
+    ups = changed.drop(pipeline._ADDED, "importdate")
 
     def rows(df):
         return sorted(map(tuple, df.collect()))

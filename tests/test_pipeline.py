@@ -167,7 +167,7 @@ def test_run_weekly_cdc_chain_two_drops(spark, tmp_path):
     out1 = pipeline.run_weekly(spark, pipeline.WeeklyConfig(**cfg_kw))
     rep1 = out1.results["Agency_Data"]["merge"]
     assert rep1["written"] > 0 and rep1["skipped"] == 0
-    assert _merged_rows(spark, tmp_path) == {(f"p{i}", i) for i in range(20)}
+    assert _merged_rows(spark, tmp_path) == {(f"p{i}", str(i)) for i in range(20)}
 
     # ---- week 2 drop lands; full chain incl. delta + merge + compaction
     (drop / "VIC190429_ABR_Agency_Data.txt").write_text("\n".join(week2) + "\n")
@@ -175,8 +175,8 @@ def test_run_weekly_cdc_chain_two_drops(spark, tmp_path):
     rep2 = out2.results["Agency_Data"]["merge"]
     assert rep2["written"] + rep2["cleared"] > 0
     assert rep2.get("compacted", 0) == rep2["written"]
-    want2 = {(f"p{i}", 999 if i < 5 else i) for i in range(18)} | {
-        ("q1", 1001)
+    want2 = {(f"p{i}", "999" if i < 5 else str(i)) for i in range(18)} | {
+        ("q1", "1001")
     }
     assert _merged_rows(spark, tmp_path) == want2
 
@@ -253,11 +253,11 @@ def test_run_weekly_schema_evolution_across_weeks(spark, tmp_path):
         ).collect()
     }
     assert len(got) == 13
-    assert got["p0"] == (0, "X") and got["p1"] == (1, "X")
-    assert got["q1"] == (1001, "Y")
+    assert got["p0"] == ("0", "X") and got["p1"] == ("1", "X")
+    assert got["q1"] == ("1001", "Y")
     # unchanged rows were never shipped in the delta; they survive with
     # the evolved column NULL whether their bucket was rewritten or not
-    assert all(got[f"p{i}"] == (i, None) for i in range(2, 12))
+    assert all(got[f"p{i}"] == (str(i), None) for i in range(2, 12))
 
     # replay of the evolved week is still a per-bucket metadata no-op
     out3 = pipeline.run_weekly(spark, cfg(drop2))
@@ -272,12 +272,12 @@ def _two_week_drops(tmp_path):
     """Week 1: p0..p119. Week 2: every 4th pid updated, every 9th
     removed (unless updated), q0..q9 added. Returns (week-1 drop dir,
     week-2 drop dir that still holds week 1's file, week 2's rows)."""
-    week1 = [(f"p{i}", i) for i in range(120)]
+    week1 = [(f"p{i}", str(i)) for i in range(120)]
     week2 = [
-        (f"p{i}", -i if i % 4 == 0 else i)
+        (f"p{i}", str(-i) if i % 4 == 0 else str(i))
         for i in range(120)
         if i % 4 == 0 or i % 9
-    ] + [(f"q{i}", 1000 + i) for i in range(10)]
+    ] + [(f"q{i}", str(1000 + i)) for i in range(10)]
     drops = (tmp_path / "drop_w1", tmp_path / "drop_w2")
     for d in drops:
         d.mkdir()
