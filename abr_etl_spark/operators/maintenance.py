@@ -11,12 +11,13 @@ transforms applied to a dataset between ingest and lake write.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from abr_etl_spark.sources.lake import PARQUET_COMPRESSION
+from abr_etl_spark.sources.lake import PARQUET_COMPRESSION, read_parquet
 
 TARGET_FILE_BYTES = 128 * 1024 * 1024  # cluster-friendly parquet file size
 
@@ -59,7 +60,7 @@ def compact_partition(
     n_out = max(1, -(-total // target_file_bytes))  # ceil div
     if n_out == 1 and len(files) == 1:
         return 1
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     tmp = _compact_staging(path)
     # n_out == 1 (several small files): coalesce merges the
     # input splits in ONE task with no shuffle write+read; repartition
@@ -479,14 +480,17 @@ def _bucket_expr(key: str, n_buckets: int):
     return F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets))
 
 
-def _acquire_writer_lock(path: str, *, tag: str = "") -> str:
-    """Take the table's single-writer lease (``<path>.__merge_lock``,
-    O_CREAT|O_EXCL -- atomic on every POSIX filesystem) and return the
-    lock path for the caller's ``finally: os.unlink``. A lock whose
-    recorded pid is dead on THIS host is stale (the holder crashed
-    between acquire and its finally) and is stolen once; a live holder
-    raises. Shared by every mutating table operation (merge_snapshot,
-    vacuum_snapshot) so a vacuum can never race a writer's renames."""
+@contextmanager
+def writer_lock(path: str, *, tag: str = "") -> Iterator[None]:
+    """Hold the table's single-writer lease (``<path>.__merge_lock``,
+    O_CREAT|O_EXCL -- atomic on every POSIX filesystem) for the
+    ``with`` body. A lock whose recorded pid is dead on THIS host is
+    stale (the holder crashed between acquire and release) and is
+    stolen once; a live holder raises RuntimeError. Held by every
+    operation that renames or deletes a table's directories
+    (merge_snapshot, vacuum_snapshot, and run_weekly's settling and
+    compaction of merged buckets) so a vacuum can never race a writer's
+    renames."""
     import os
 
     lock = path.rstrip("/") + ".__merge_lock"
@@ -525,7 +529,11 @@ def _acquire_writer_lock(path: str, *, tag: str = "") -> str:
             pass
         raise
     os.close(fd)
-    return lock
+    try:
+        yield
+    finally:
+        if os.path.exists(lock):
+            os.unlink(lock)
 
 
 def _write_buckets(df: DataFrame, path: str) -> None:
@@ -562,10 +570,7 @@ def merge_snapshot(
     scale the same slot is a lease with a TTL in the table's catalog
     entry -- the acquire/validate/steal protocol is identical.
     See _merge_snapshot_locked for the merge semantics."""
-    import os
-
-    lock = _acquire_writer_lock(path, tag=f"epoch={epoch}")
-    try:
+    with writer_lock(path, tag=f"epoch={epoch}"):
         return _merge_snapshot_locked(
             spark,
             path,
@@ -575,9 +580,6 @@ def merge_snapshot(
             epoch=epoch,
             n_buckets=n_buckets,
         )
-    finally:
-        if os.path.exists(lock):
-            os.unlink(lock)
 
 
 def _merge_snapshot_locked(
@@ -639,8 +641,8 @@ def _merge_snapshot_locked(
     enforced in the merge body): ADDITIVE only. Upserts carrying a NEW
     column evolve the table -- survivors in touched buckets are
     NULL-backfilled, untouched buckets keep the old schema on disk and
-    ``read_merged_snapshot``'s mergeSchema read surfaces the column as
-    NULL there. Upserts MISSING a table column, or RETYPING one, raise
+    ``read_merged_snapshot``'s merged footer schema surfaces the column
+    as NULL there. Upserts MISSING a table column, or RETYPING one, raise
     ValueError: a silently narrowed upsert would erase surviving rows'
     data on the next rewrite. (The reference hard-codes 34 columns so
     this is beyond-parity; it is the classic weekly-feed failure.)
@@ -657,7 +659,9 @@ def _merge_snapshot_locked(
     for the next read; a bucket above the advisory size is split by
     AQE and compact_partition still rewrites it, so it pays for both.
     Untouched buckets are never read; a fully-replayed epoch reads no
-    buckets at all.
+    buckets at all. The affected buckets' schema is merged from their
+    footers on the driver (``lake.read_parquet``), so learning it
+    launches no Spark job.
 
     Returns ``{"written": w, "skipped": s, "cleared": c}`` bucket
     counts.
@@ -749,8 +753,11 @@ def _merge_snapshot_locked(
             fallback.append(b)
     if fallback:
         marks = (
-            spark.read.option("basePath", path)
-            .parquet(*[f"{path}/{_BUCKET_COL}={b}" for b in fallback])
+            read_parquet(
+                spark,
+                *[f"{path}/{_BUCKET_COL}={b}" for b in fallback],
+                basePath=path,
+            )
             .groupBy(_BUCKET_COL)
             .agg(F.max(_EPOCH_COL).alias("e"))
             .collect()
@@ -783,13 +790,10 @@ def _merge_snapshot_locked(
         # until every bucket has been rewritten. A week that DROPS or
         # RETYPES a column is rejected loudly: an upsert silently
         # narrowing the table would destroy surviving rows' data.
-        # mergeSchema here: pending buckets may themselves straddle an
+        # The read merges the pending buckets' footer schemas (on the
+        # driver, read_parquet): they may themselves straddle an
         # earlier evolution boundary.
-        current_raw = (
-            spark.read.option("basePath", path)
-            .option("mergeSchema", "true")
-            .parquet(*pending_dirs)
-        )
+        current_raw = read_parquet(spark, *pending_dirs, basePath=path)
         tbl_cols = [
             c
             for c in current_raw.columns
@@ -905,15 +909,12 @@ def _commit_staging(
 def read_merged_snapshot(spark: SparkSession, path: str) -> DataFrame:
     """Read a merge_snapshot table as plain data rows (bookkeeping
     columns dropped); bucket partition pruning still applies when a
-    caller filters on the key's bucket. mergeSchema: after an additive
-    schema evolution only the touched buckets carry the new column on
-    disk; the merged read surfaces it as NULL for the rest (footer
-    reads only -- no row data)."""
-    return (
-        spark.read.option("mergeSchema", "true")
-        .parquet(path)
-        .drop(_EPOCH_COL, _BUCKET_COL)
-    )
+    caller filters on the key's bucket. The schema merges every
+    bucket's footer (mergeSchema's rules, read on the driver by
+    ``lake.read_parquet``, no Spark job): after an additive schema
+    evolution only the touched buckets carry the new column on disk,
+    and the read surfaces it as NULL for the rest."""
+    return read_parquet(spark, path).drop(_EPOCH_COL, _BUCKET_COL)
 
 
 def vacuum_snapshot(path: str) -> dict:
@@ -940,19 +941,23 @@ def vacuum_snapshot(path: str) -> dict:
       bucket -- KEPT, counted in ``kept_asides``.
     - ``_epoch_marks/.tmp_*``: torn marker writes (os.replace never
       ran). Always removable.
+    - ``.<bucket>__compacting``: a crashed compact_partition's staged
+      copy, settled by ``finish_compactions`` (swapped in when it has
+      ``_SUCCESS``, dropped when not), as the next run_weekly would.
+      run_weekly compacts merged buckets under this same lock, so a
+      staged copy seen here is never one that is still being written.
 
     At 100 TB this is the nightly janitor: every decision reads only
     file names, marker ints, and ``_OUTCOME.json`` -- no parquet rows.
 
     Returns counts: removed_staging / kept_resumable / removed_asides /
-    kept_asides / removed_tmp.
+    kept_asides / removed_tmp / settled_compactions.
     """
     import json
     import os
     import re
     import shutil
 
-    lock = _acquire_writer_lock(path, tag="vacuum")
     out = {
         "removed_staging": 0,
         "kept_resumable": 0,
@@ -960,7 +965,8 @@ def vacuum_snapshot(path: str) -> dict:
         "kept_asides": 0,
         "removed_tmp": 0,
     }
-    try:
+    with writer_lock(path, tag="vacuum"):
+        out["settled_compactions"] = finish_compactions(path)
         for d in sorted(os.listdir(path)):
             full = os.path.join(path, d)
             m = re.fullmatch(r"\.staging_epoch_(\d+)", d)
@@ -1009,6 +1015,3 @@ def vacuum_snapshot(path: str) -> dict:
                     os.unlink(os.path.join(marks, f))
                     out["removed_tmp"] += 1
         return out
-    finally:
-        if os.path.exists(lock):
-            os.unlink(lock)

@@ -1,9 +1,10 @@
 """Weekly ETL pipeline orchestration -- the reference's abr-etl.go main()
 (abr-etl.go:22-41) as one Spark-native flow:
 
-    kill-switch check -> text-table check -> routed ingest -> per-dataset
-    transform -> partitioned lake write -> (per-dataset post actions)
-    delta -> CDC apply (merge_snapshot current-state table, bootstrapped
+    kill-switch check -> text-table check -> header check -> routed
+    ingest -> per-dataset transform -> partitioned lake write ->
+    (per-dataset post actions) delta of the two newest partitions -> CDC
+    apply (merge_snapshot current-state table, bootstrapped
     from the first snapshot) -> per-bucket compaction of exactly the
     buckets the week rewrote -> stable-named CSV export
 
@@ -192,11 +193,15 @@ def _merge_and_compact(
     int, so replays gate on the bucket markers) and, when configured,
     compact exactly the buckets this epoch rewrote. A compaction that
     crashed in an earlier run is settled first: the marker gate would
-    skip its bucket, so nothing else would restore it."""
+    skip its bucket, so nothing else would restore it. Settling and
+    compaction rename and delete bucket directories, so both hold the
+    table's writer lock, as the merge does: a vacuum_snapshot that
+    overlaps them raises instead of touching a live staged copy."""
     path = os.path.join(cfg.merge_dir, ds)
     epoch = int(date.replace("-", ""))
     if os.path.isdir(path):
-        maintenance.finish_compactions(path)
+        with maintenance.writer_lock(path, tag="finish_compactions"):
+            maintenance.finish_compactions(path)
     rep = maintenance.merge_snapshot(
         spark,
         path,
@@ -215,44 +220,45 @@ def _merge_and_compact(
             )
             and maintenance._read_mark(path, b) == epoch
         ]
-        # Buckets are independent directories. The merge writes each
-        # one as a single file, so most calls return after a listing
-        # with no Spark job; the small thread pool matters only for
-        # buckets AQE split above its advisory size, whose crash-safe
-        # rewrites then overlap (opt guide 2.6 -- overlap independent
-        # jobs) instead of running one after another.
-        if len(todo) > 1:
-            from concurrent.futures import ThreadPoolExecutor, as_completed
+        with maintenance.writer_lock(path, tag="compaction"):
+            # Buckets are independent directories. The merge writes each
+            # one as a single file, so most calls return after a listing
+            # with no Spark job; the small thread pool matters only for
+            # buckets AQE split above its advisory size, whose crash-safe
+            # rewrites then overlap (opt guide 2.6 -- overlap independent
+            # jobs) instead of running one after another.
+            if len(todo) > 1:
+                from concurrent.futures import ThreadPoolExecutor, as_completed
 
-            # collect per-bucket outcomes so a failed weekly run states
-            # exactly which buckets were rewritten before re-raising
-            # (r16 ADVICE: pool.map surfaced only the first exception
-            # after in-flight work drained, with partial progress
-            # nondeterministic and unreported)
-            errors: list[tuple[str, Exception]] = []
-            done_ok: list[str] = []
-            with ThreadPoolExecutor(max_workers=min(4, len(todo))) as pool:
-                futs = {
-                    pool.submit(
-                        maintenance.compact_partition, spark, bdir
-                    ): bdir
-                    for bdir in todo
-                }
-                for fut in as_completed(futs):
-                    bdir = futs[fut]
-                    try:
-                        fut.result()
-                        done_ok.append(bdir)
-                    except Exception as exc:  # noqa: BLE001 - reported
-                        errors.append((bdir, exc))
-            if errors:
-                raise RuntimeError(
-                    f"compaction failed for {len(errors)} bucket(s) "
-                    f"({[b for b, _ in errors]}); completed OK first: "
-                    f"{done_ok}"
-                ) from errors[0][1]
-        elif todo:
-            maintenance.compact_partition(spark, todo[0])
+                # collect per-bucket outcomes so a failed weekly run states
+                # exactly which buckets were rewritten before re-raising
+                # (r16 ADVICE: pool.map surfaced only the first exception
+                # after in-flight work drained, with partial progress
+                # nondeterministic and unreported)
+                errors: list[tuple[str, Exception]] = []
+                done_ok: list[str] = []
+                with ThreadPoolExecutor(max_workers=min(4, len(todo))) as pool:
+                    futs = {
+                        pool.submit(
+                            maintenance.compact_partition, spark, bdir
+                        ): bdir
+                        for bdir in todo
+                    }
+                    for fut in as_completed(futs):
+                        bdir = futs[fut]
+                        try:
+                            fut.result()
+                            done_ok.append(bdir)
+                        except Exception as exc:  # noqa: BLE001 - reported
+                            errors.append((bdir, exc))
+                if errors:
+                    raise RuntimeError(
+                        f"compaction failed for {len(errors)} bucket(s) "
+                        f"({[b for b, _ in errors]}); completed OK first: "
+                        f"{done_ok}"
+                    ) from errors[0][1]
+            elif todo:
+                maintenance.compact_partition(spark, todo[0])
         rep = {**rep, "compacted": len(todo)}
     return rep
 
@@ -304,22 +310,44 @@ def _require_text_tables(cfg: WeeklyConfig) -> None:
             lake.require_text(os.path.join(cfg.merge_dir, ds))
 
 
+def _require_lake_columns(cfg: WeeklyConfig) -> None:
+    """Refuse, before anything lands, a drop whose header lacks a column
+    its lake table holds: the narrower week would land, the CDC would
+    read the column as NULL in every new row, and the merge would blank
+    it in the current-state table. Compares each
+    dataset's probed header with the footer of the table's newest
+    partition (lake.require_columns; no Spark job). A dataset with no
+    file in the drop has nothing to check."""
+    for ds in cfg.datasets:
+        try:
+            header = routed_ingest.probe_drop_header(cfg.drop_dir, ds, cfg.sep)
+        except FileNotFoundError:
+            continue
+        lake.require_columns(os.path.join(cfg.lake_root, "DATA", ds), header)
+
+
 def run_weekly(spark: SparkSession, cfg: WeeklyConfig) -> WeeklyConfig:
     """Execute the weekly flow; per-dataset results land in cfg.results.
 
     Each dataset lands as text (``routed_ingest.ingest_delimited`` with
     no schema: a driver-side header probe, no Spark job) into zstd
     parquet. Snapshot discovery lists the table's partition directories
-    (no Spark job). A dataset with no file in the drop is skipped; any
-    other ingest error, such as a zero-byte file, raises. A lake or
-    merged table landed with inferred types raises before anything
-    lands, naming ``lake.migrate_to_text``."""
+    and the CDC reads only the two it compares, with their schema taken
+    from the footers on the driver (``lake.read_lake``; no Spark job
+    before the CDC's own). A dataset with no file in the drop is
+    skipped, and its result says why (``{"skipped": reason}``); any
+    other ingest error, such as a zero-byte file, raises. Before
+    anything lands, the run raises ValueError on a lake or merged table
+    landed with inferred types (naming ``lake.migrate_to_text``) and on
+    a drop whose header lacks a column of its lake table (naming the
+    columns)."""
     check_disabled(cfg.lake_root)
     _require_text_tables(cfg)
 
     if cfg.zip_path:
         extracted = unzip_drop(cfg.zip_path, cfg.drop_dir)
         cfg.results["__zip"] = {"extracted": extracted}
+    _require_lake_columns(cfg)
     if cfg.raw_gz:
         cfg.results["__raw_gz"] = raw_gz_passthrough(
             cfg.drop_dir, os.path.join(cfg.lake_root, "RAW")
@@ -332,6 +360,7 @@ def run_weekly(spark: SparkSession, cfg: WeeklyConfig) -> WeeklyConfig:
             )
         except FileNotFoundError as exc:
             log.info("dataset %s: %s", ds, exc)
+            cfg.results[ds] = {"skipped": str(exc)}
             continue
         df = maintenance.apply_transform(ds, df)
         table_path = os.path.join(cfg.lake_root, "DATA", ds)
@@ -340,7 +369,6 @@ def run_weekly(spark: SparkSession, cfg: WeeklyConfig) -> WeeklyConfig:
 
         if ds not in cfg.delta_datasets:
             continue
-        table = lake.read_lake(spark, table_path)
         try:
             newest, previous = lake.newest_previous(table_path)
         except ValueError as exc:
@@ -350,15 +378,18 @@ def run_weekly(spark: SparkSession, cfg: WeeklyConfig) -> WeeklyConfig:
                 # single snapshot (no delta to apply yet)
                 dates = lake.discover_partitions_listing(table_path)
                 if len(dates) == 1:
-                    snap = table.where(
-                        F.col("importdate") == dates[0]
-                    ).drop("importdate")
+                    snap = lake.read_lake(spark, table_path, dates).drop(
+                        "importdate"
+                    )
                     cfg.results[ds]["merge"] = _merge_and_compact(
                         spark, cfg, ds, snap, None, dates[0]
                     )
             continue
         new_df, old_df = delta.snapshot_pair(
-            table, cfg.key_col, newest=newest, previous=previous
+            lake.read_lake(spark, table_path, [newest, previous]),
+            cfg.key_col,
+            newest=newest,
+            previous=previous,
         )
         changed, rem = _weekly_cdc(new_df, old_df, cfg.key_col)
         cfg.results[ds].update(

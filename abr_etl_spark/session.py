@@ -88,6 +88,16 @@ def get_spark(
         # pages ~330 MB of dead relations outlived a run; 1 MB (Spark's
         # own floor) bounds that at a few MB.
         .config("spark.buffer.pageSize", "1m")
+        # Codegen cache (JVM-wide, fixed when the first class compiles).
+        # Spark keeps 100 generated classes; one bench.py headliner pass
+        # at sf0.1 generates 2754 distinct ones, so at 100 it compiled
+        # 4412 times (each new class is also compiled again by the JIT),
+        # and even the 5-key perfbench catalog pass recompiled a third
+        # of its ~100 classes on every repeat. 4096 holds the whole
+        # pass with ~50% headroom. Measured cost of holding that pass:
+        # +59 MB live heap and +20 MB metaspace (2754 vs 100 entries,
+        # ~22 KB heap each); the cap bounds it at ~90 MB of heap.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

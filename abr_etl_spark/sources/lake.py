@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from abr_etl_spark.functions.event_time import normalize_event_time
 from abr_etl_spark.functions.type_contract import normalize_table_types
@@ -44,7 +45,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     those into an LTZ timestamp whose epoch treats the naive wall-clock as
     UTC -- identical to DuckDB's epoch(ts) on the same file. Confs are set
     at runtime so the engine also works under a CALLER-OWNED SparkSession
-    (e.g. the verification driver) that didn't set them at build time.
+    (e.g. the verification driver) that didn't set them at build time,
+    and before the footer is read (``read_parquet``), whose schema
+    converter takes them from the session.
     """
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -53,7 +56,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     except Exception:
         pass  # locked static conf: session.py already set it
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         # runtime-proof type contract: bigint nanos / TIMESTAMP_NTZ /
         # TIMESTAMP all leave here as an LTZ timestamp with UTC epoch
@@ -63,6 +66,118 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # leave as timestamp_ntz, MONEY-like as double, whatever the runtime
     # inferred -- a no-op projection when nothing drifted.
     return normalize_table_types(df, name)
+
+
+def _visible(name: str) -> bool:
+    """False for a file or directory name that Spark's file index
+    skips: one that starts with ``.``, or with ``_`` unless it holds
+    ``=`` (``__bucket=3`` is a partition, ``_SUCCESS`` and
+    ``_epoch_marks`` are not), and a ``._COPYING_`` leftover."""
+    return not (
+        name.startswith(".")
+        or (name.startswith("_") and "=" not in name)
+        or name.endswith("._COPYING_")
+    )
+
+
+def _parquet_files(paths) -> list[str]:
+    """The data files under ``paths`` (files, or directories walked
+    recursively) that Spark's file index lists (``_visible``). Sorted
+    by path, the order in which Spark's schema inference visits
+    files."""
+    import os
+
+    out = []
+    for p in paths:
+        if os.path.isfile(p):
+            out.append(p)
+            continue
+        for d, dirs, files in os.walk(p):
+            dirs[:] = [x for x in dirs if _visible(x)]
+            out += [os.path.join(d, f) for f in files if _visible(f)]
+    return sorted(out)
+
+
+def parquet_schema(spark: SparkSession, paths) -> StructType | None:
+    """The schema ``spark.read.option("mergeSchema", "true")`` would
+    give the data files under ``paths``, learnt on the driver with no
+    Spark job; None when no local data file is found (none there, or a
+    path that is a URI or a glob, which ``os.walk`` does not see).
+
+    Spark's own inference reads footers inside a Spark job, also for a
+    single file. Here each footer is read on the driver and converted
+    by Spark's converter (``ParquetFileFormat.readSchemaFromFooter``
+    with a ``ParquetToSparkSchemaConverter`` built from the session's
+    SQLConf, so ``nanosAsLong`` and the binary/INT96 settings apply),
+    and the results are merged in file order with
+    ``StructType.merge``, mergeSchema's own rules: new columns are
+    appended, and a type conflict raises ValueError naming the file.
+    Partition columns come from the directory names at read time, as
+    without a schema. A weekly table holds one footer per partition or
+    bucket, each a small ranged read.
+    """
+    import json
+
+    from py4j.java_gateway import JavaClass
+    from py4j.protocol import Py4JJavaError
+
+    files = _parquet_files(paths)
+    if not files:
+        return None
+    # Classes by name: a dotted lookup through spark._jvm costs one
+    # gateway round trip per package segment, per file.
+    client = spark.sparkContext._gateway._gateway_client
+
+    def jclass(name: str) -> JavaClass:
+        return JavaClass(name, client)
+
+    parquet = "org.apache.spark.sql.execution.datasources.parquet."
+    conf = spark._jsparkSession.sessionState().conf()
+    converter = jclass(parquet + "ParquetToSparkSchemaConverter")(conf)
+    to_spark = jclass(parquet + "ParquetFileFormat").readSchemaFromFooter
+    read_footer = jclass("org.apache.parquet.hadoop.ParquetFileReader").readFooter
+    skip_row_groups = jclass(
+        "org.apache.parquet.format.converter.ParquetMetadataConverter"
+    ).SKIP_ROW_GROUPS
+    Path = jclass("org.apache.hadoop.fs.Path")
+    Footer = jclass("org.apache.parquet.hadoop.Footer")
+    hadoop_conf = spark._jsc.hadoopConfiguration()
+    case_sensitive = conf.caseSensitiveAnalysis()
+    merged = None
+    for f in files:
+        path = Path(f)
+        footer = Footer(path, read_footer(hadoop_conf, path, skip_row_groups))
+        schema = to_spark(footer, converter)
+        if merged is None:
+            merged = schema
+            continue
+        try:
+            merged = merged.merge(schema, case_sensitive)
+        except Py4JJavaError as exc:
+            raise ValueError(
+                f"{f}: schema {schema.simpleString()} does not merge with "
+                f"{merged.simpleString()}, that of the files before it: "
+                f"{exc.java_exception.getMessage()}"
+            ) from None
+    return StructType.fromJson(json.loads(merged.json()))
+
+
+def read_parquet(spark: SparkSession, *paths: str, **options) -> DataFrame:
+    """``spark.read.option("mergeSchema", "true").options(**options)
+    .parquet(*paths)`` with no schema-inference job: the schema comes
+    from ``parquet_schema``. When that finds no local data file, Spark
+    infers the schema with mergeSchema on (a job, or Spark's own error
+    for a path with no data). Listing the paths is still Spark's (a
+    Spark job once a read lists more than
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` paths,
+    32 by default)."""
+    reader = spark.read.options(**options)
+    schema = parquet_schema(spark, paths)
+    if schema is None:
+        reader = reader.option("mergeSchema", "true")
+    else:
+        reader = reader.schema(schema)
+    return reader.parquet(*paths)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -112,15 +227,13 @@ def write_partitioned(
 
 def _partition_dirs(table: str) -> list[str]:
     """The table's Hive-style partition directories, in name order
-    (hidden as Spark hides them: a leading dot, or no ``=``)."""
+    (those Spark lists: ``_visible`` names holding ``=``)."""
     import os
 
     return [
         os.path.join(table, d)
         for d in sorted(os.listdir(table))
-        if "=" in d
-        and not d.startswith(".")
-        and os.path.isdir(os.path.join(table, d))
+        if "=" in d and _visible(d) and os.path.isdir(os.path.join(table, d))
     ]
 
 
@@ -128,9 +241,7 @@ def _data_file(part_dir: str) -> str | None:
     import os
 
     for f in sorted(os.listdir(part_dir)):
-        if not f.startswith((".", "_")) and os.path.isfile(
-            os.path.join(part_dir, f)
-        ):
+        if _visible(f) and os.path.isfile(os.path.join(part_dir, f)):
             return os.path.join(part_dir, f)
     return None
 
@@ -150,29 +261,59 @@ def _non_text_columns(parquet_file: str) -> dict[str, str]:
     }
 
 
+def _newest_data_file(table: str) -> str | None:
+    """A data file of the table's last partition in name order (the
+    newest snapshot), or None for a missing or empty table."""
+    import os
+
+    if not os.path.isdir(table):
+        return None
+    for part in reversed(_partition_dirs(table)):
+        f = _data_file(part)
+        if f is not None:
+            return f
+    return None
+
+
 def require_text(table: str) -> None:
     """Raise ValueError when ``table`` stores a data column as anything
     but text, naming the column and ``migrate_to_text``. Reads one
     parquet footer with pyarrow -- that of the last partition in name
     order, which migrate_to_text rewrites last -- and launches no Spark
     job. A missing or empty table passes: it has nothing to mix with."""
-    import os
+    f = _newest_data_file(table)
+    bad = _non_text_columns(f) if f is not None else {}
+    if bad:
+        col, typ = next(iter(bad.items()))
+        raise ValueError(
+            f"{table}: column {col!r} is stored as {typ}, not as text; "
+            f"run lake.migrate_to_text(spark, {table!r}) once before "
+            "landing a new week, so the table never mixes types"
+        )
 
-    if not os.path.isdir(table):
+
+def require_columns(table: str, columns) -> None:
+    """Raise ValueError when ``columns`` (a drop's header) lacks a data
+    column of ``table``'s newest partition, naming the missing columns.
+    The weekly feed evolves additively: a narrower week would land and
+    read back with the column NULL in every row. Reads one parquet
+    footer with pyarrow and launches no Spark job; a missing or empty
+    table passes. ``__*`` bookkeeping columns are not the feed's."""
+    import pyarrow.parquet as pq
+
+    f = _newest_data_file(table)
+    if f is None:
         return
-    for part in reversed(_partition_dirs(table)):
-        f = _data_file(part)
-        if f is None:
-            continue
-        bad = _non_text_columns(f)
-        if bad:
-            col, typ = next(iter(bad.items()))
-            raise ValueError(
-                f"{table}: column {col!r} is stored as {typ}, not as text; "
-                f"run lake.migrate_to_text(spark, {table!r}) once before "
-                "landing a new week, so the table never mixes types"
-            )
-        return
+    have = set(columns)
+    missing = [
+        n for n in pq.read_schema(f).names if not n.startswith("__") and n not in have
+    ]
+    if missing:
+        raise ValueError(
+            f"{table}: the drop's header lacks column(s) {missing} that the "
+            "table holds; the weekly feed may add columns but not drop "
+            "them, so nothing of this drop was landed"
+        )
 
 
 def migrate_to_text(spark: SparkSession, table: str) -> int:
@@ -202,7 +343,7 @@ def migrate_to_text(spark: SparkSession, table: str) -> int:
         f = _data_file(part)
         if f is None or not _non_text_columns(f):
             continue
-        df = spark.read.option("mergeSchema", "true").parquet(part)
+        df = read_parquet(spark, part)
         text = df.select(
             *[
                 F.col(c)
@@ -220,18 +361,35 @@ def migrate_to_text(spark: SparkSession, table: str) -> int:
     return rewritten
 
 
-def read_lake(spark: SparkSession, path: str) -> DataFrame:
+def read_lake(
+    spark: SparkSession, path: str, partitions: list[str] | None = None
+) -> DataFrame:
     """Read a partitioned lake table; partition values become columns.
+    With ``partitions``, only those ``importdate`` values are listed
+    and read (``basePath`` keeps the partition column), so the read's
+    cost does not grow with the table's history: a listing of more than
+    32 paths is a Spark job. A value with no partition directory makes
+    Spark raise its own path-not-found error.
 
-    ``mergeSchema`` is on: the weekly-feed evolution contract (additive
-    columns only -- see ``abr_schemas.ingest_abr``) means partitions
-    written before a column appeared lack it on disk; schema merge
-    unions the per-file schemas (a parquet FOOTER read per file, no row
-    data) so old partitions surface the new column as NULL instead of
-    the read schema being whichever file listed first. Destructive
-    changes (drop / retype) are rejected at ingest and merge time, so
-    the union here is always well-formed."""
-    return spark.read.option("mergeSchema", "true").parquet(path)
+    The schema is mergeSchema's, learnt on the driver from the footers
+    of the files read (``read_parquet``; no Spark job): the weekly-feed
+    evolution contract (additive columns only -- see
+    ``abr_schemas.ingest_abr``) means partitions written before a
+    column appeared lack it on disk, and the merge surfaces the new
+    column as NULL there instead of the read schema being whichever
+    file listed first. Destructive changes (drop / retype) are rejected
+    before landing (``pipeline.run_weekly``) and at merge time, so the
+    union here is always well-formed."""
+    import os
+
+    if partitions is None:
+        return read_parquet(spark, path)
+    dirs = _partition_values(path)
+    return read_parquet(
+        spark,
+        *[dirs.get(v, os.path.join(path, f"importdate={v}")) for v in partitions],
+        basePath=path,
+    )
 
 
 def discover_partitions(df: DataFrame, partition_col: str = "importdate") -> list[str]:
@@ -260,17 +418,23 @@ def discover_partitions_listing(
     catalog partitions API call), independent of data volume. Values are
     percent-decoded exactly as Spark's partition writer escapes them.
     """
+    return sorted(_partition_values(path, partition_col))
+
+
+def _partition_values(
+    path: str, partition_col: str = "importdate"
+) -> dict[str, str]:
+    """Each ``partition_col`` value of the table, percent-decoded, with
+    its directory."""
     import os
     from urllib.parse import unquote
 
     prefix = f"{partition_col}="
-    vals = [
-        unquote(name[len(prefix):])
+    return {
+        unquote(name[len(prefix):]): os.path.join(path, name)
         for name in os.listdir(path)
-        if name.startswith(prefix)
-        and os.path.isdir(os.path.join(path, name))
-    ]
-    return sorted(vals)
+        if name.startswith(prefix) and os.path.isdir(os.path.join(path, name))
+    }
 
 
 def newest_previous(

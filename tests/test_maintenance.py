@@ -875,6 +875,7 @@ def test_vacuum_removes_debris_keeps_live_data(spark, tmp_path):
         "removed_asides": 1,
         "kept_asides": 1,
         "removed_tmp": 1,
+        "settled_compactions": 0,
     }
     assert not os.path.exists(f"{path}/.staging_epoch_7")
     assert not os.path.exists(f"{path}/.staging_epoch_1")
@@ -951,3 +952,46 @@ def test_vacuum_keeps_success_without_outcome(spark, tmp_path):
     assert rep["removed_staging"] == 0
     assert os.path.exists(f"{path}/.staging_epoch_5")
     assert os.path.exists(f"{path}/.staging_epoch_1")
+
+
+def test_vacuum_settles_compaction_staging(spark, tmp_path, monkeypatch):
+    """vacuum_snapshot settles what crashed compactions staged, under
+    its writer lock, and counts it: a staged copy with _SUCCESS
+    replaces its bucket, one without is dropped and its bucket is kept.
+    The table reads the same rows before and after."""
+    import os
+    import shutil
+
+    path = str(tmp_path / "merged")
+    rows = spark.range(100).select(
+        F.col("id").alias("k"), (F.col("id") * 3).alias("v")
+    )
+    maintenance.merge_snapshot(spark, path, rows, None, key="k", epoch=1, n_buckets=4)
+    want = sorted(map(tuple, maintenance.read_merged_snapshot(spark, path).collect()))
+    done, cut = os.path.join(path, "__bucket=1"), os.path.join(path, "__bucket=2")
+    # AQE is off in tests: each bucket has several files, so
+    # compaction rewrites it
+    assert len([f for f in os.listdir(done) if f.startswith("part-")]) > 1
+
+    def crash(staged, dst):
+        raise OSError("injected crash before the swap")
+
+    monkeypatch.setattr(maintenance, "_swap_in", crash)
+    with pytest.raises(OSError, match="injected"):
+        maintenance.compact_partition(spark, done)
+    monkeypatch.undo()
+    # a copy cut off mid-write: some files, no _SUCCESS
+    partial = os.path.join(path, ".__bucket=2__compacting")
+    os.makedirs(partial)
+    part = next(f for f in sorted(os.listdir(cut)) if f.startswith("part-"))
+    shutil.copy(os.path.join(cut, part), partial)
+    cut_files = sorted(os.listdir(cut))
+
+    rep = maintenance.vacuum_snapshot(path)
+    assert rep["settled_compactions"] == 2
+    assert not any(d.endswith("__compacting") for d in os.listdir(path))
+    assert len([f for f in os.listdir(done) if f.startswith("part-")]) == 1
+    assert sorted(os.listdir(cut)) == cut_files
+    got = sorted(map(tuple, maintenance.read_merged_snapshot(spark, path).collect()))
+    assert got == want
+    assert maintenance.vacuum_snapshot(path)["settled_compactions"] == 0

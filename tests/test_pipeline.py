@@ -428,6 +428,45 @@ def test_run_weekly_replay_after_compaction_crash_after_delete(
     assert _merged_rows(spark, tmp_path) == week2
 
 
+def test_vacuum_cannot_settle_a_live_compaction(spark, tmp_path, monkeypatch):
+    """run_weekly compacts merged buckets under the table's writer lock.
+    A vacuum_snapshot that overlaps the compaction at its worst moment
+    -- a staged copy with ``_SUCCESS`` whose swap has not run -- raises
+    and leaves that copy to its writer, which swaps it in. Without the
+    lock the vacuum would swap it in first and the writer's own swap
+    would delete the bucket."""
+    import threading
+
+    from abr_etl_spark.operators import maintenance
+
+    drop1, drop2, week2 = _two_week_drops(tmp_path)
+    pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop1))
+    table = str(tmp_path / "merged/Agency_Data")
+    real = maintenance._swap_in
+    one_at_a_time = threading.Lock()
+    vacuums = []
+
+    def vacuum_then_swap(staged, path):
+        if one_at_a_time.locked():  # the vacuum's own swap
+            return real(staged, path)
+        assert os.path.exists(os.path.join(staged, "_SUCCESS"))
+        with one_at_a_time:
+            try:
+                vacuums.append(maintenance.vacuum_snapshot(table))
+            except RuntimeError as exc:
+                vacuums.append(str(exc))
+        real(staged, path)
+
+    monkeypatch.setattr(maintenance, "_swap_in", vacuum_then_swap)
+    pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop2))
+    monkeypatch.undo()
+    assert vacuums
+    assert all("another writer holds" in str(v) for v in vacuums), vacuums
+    assert not any(d.endswith("__compacting") for d in os.listdir(table))
+    assert maintenance.vacuum_snapshot(table)["settled_compactions"] == 0
+    assert _merged_rows(spark, tmp_path) == week2
+
+
 def test_run_weekly_clean_replay_compacts_nothing(spark, tmp_path, monkeypatch):
     """Replaying a week that finished cleanly calls compact_partition
     for no bucket."""
