@@ -110,11 +110,17 @@ PRIORITY: list[str] = [
 ]
 
 
-def _registry() -> tuple[dict, dict]:
-    """Every ``plans/`` module's QUERIES and ORACLES, found by listing
-    the package in name order. A module that fails to import raises
-    (it would otherwise drop all its keys unseen), and so does a key
-    that two modules define."""
+def _registry() -> tuple[dict, dict, dict]:
+    """Every ``plans/`` module's QUERIES, ORACLES and CACHE_FAMILIES,
+    found by listing the package in name order. A module that fails to
+    import raises (it would otherwise drop all its keys unseen), and so
+    does a key that two modules define.
+
+    CACHE_FAMILIES maps a key to every result-cache family its build
+    registers or reuses when it starts from an empty session memo: that
+    includes a family built inside a memoized value that another key
+    may build first. tests/test_cache_families.py holds each module to
+    it; bench.py releases a family after its last consumer."""
     import importlib
     import pkgutil
 
@@ -122,6 +128,7 @@ def _registry() -> tuple[dict, dict]:
 
     queries: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     oracles: dict[str, str] = {}
+    families: dict[str, tuple[str, ...]] = {}
     owner: dict[str, str] = {}
     for info in sorted(pkgutil.iter_modules(plans.__path__), key=lambda i: i.name):
         m = importlib.import_module(f"{plans.__name__}.{info.name}")
@@ -134,10 +141,11 @@ def _registry() -> tuple[dict, dict]:
             owner[k] = m.__name__
         queries.update(m.QUERIES)
         oracles.update(m.ORACLES)
+        families.update(getattr(m, "CACHE_FAMILIES", {}))
 
     ordered = {k: queries[k] for k in PRIORITY if k in queries}
     ordered.update({k: v for k, v in queries.items() if k not in ordered})
-    return ordered, oracles
+    return ordered, oracles, families
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -146,3 +154,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     return _registry()[1]
+
+
+def cache_families() -> dict[str, tuple[str, ...]]:
+    return _registry()[2]

@@ -17,8 +17,9 @@
    ``unpersist`` is idempotent.  Caveat: two call sites that cache the
    SAME canonical plan under different families share one JVM entry, so
    releasing either family drops it for both; keep such sites on one
-   family (tools/bench_cache_probe.py reports a registration that finds
-   a pre-existing entry).
+   family.  Each ``queries()`` key declares the families it touches in
+   its plan module's ``CACHE_FAMILIES``, and bench.py releases each
+   family after its last consumer.
 
 2. **Session memo.**  Some intermediates cannot be shared through
    CacheManager: a connected-components fixpoint or a power iteration
@@ -51,7 +52,7 @@ T = TypeVar("T")
 #: owning family.
 _RESULT_CACHES: list[tuple[str, DataFrame]] = []
 
-#: probe hook (tools/bench_cache_probe.py, perfbench's tracer): called
+#: probe hook (tests/test_cache_families.py, perfbench's tracer): called
 #: as ``observer(family, already_cached, eager)`` on every registration
 #: and on every session-memo hit on a frame.  None in production -- the
 #: JVM cache lookup is only paid when a probe installs an observer.

@@ -15,6 +15,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from abr_etl_spark.sources.lake import read_parquet
+
 
 def salted_join(
     large: DataFrame,
@@ -131,7 +133,8 @@ def ensure_bucketed_table(
                     "produce silently wrong bucketed-join results. Delete "
                     "the directory or pass the on-disk spec."
                 )
-            schema = spark.read.parquet(path).schema
+            # the footers' schema, read on the driver: no Spark job
+            schema = read_parquet(spark, path).schema
             cols = ", ".join(
                 f"`{f.name}` {f.dataType.simpleString()}"
                 for f in schema.fields

@@ -651,13 +651,13 @@ def _merge_snapshot_locked(
     anti-join against the (small) delta key set -- AQE broadcasts it in
     the common deltas<<snapshot case -- and one rebalance exchange on
     the bucket column ahead of the write. The exchange is the price of
-    one file per bucket. It saves work when compaction follows
-    (run_weekly's compact_merged) and each rewritten bucket is under
-    AQE's advisory partition size: the bucket's compaction job (read
-    it back, rewrite it) becomes a listing. A merge with no compaction
-    after it (stream_cdc_apply, compact_merged=False) gets fewer files
-    for the next read; a bucket above the advisory size is split by
-    AQE and compact_partition still rewrites it, so it pays for both.
+    one file per bucket. It saves work when compaction follows (every
+    run_weekly merge) and each rewritten bucket is under AQE's advisory
+    partition size: the bucket's compaction job (read it back, rewrite
+    it) becomes a listing. A merge with no compaction after it
+    (stream_cdc_apply) gets fewer files for the next read; a bucket
+    above the advisory size is split by AQE and compact_partition
+    still rewrites it, so it pays for both.
     Untouched buckets are never read; a fully-replayed epoch reads no
     buckets at all. The affected buckets' schema is merged from their
     footers on the driver (``lake.read_parquet``), so learning it

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import logging
 import os
-from dataclasses import dataclass, field
+from dataclasses import InitVar, dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -68,13 +68,14 @@ class WeeklyConfig:
     #: hash-bucket count for the merged tables (tests shrink it; at
     #: scale see maintenance.MERGE_BUCKETS sizing note).
     merge_buckets: int = maintenance.MERGE_BUCKETS
-    #: after a merge, compact exactly the buckets THIS epoch rewrote
-    #: (marker == epoch) to ~target-sized files -- the weekly
-    #: small-file hygiene pass, scoped so untouched buckets never
-    #: rewrite. The merge already writes one file per bucket, so this
-    #: is a stat call per bucket unless AQE split an oversized bucket.
-    compact_merged: bool = False
     results: dict = field(default_factory=dict)
+    #: not a setting: every merge is followed by compaction of the
+    #: buckets it rewrote. Accepted as True for perfbench's callers.
+    compact_merged: InitVar[bool] = True
+
+    def __post_init__(self, compact_merged: bool) -> None:
+        if not compact_merged:
+            raise ValueError("run_weekly always compacts the buckets it merged")
 
 
 def unzip_drop(
@@ -190,13 +191,16 @@ def _merge_and_compact(
     date: str,
 ) -> dict:
     """Apply one week's CDC to <merge_dir>/<ds> (epoch = yyyymmdd as
-    int, so replays gate on the bucket markers) and, when configured,
-    compact exactly the buckets this epoch rewrote. A compaction that
-    crashed in an earlier run is settled first: the marker gate would
-    skip its bucket, so nothing else would restore it. Settling and
-    compaction rename and delete bucket directories, so both hold the
-    table's writer lock, as the merge does: a vacuum_snapshot that
-    overlaps them raises instead of touching a live staged copy."""
+    int, so replays gate on the bucket markers) and compact exactly the
+    buckets this epoch rewrote (marker == epoch) to ~target-sized files,
+    so untouched buckets never rewrite. The merge already writes one
+    file per bucket, so compaction is a listing per bucket unless AQE
+    split an oversized bucket. A compaction that crashed in an earlier
+    run is settled first: the marker gate would skip its bucket, so
+    nothing else would restore it. Settling and compaction rename and
+    delete bucket directories, so both hold the table's writer lock, as
+    the merge does: a vacuum_snapshot that overlaps them raises instead
+    of touching a live staged copy."""
     path = os.path.join(cfg.merge_dir, ds)
     epoch = int(date.replace("-", ""))
     if os.path.isdir(path):
@@ -211,7 +215,7 @@ def _merge_and_compact(
         epoch=epoch,
         n_buckets=cfg.merge_buckets,
     )
-    if cfg.compact_merged and rep["written"]:
+    if rep["written"]:
         todo = [
             os.path.join(path, f"{maintenance._BUCKET_COL}={b}")
             for b in range(cfg.merge_buckets)

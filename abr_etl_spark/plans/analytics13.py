@@ -38,6 +38,11 @@ from abr_etl_spark.sources.lake import load_table
 QUERIES: dict = {}
 ORACLES: dict = {}
 
+#: result-cache families (functions/cache.py) each key's build touches
+CACHE_FAMILIES = {
+    "association_rules": ("rules",),
+}
+
 _DOW_ANCHOR = "1992-01-06"  # a Monday (shared with seasonal_index_dow)
 
 
@@ -999,9 +1004,9 @@ def _basket_census(
     rule_conviction immediately filter away -- only
     rule_ancestor_prune's ancestor counts need the unfiltered frame.
     The default MEMORY_AND_DISK level spills rather than OOMs, and the
-    'rules' family is released right after its last consumer
-    (bench.RELEASE_AFTER / release_result_caches), so the oversized
-    census is resident only while the three rule keys run."""
+    'rules' family is released right after its last declared consumer
+    (CACHE_FAMILIES, bench.release_schedule), so the oversized census
+    is resident only while the three rule keys run."""
     from abr_etl_spark.functions.cache import materialize_result
 
     l = materialize_result(

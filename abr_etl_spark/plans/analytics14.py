@@ -74,6 +74,13 @@ from abr_etl_spark.sources.lake import load_table
 QUERIES: dict = {}
 ORACLES: dict = {}
 
+#: result-cache families (functions/cache.py) each key's build touches
+CACHE_FAMILIES = {
+    "rule_conviction": ("rules",),
+    "rule_ancestor_prune": ("rules",),
+    "stratified_reservoir_alloc": ("strat_alloc",),
+}
+
 # ----------------------------------------------------- markov_attribution
 
 #: the funnel chain's transient channel states (A, B) and the absorbing

@@ -48,6 +48,12 @@ from abr_etl_spark.sources.lake import load_table
 QUERIES: dict = {}
 ORACLES: dict = {}
 
+#: result-cache families (functions/cache.py) each key's build touches
+CACHE_FAMILIES = {
+    "quantile_merge_by_source": ("quantile_merge",),
+    "quantile_grid_sweep": ("quantile_grid",),
+}
+
 # ---------------------------------------------------- markov_attribution_k
 
 #: ALL transient channel states, alphabetical (output order), and the

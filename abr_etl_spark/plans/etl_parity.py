@@ -480,6 +480,11 @@ QUERIES = {
     "lake_partitions": q_lake_partitions,
 }
 
+#: result-cache families (functions/cache.py) each key's build touches
+CACHE_FAMILIES = {
+    "incremental_agg": ("incr_agg",),
+}
+
 _VALUES = ",\n            ".join(f"('{f}')" for f in _FILENAMES)
 
 _ROUTE_CASE = """

@@ -412,6 +412,16 @@ QUERIES = {
     "sample_stratified": q_sample_stratified,
 }
 
+#: result-cache families (functions/cache.py) each key's build touches
+CACHE_FAMILIES = {
+    "dedup_ngram_jaccard": ("pairs:n3:t0.9",),
+    "dedup_minhash_lsh": ("mh_pairs:n3:t0.9",),
+    "dedup_simhash": ("sh_pairs:h3",),
+    "dedup_embedding": ("emb_pairs",),
+    "dedup_canonical": ("pairs:n3:t0.9", "canon_cc"),
+    "dedup_canonical_star": ("pairs:n3:t0.9",),
+}
+
 
 # ------------------------------------------------------------------ oracles
 

@@ -21,6 +21,11 @@ from abr_etl_spark.sources.lake import load_table
 QUERIES: dict = {}
 ORACLES: dict = {}
 
+#: result-cache families (functions/cache.py) each key's build touches
+CACHE_FAMILIES = {
+    "minhash_perm_sweep": ("minhash_sweep",),
+}
+
 # --------------------------------------------------- minhash_perm_sweep
 
 #: permutation-count ladder; prefix-consistent (perm_seeds(k) is the

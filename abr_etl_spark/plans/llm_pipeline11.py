@@ -38,6 +38,11 @@ from abr_etl_spark.sources.lake import load_table
 QUERIES: dict = {}
 ORACLES: dict = {}
 
+#: result-cache families (functions/cache.py) each key's build touches
+CACHE_FAMILIES = {
+    "link_prediction_aa": ("linkpred",),
+}
+
 # -------------------------------------------------------- collocations_pmi
 
 #: minimum bigram count to score (PMI explodes on hapax pairs).

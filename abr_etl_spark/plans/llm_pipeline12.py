@@ -23,6 +23,12 @@ from abr_etl_spark.sources.lake import load_table
 QUERIES: dict = {}
 ORACLES: dict = {}
 
+#: result-cache families (functions/cache.py) each key's build touches
+CACHE_FAMILIES = {
+    "ann_pareto_frontier": ("ann_sweep", "ivf_scored"),
+    "dedup_cross_source_matrix": ("pairs:n3:t0.9",),
+}
+
 # --------------------------------------------------- ann_pareto_frontier
 
 

@@ -36,6 +36,14 @@ from abr_etl_spark.sources.lake import load_table
 QUERIES: dict = {}
 ORACLES: dict = {}
 
+#: result-cache families (functions/cache.py) each key's build touches
+CACHE_FAMILIES = {
+    "vocab_df_zipf": ("census:n3",),
+    "doc_idf_profile": ("doc_df",),
+    "doc_boilerplate_simpson": ("doc_df",),
+    "source_df_zipf": ("source_census",),
+}
+
 #: DuckDB twin of the engine's shingle df census (string shingles; the
 #: engine keys on 64-bit gram hashes -- identical df multisets absent a
 #: hash collision, the certified weighted-jaccard equivalence).

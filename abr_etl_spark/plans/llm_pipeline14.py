@@ -25,6 +25,11 @@ from abr_etl_spark.sources.lake import load_table
 QUERIES: dict = {}
 ORACLES: dict = {}
 
+#: result-cache families (functions/cache.py) each key's build touches
+CACHE_FAMILIES = {
+    "dedup_simhash_clusters": ("sh_pairs:h3", "simhash_cc"),
+}
+
 SIMHASH_MAX_HAMMING = 3  # dedup_simhash's radius (llm_pipeline.py)
 
 

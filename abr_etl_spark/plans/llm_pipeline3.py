@@ -220,6 +220,12 @@ QUERIES = {
     "dedup_incremental_probe": dedup_incremental_probe,
 }
 
+#: result-cache families (functions/cache.py) each key's build touches
+CACHE_FAMILIES = {
+    "containment_pairs": ("containment:n3:t0.8",),
+    "dedup_incremental_probe": ("dedup_incr",),
+}
+
 _DK_TOK = th.dk_tokens("text")
 _DK_SH = th.dk_shingles("text", 3)
 

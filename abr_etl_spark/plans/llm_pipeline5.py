@@ -1250,6 +1250,16 @@ QUERIES = {
     "cross_split_leakage": cross_split_leakage,
 }
 
+#: result-cache families (functions/cache.py) each key's build touches
+CACHE_FAMILIES = {
+    "embedding_pca_topk": ("lang_conf",),
+    "embedding_whiten_topk": ("lang_conf",),
+    "embedding_top_eigvec": ("lang_conf",),
+    "dedup_family_agreement": ("pairs:n3:t0.9", "sh_pairs:h3"),
+    "dedup_cluster_sizes": ("pairs:n3:t0.9", "canon_cc"),
+    "cross_split_leakage": ("pairs:n3:t0.9",),
+}
+
 _DK_TOK = th.dk_tokens("text")
 _DK_SH = th.dk_shingles("text", 3)
 

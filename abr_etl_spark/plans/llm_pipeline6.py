@@ -493,6 +493,11 @@ QUERIES = {
     "embedding_outlier_report": embedding_outlier_report,
 }
 
+#: result-cache families (functions/cache.py) each key's build touches
+CACHE_FAMILIES = {
+    "dedup_threshold_sweep": ("pairs:n3:t0.05",),
+}
+
 _DK_TOK = th.dk_tokens("text")
 
 ORACLES = {

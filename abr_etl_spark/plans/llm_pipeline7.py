@@ -421,6 +421,13 @@ QUERIES = {
     "dup_inflation_report": dup_inflation_report,
 }
 
+#: result-cache families (functions/cache.py) each key's build touches
+CACHE_FAMILIES = {
+    "ann_nprobe_sweep": ("ann_sweep",),
+    "simhash_recall_by_tau": ("pairs:n3:t0.05", "sh_pairs:h3"),
+    "dup_inflation_report": ("pairs:n3:t0.9", "canon_cc"),
+}
+
 
 def _nprobe_sweep_oracle() -> str:
     """DuckDB replay of ann_nprobe_sweep: per radius, the hamming-<=r

@@ -488,6 +488,14 @@ QUERIES = {
     "mmr_lambda_sweep": mmr_lambda_sweep,
 }
 
+#: result-cache families (functions/cache.py) each key's build touches
+CACHE_FAMILIES = {
+    "mmr_diversify_topk": ("mmr",),
+    "mmr_lambda_sweep": ("mmr",),
+    "dedup_weighted_jaccard": ("pairs:n3:t0.9", "census:n3"),
+    "lsh_band_sweep": ("lsh_sweep", "pairs:n3:t0.9"),
+}
+
 
 _DK_GRAMS = th.dk_gram_hashes_from_token_hashes(
     th.dk_token_hashes(th.dk_tokens("text")), OVERLAP_N

@@ -78,6 +78,23 @@ from abr_etl_spark.sources.lake import load_table
 QUERIES: dict = {}
 ORACLES: dict = {}
 
+#: result-cache families (functions/cache.py) each key's build touches
+CACHE_FAMILIES = {
+    "shingle_size_sweep": (
+        "pairs:n3:t0.9",
+        "pairs:n5:t0.9",
+        "pairs:n7:t0.9",
+        "pairs:n13:t0.9",
+    ),
+    "simhash_band_sweep": ("simhash_sweep", "sh_pairs:h3"),
+    "ivfadc_nprobe_sweep": ("ivf_scored",),
+    "ann_ivf_pq_kmeans": ("ivfadc_trained",),
+    "hll_merge_by_type": ("sketch_merge",),
+    "kmv_merge_by_source": ("sketch_merge",),
+    "cms_merge_by_source": ("sketch_merge",),
+    "ivfadc_trained_nprobe": ("ivfadc_trained", "ivf_scored"),
+}
+
 # --------------------------------------------------- shingle_size_sweep
 
 #: shingle orders: 3 = the engine's dedup default, 5 = Gopher-style

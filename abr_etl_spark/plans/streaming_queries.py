@@ -14,7 +14,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from abr_etl_spark.sources.lake import load_table
+from abr_etl_spark.sources.lake import load_table, read_parquet
 from pyspark.sql import functions as F
 
 from abr_etl_spark.streaming.stream_ops import (
@@ -211,7 +211,7 @@ def _stage_event_drops(spark: SparkSession, sf_dir: str) -> str:
         # wire type for ts so read_event_stream normalizes exactly like the
         # batch reader does on the original file.
         (
-            spark.read.parquet(f"{sf_dir}/events.parquet")
+            read_parquet(spark, f"{sf_dir}/events.parquet")
             .repartition(_STAGE_FILES, "event_id")
             .write.mode("overwrite")
             .parquet(str(out))
@@ -263,7 +263,7 @@ def _stage_event_drops_with_dups(spark: SparkSession, sf_dir: str) -> str:
     with _STAGE_LOCK:
         if marker.exists() and marker.read_text() == fp:
             return str(out)
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+        ev = read_parquet(spark, f"{sf_dir}/events.parquet")
         (
             ev.repartition(_STAGE_FILES, "event_id")
             .write.mode("overwrite")
@@ -447,6 +447,11 @@ QUERIES = {
     "stream_session_windows": q_stream_session_windows,
     "stream_attribution_join": q_stream_attribution_join,
     "stream_attribution_outer": q_stream_attribution_outer,
+}
+
+#: result-cache families (functions/cache.py) each key's build touches
+CACHE_FAMILIES = {
+    "stream_quantile_windowed": ("stream_cum",),
 }
 
 ORACLES = {

@@ -3,8 +3,7 @@
 Re-expresses the reference's lake layout (load.go:19-21 ``DataKey``:
 ``DATA/<Dataset>/importdate=<date>/...``) as Spark-native partitioned
 tables, and its Athena ``MSCK REPAIR`` + partition listing
-(agency-delta.go:20,97-124) as catalog/partition discovery on the
-DataFrame API.
+(agency-delta.go:20,97-124) as a listing of the partition directories.
 
 Scale notes: partitioned parquet + ``importdate`` partition column means
 Catalyst prunes snapshots at the metadata level -- a two-snapshot delta on a
@@ -392,18 +391,6 @@ def read_lake(
     )
 
 
-def discover_partitions(df: DataFrame, partition_col: str = "importdate") -> list[str]:
-    """Sorted distinct partition values (MSCK-equivalent listing,
-    agency-delta.go:97-124). For partitioned parquet the scan prunes to
-    the partition column so this is near-metadata-only, but it IS a
-    Spark job (the distinct still lists/plans every file); for lakes
-    where even that matters, ``discover_partitions_listing`` answers
-    from the directory layout alone.
-    """
-    rows = df.select(partition_col).distinct().collect()
-    return sorted(str(r[0]) for r in rows)
-
-
 def discover_partitions_listing(
     path: str, partition_col: str = "importdate"
 ) -> list[str]:
@@ -438,16 +425,13 @@ def _partition_values(
 
 
 def newest_previous(
-    df_or_path: DataFrame | str, partition_col: str = "importdate"
+    path: str, partition_col: str = "importdate"
 ) -> tuple[str, str]:
-    """The two newest snapshot dates (agency-delta.go:118-123); raises like
-    the reference's 'Not enough partitions' error when <2 exist. Accepts
-    either a lake DataFrame (pruned-scan discovery) or a table-root path
-    (pure directory-listing discovery)."""
-    if isinstance(df_or_path, str):
-        parts = discover_partitions_listing(df_or_path, partition_col)
-    else:
-        parts = discover_partitions(df_or_path, partition_col)
+    """The two newest snapshot dates of the table at ``path``
+    (agency-delta.go:118-123), from its directory listing (no Spark
+    job); raises like the reference's 'Not enough partitions' error
+    when <2 exist."""
+    parts = discover_partitions_listing(path, partition_col)
     if len(parts) < 2:
         raise ValueError("Not enough partitions to run delta")
     return parts[-1], parts[-2]

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from abr_etl_spark.functions.event_time import normalize_event_time
+from abr_etl_spark.sources.lake import read_parquet
 
 
 def windowed_counts(
@@ -256,8 +257,9 @@ def read_event_stream(
 ) -> DataFrame:
     """File-source stream over a directory of event parquet drops --
     the replayable local stand-in for Kafka/Kinesis ingestion. The nanos
-    TIMESTAMP is normalized exactly like the batch reader."""
-    schema = spark.read.parquet(dir_path).schema
+    TIMESTAMP is normalized exactly like the batch reader. The schema is
+    learnt from the drops' footers on the driver (``read_parquet``)."""
+    schema = read_parquet(spark, dir_path).schema
     df = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)

@@ -262,50 +262,18 @@ HEADLINERS = [
 ]
 
 
-# Family-scoped cache release schedule (r16 verdict item 1). With ~150
-# headliners in one 8 GB local JVM and nothing ever released, every
-# operator family's materialized frames pile into the unified memory
-# region until execution memory starts evicting the caches the CURRENT
-# key is re-reading between its own reps -- the r16 32-core run measured
-# minhash_perm_sweep 1.04 s -> 11.7 s (all three reps slow) with
-# tfidf_cosine_pairs / ks_drift_by_source / join_cardinality_estimate as
-# collateral, while the SAME code at 8 cores (less execution-memory
-# demand) ran 3-5x faster. Releasing each family right after its LAST
-# consumer key keeps the documented cross-key warm-reuse contract (the
-# median is still the warm number: every consumer still reads the cache)
-# while bounding resident storage to the families still in play.
-#
-# Generated from tools/bench_cache_probe.py (which observes every
-# registration + memo touch while replaying HEADLINERS in order);
-# regenerate whenever HEADLINERS or a family's consumer set changes.
-# Releases happen OUTSIDE the timed region (after the key's rep loop),
-# so the timing methodology is unchanged.
-RELEASE_AFTER: dict[str, list[str]] = {
-    "ann_pareto_frontier": ["ann_sweep", "ivf_scored"],
-    "cms_merge_by_source": ["sketch_merge"],
-    "containment_pairs": ["containment:n3:t0.8"],
-    "dedup_cross_source_matrix": ["pairs:n3:t0.9"],
-    "dedup_embedding": ["emb_pairs"],
-    "dedup_incremental_probe": ["dedup_incr"],
-    "dedup_minhash_lsh": ["mh_pairs:n3:t0.9"],
-    "dedup_simhash_clusters": ["sh_pairs:h3", "simhash_cc"],
-    "doc_boilerplate_simpson": ["doc_df"],
-    "dup_inflation_report": ["canon_cc"],
-    "embedding_whiten_topk": ["lang_conf"],
-    "incremental_agg": ["incr_agg"],
-    "ivfadc_trained_nprobe": ["ivfadc_trained"],
-    "link_prediction_aa": ["linkpred"],
-    "lsh_band_sweep": ["lsh_sweep"],
-    "minhash_perm_sweep": ["minhash_sweep"],
-    "mmr_lambda_sweep": ["mmr"],
-    "quantile_grid_sweep": ["quantile_grid"],
-    "quantile_merge_by_source": ["quantile_merge"],
-    "rule_ancestor_prune": ["rules"],
-    "simhash_recall_by_tau": ["pairs:n3:t0.05"],
-    "source_df_zipf": ["source_census"],
-    "stratified_reservoir_alloc": ["strat_alloc"],
-    "vocab_df_zipf": ["census:n3"],
-}
+# Each result-cache family is released after its last consumer in
+# HEADLINERS, outside the timed region. The families a key touches are
+# declared beside its QUERIES, in its plan module's CACHE_FAMILIES.
+def release_schedule(
+    keys: list[str], families: dict[str, tuple[str, ...]]
+) -> dict[str, list[str]]:
+    """key -> the families whose last consumer in ``keys`` it is."""
+    last = {fam: k for k in keys for fam in families.get(k, ())}
+    out: dict[str, list[str]] = {}
+    for fam, k in last.items():
+        out.setdefault(k, []).append(fam)
+    return out
 
 
 def _bench_weekly_pipeline(spark, sf_dir: str, reps: int) -> list[float]:
@@ -379,7 +347,6 @@ def _bench_weekly_pipeline(spark, sf_dir: str, reps: int) -> list[float]:
                 # compaction machinery while keeping the bench row from
                 # pricing 32 tiny scheduler rounds at this SF
                 merge_buckets=8,
-                compact_merged=True,
             )
             t0 = time.perf_counter()
             pipeline.run_weekly(
@@ -413,6 +380,7 @@ def main() -> None:
 
     spark = get_spark("abr-etl-bench", master=f"local[{cpus}]")
     qs = entry_mod.queries()
+    release_after = release_schedule(HEADLINERS, entry_mod.cache_families())
 
     # warm the JVM/codegen once with the cheapest query
     qs["q1_pricing_summary"](spark, sf_dir).count()
@@ -457,12 +425,11 @@ def main() -> None:
             f"(runs: {[round(s, 3) for s in sorted(samples)]})",
             file=sys.stderr,
         )
-        fams = RELEASE_AFTER.get(name)
+        fams = release_after.get(name)
         if fams:
             release_result_caches(*fams)
 
-    # Catch-all for families the schedule misses (a future key added
-    # without regenerating RELEASE_AFTER) and a clean JVM for the
+    # Catch-all for a family no key declares, and a clean JVM for the
     # composed weekly flow below.
     release_result_caches()
 

@@ -21,16 +21,44 @@ def test_bench_key_lists_name_registry_keys():
     from tools import bench_scale
 
     qs = entry.queries()
+    families = entry.cache_families()
+    schedule = bench.release_schedule(bench.HEADLINERS, families)
     lists = {
         "HEADLINERS": bench.HEADLINERS,
         "R1_SUBSET": bench.R1_SUBSET,
-        "RELEASE_AFTER": list(bench.RELEASE_AFTER),
+        "CACHE_FAMILIES": list(families),
+        "release schedule": list(schedule),
         **{f"bench_scale {n}": f["keys"] for n, f in bench_scale.FAMILIES.items()},
     }
     for name, keys in lists.items():
         assert [k for k in keys if k not in qs] == [], name
         assert len(keys) == len(set(keys)), name
-    assert set(bench.RELEASE_AFTER) <= set(bench.HEADLINERS)
+    assert set(schedule) <= set(bench.HEADLINERS)
+
+
+def test_release_schedule_frees_each_family_after_its_last_consumer():
+    """Whatever the order of HEADLINERS (every rotation of it, forward
+    and reversed), the derived schedule releases each family that a
+    key declares exactly once: after a key that declares it, and never
+    before a key that still reads it."""
+    import __spark_entry__ as entry
+    import bench
+
+    families = entry.cache_families()
+    h = bench.HEADLINERS
+    for base in (h, h[::-1]):
+        for i in range(len(base)):
+            keys = base[i:] + base[:i]
+            schedule = bench.release_schedule(keys, families)
+            released: set[str] = set()
+            for k in keys:
+                reads = set(families.get(k, ()))
+                assert not reads & released, (i, k, reads & released)
+                frees = set(schedule.get(k, ()))
+                assert frees <= reads, (i, k)
+                released |= frees
+            assert released == {f for k in keys for f in families.get(k, ())}
+            assert released, "no headliner declares a cache family"
 
 
 @pytest.mark.slow

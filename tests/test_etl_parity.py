@@ -85,14 +85,14 @@ def test_lake_roundtrip_and_partition_discovery(spark, tmp_path):
     lake.write_partitioned(df, path)
     back = lake.read_lake(spark, path)
     assert back.count() == 100
-    assert lake.discover_partitions(back) == ["2024-01-01", "2024-01-08"]
-    assert lake.newest_previous(back) == ("2024-01-08", "2024-01-01")
+    assert lake.discover_partitions_listing(path) == ["2024-01-01", "2024-01-08"]
+    assert lake.newest_previous(path) == ("2024-01-08", "2024-01-01")
 
 
-def test_newest_previous_requires_two(spark):
-    df = spark.createDataFrame([("a", "2024-01-01")], "pid string, importdate string")
+def test_newest_previous_requires_two(tmp_path):
+    (tmp_path / "importdate=2024-01-01").mkdir()
     with pytest.raises(ValueError, match="Not enough partitions"):
-        lake.newest_previous(df)
+        lake.newest_previous(str(tmp_path))
 
 
 def test_export_stable_csv(spark, tmp_path):

@@ -37,9 +37,8 @@ def lake_path(spark, tmp_path_factory):
     return path
 
 
-def test_partition_discovery(spark, lake_path):
-    table = lake.read_lake(spark, lake_path)
-    assert lake.newest_previous(table) == ("2019-04-29", "2019-04-22")
+def test_partition_discovery(lake_path):
+    assert lake.newest_previous(lake_path) == ("2019-04-29", "2019-04-22")
 
 
 def test_partition_pruning_reaches_scan(spark, lake_path):
@@ -53,7 +52,7 @@ def test_partition_pruning_reaches_scan(spark, lake_path):
 
 def test_single_scan_delta_counts(spark, lake_path):
     table = lake.read_lake(spark, lake_path)
-    newest, previous = lake.newest_previous(table)
+    newest, previous = lake.newest_previous(lake_path)
     classified = delta.delta_from_lake(
         table, "pid", newest=newest, previous=previous
     )
@@ -96,7 +95,7 @@ def test_full_reference_flow_export(spark, lake_path, tmp_path):
     """updated + added rows exported under the reference's stable names
     (DELTA/{UPDATED,ADDED}/... , agency-delta.go:35-41)."""
     table = lake.read_lake(spark, lake_path)
-    newest, previous = lake.newest_previous(table)
+    newest, previous = lake.newest_previous(lake_path)
     new_df, old_df = delta.snapshot_pair(
         table, "pid", newest=newest, previous=previous
     )
@@ -140,23 +139,18 @@ def test_write_clustered_enables_file_skipping(spark, tmp_path):
 
 
 def test_discover_partitions_listing_matches_scan(spark, lake_path):
-    """Directory-listing discovery must agree with the pruned-scan
-    variant, run zero Spark jobs, and percent-decode values the way
-    Spark's partition writer escapes them."""
-    from pyspark.sql import functions as F
-
-    from abr_etl_spark import sources
+    """Directory-listing discovery must agree with the partition values
+    a scan of the lake reads, and run zero Spark jobs."""
     from abr_etl_spark.sources import lake as lk
 
-    table = lk.read_lake(spark, lake_path)
-    via_scan = lk.discover_partitions(table)
+    rows = lk.read_lake(spark, lake_path).select("importdate").distinct()
+    via_scan = sorted(str(r[0]) for r in rows.collect())
     before = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
     via_listing = lk.discover_partitions_listing(lake_path)
     after = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
     assert via_listing == via_scan and len(via_listing) >= 2
     assert list(before) == list(after), "listing ran a Spark job"
-    # newest_previous accepts the path form too
-    assert lk.newest_previous(lake_path) == lk.newest_previous(table)
+    assert lk.newest_previous(lake_path) == tuple(via_scan[::-1][:2])
 
 
 def test_discover_partitions_listing_percent_decoding(tmp_path):

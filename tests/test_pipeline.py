@@ -21,6 +21,19 @@ def _write_drop(drop):
     (drop / "VIC190429_ABR_Funds.txt").write_text("pid|x\nf1|1\n")
 
 
+def test_weekly_config_has_no_compaction_switch(tmp_path):
+    """A merge is always followed by compaction of the buckets it
+    rewrote: asking to skip it raises instead of being ignored."""
+    import dataclasses
+
+    fields = {f.name for f in dataclasses.fields(pipeline.WeeklyConfig)}
+    assert "compact_merged" not in fields
+    with pytest.raises(ValueError, match="always compacts"):
+        pipeline.WeeklyConfig(
+            drop_dir=str(tmp_path), lake_root=str(tmp_path), compact_merged=False
+        )
+
+
 def test_run_weekly_end_to_end(spark, tmp_path):
     drop = tmp_path / "drop"
     _write_drop(drop)
@@ -159,7 +172,6 @@ def test_run_weekly_cdc_chain_two_drops(spark, tmp_path):
         datasets=("Agency_Data",),
         merge_dir=str(tmp_path / "merged"),
         merge_buckets=4,
-        compact_merged=True,
     )
 
     # ---- week 1: bootstrap
@@ -298,7 +310,6 @@ def _merge_cfg(tmp_path, drop):
         datasets=("Agency_Data",),
         merge_dir=str(tmp_path / "merged"),
         merge_buckets=8,
-        compact_merged=True,
     )
 
 

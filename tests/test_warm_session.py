@@ -116,3 +116,42 @@ def test_parquet_schema_refuses_a_type_conflict(spark, tmp_path):
     ).partitionBy("importdate").parquet(table)
     with pytest.raises(ValueError, match="importdate=2019-04-29.*INCOMPATIBLE"):
         lake.read_lake(spark, table)
+
+
+def test_bucketed_reregister_and_stream_open_launch_no_schema_job(spark, tmp_path):
+    """Re-registering a bucketed table over its files and opening the
+    event stream learn the schema from the footers: no Spark job, and
+    the schema Spark's inference gives, the nanosecond ``ts`` included."""
+    import shutil
+
+    from abr_etl_spark.functions.event_time import normalize_event_time
+    from abr_etl_spark.operators import joins
+    from abr_etl_spark.streaming import stream_ops
+
+    lake.load_table(spark, SF_SMOKE, "events")  # sets nanosAsLong
+    events = f"{SF_SMOKE}/events.parquet"
+
+    path, table = str(tmp_path / "bkt"), f"bkt_warm_{uuid.uuid4().hex[:8]}"
+
+    def register():
+        joins.ensure_bucketed_table(
+            spark, lambda: spark.read.parquet(events), table, "event_id", path,
+            buckets=2,
+        )
+
+    register()
+    spark.sql(f"DROP TABLE {table}")
+    _, jobs = _jobs_of(spark, register)
+    assert jobs == 0
+    assert spark.table(table).schema == spark.read.parquet(path).schema
+    spark.sql(f"DROP TABLE {table}")
+
+    drops = tmp_path / "drops"
+    drops.mkdir()
+    for i in range(2):
+        shutil.copy(events, drops / f"part-{i}.parquet")
+    stream, jobs = _jobs_of(spark, lambda: stream_ops.read_event_stream(spark, str(drops)))
+    assert jobs == 0
+    inferred = spark.read.parquet(str(drops)).schema
+    assert lake.parquet_schema(spark, [str(drops)]) == inferred
+    assert stream.schema == normalize_event_time(spark.read.parquet(str(drops)), "ts").schema
