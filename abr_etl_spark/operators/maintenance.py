@@ -42,10 +42,12 @@ def compact_partition(
 
     A partition that already IS its target layout -- one data file no
     larger than the target -- is left in place and costs no Spark job
-    (returns 1). merge_snapshot writes each bucket as one file, so the
-    weekly compaction of freshly merged buckets is a stat call per
-    bucket; only a multi-file partition, or one file over the target,
-    is rewritten.
+    (returns 1); only a multi-file partition, or one file over the
+    target, is rewritten. The weekly flow does not call it:
+    merge_snapshot writes each bucket it rewrites as one file under
+    AQE, and it settles a compaction of one of its buckets that crashed
+    before it reads any marker. The call takes no writer lock, so do
+    not run it on a merged table's bucket beside a merge or a vacuum.
     """
     import glob
     import os
@@ -486,11 +488,10 @@ def writer_lock(path: str, *, tag: str = "") -> Iterator[None]:
     O_CREAT|O_EXCL -- atomic on every POSIX filesystem) for the
     ``with`` body. A lock whose recorded pid is dead on THIS host is
     stale (the holder crashed between acquire and release) and is
-    stolen once; a live holder raises RuntimeError. Held by every
-    operation that renames or deletes a table's directories
-    (merge_snapshot, vacuum_snapshot, and run_weekly's settling and
-    compaction of merged buckets) so a vacuum can never race a writer's
-    renames."""
+    stolen once; a live holder raises RuntimeError. Held by the
+    operations that rename or delete a merged table's directories
+    (merge_snapshot, vacuum_snapshot; both settle crashed compactions
+    under it) so a vacuum can never race a writer's renames."""
     import os
 
     lock = path.rstrip("/") + ".__merge_lock"
@@ -538,10 +539,11 @@ def writer_lock(path: str, *, tag: str = "") -> Iterator[None]:
 
 def _write_buckets(df: DataFrame, path: str) -> None:
     """Write ``df`` as ``__bucket=<b>/`` dirs, one file per bucket (see
-    the Layout note of _merge_snapshot_locked). The rebalance hint
-    needs AQE; with AQE off Spark drops it and a bucket keeps one file
-    per input partition, which compact_partition then merges. Files are
-    zstd, as in the lake (``lake.PARQUET_COMPRESSION``)."""
+    the Layout note of _merge_snapshot_locked). This write is the
+    bucket's only one: no compaction pass follows it. The rebalance
+    hint needs AQE; with AQE off Spark drops it and a bucket keeps one
+    file per input partition that held its rows. Files are zstd, as in
+    the lake (``lake.PARQUET_COMPRESSION``)."""
     (
         df.hint("rebalance", _BUCKET_COL)
         .write.partitionBy(_BUCKET_COL)
@@ -569,8 +571,18 @@ def merge_snapshot(
     finally) and is stolen once; a live holder raises. At cluster
     scale the same slot is a lease with a TTL in the table's catalog
     entry -- the acquire/validate/steal protocol is identical.
+
+    Under the lock, and before any marker is read, the merge settles a
+    compaction of one of the table's buckets that crashed
+    (finish_compactions): such a crash can delete a bucket whose marker
+    says it is current, and the marker gate would then skip it for
+    good. A table with nothing to settle costs one listing.
     See _merge_snapshot_locked for the merge semantics."""
+    import os
+
     with writer_lock(path, tag=f"epoch={epoch}"):
+        if os.path.isdir(path):
+            finish_compactions(path)
         return _merge_snapshot_locked(
             spark,
             path,
@@ -651,13 +663,10 @@ def _merge_snapshot_locked(
     anti-join against the (small) delta key set -- AQE broadcasts it in
     the common deltas<<snapshot case -- and one rebalance exchange on
     the bucket column ahead of the write. The exchange is the price of
-    one file per bucket. It saves work when compaction follows (every
-    run_weekly merge) and each rewritten bucket is under AQE's advisory
-    partition size: the bucket's compaction job (read it back, rewrite
-    it) becomes a listing. A merge with no compaction after it
-    (stream_cdc_apply) gets fewer files for the next read; a bucket
-    above the advisory size is split by AQE and compact_partition
-    still rewrites it, so it pays for both.
+    one file per bucket, and the merge's write is the bucket's only
+    one: nothing reads it back to compact it. A bucket above AQE's
+    advisory partition size lands as advisory-sized files, which is
+    the layout a compaction would aim for anyway.
     Untouched buckets are never read; a fully-replayed epoch reads no
     buckets at all. The affected buckets' schema is merged from their
     footers on the driver (``lake.read_parquet``), so learning it
@@ -943,9 +952,9 @@ def vacuum_snapshot(path: str) -> dict:
       ran). Always removable.
     - ``.<bucket>__compacting``: a crashed compact_partition's staged
       copy, settled by ``finish_compactions`` (swapped in when it has
-      ``_SUCCESS``, dropped when not), as the next run_weekly would.
-      run_weekly compacts merged buckets under this same lock, so a
-      staged copy seen here is never one that is still being written.
+      ``_SUCCESS``, dropped when not), as the next merge_snapshot
+      would. compact_partition takes no lock, so run it on a merged
+      bucket only while no vacuum can run.
 
     At 100 TB this is the nightly janitor: every decision reads only
     file names, marker ints, and ``_OUTCOME.json`` -- no parquet rows.

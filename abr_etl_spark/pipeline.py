@@ -5,8 +5,12 @@
     ingest -> per-dataset transform -> partitioned lake write ->
     (per-dataset post actions) delta of the two newest partitions -> CDC
     apply (merge_snapshot current-state table, bootstrapped
-    from the first snapshot) -> per-bucket compaction of exactly the
-    buckets the week rewrote -> stable-named CSV export
+    from the first snapshot) -> stable-named CSV export
+
+The merge writes each bucket it rewrites once, already compacted (one
+file per bucket under AQE), so no compaction pass follows it; a
+compaction that an earlier run or a crash left half-done is settled by
+the next merge.
 
 Like the reference, which lands each drop file unchanged and compares
 text in its delta SQL, the flow lands every column as text: ingest
@@ -69,13 +73,16 @@ class WeeklyConfig:
     #: scale see maintenance.MERGE_BUCKETS sizing note).
     merge_buckets: int = maintenance.MERGE_BUCKETS
     results: dict = field(default_factory=dict)
-    #: not a setting: every merge is followed by compaction of the
-    #: buckets it rewrote. Accepted as True for perfbench's callers.
+    #: not a setting: the merge writes the buckets it rewrites
+    #: compacted. Accepted as True for perfbench's callers.
     compact_merged: InitVar[bool] = True
 
     def __post_init__(self, compact_merged: bool) -> None:
         if not compact_merged:
-            raise ValueError("run_weekly always compacts the buckets it merged")
+            raise ValueError(
+                "run_weekly's merge writes merged buckets compacted; "
+                "compact_merged=False is not a setting"
+            )
 
 
 def unzip_drop(
@@ -180,91 +187,6 @@ def check_disabled(lake_root: str) -> None:
         with open(marker) as f:
             if f.read().strip() == "disabled":
                 raise PipelineDisabled(f"ETL disabled -- {marker}")
-
-
-def _merge_and_compact(
-    spark: SparkSession,
-    cfg: WeeklyConfig,
-    ds: str,
-    upserts: DataFrame,
-    removed_keys: DataFrame | None,
-    date: str,
-) -> dict:
-    """Apply one week's CDC to <merge_dir>/<ds> (epoch = yyyymmdd as
-    int, so replays gate on the bucket markers) and compact exactly the
-    buckets this epoch rewrote (marker == epoch) to ~target-sized files,
-    so untouched buckets never rewrite. The merge already writes one
-    file per bucket, so compaction is a listing per bucket unless AQE
-    split an oversized bucket. A compaction that crashed in an earlier
-    run is settled first: the marker gate would skip its bucket, so
-    nothing else would restore it. Settling and compaction rename and
-    delete bucket directories, so both hold the table's writer lock, as
-    the merge does: a vacuum_snapshot that overlaps them raises instead
-    of touching a live staged copy."""
-    path = os.path.join(cfg.merge_dir, ds)
-    epoch = int(date.replace("-", ""))
-    if os.path.isdir(path):
-        with maintenance.writer_lock(path, tag="finish_compactions"):
-            maintenance.finish_compactions(path)
-    rep = maintenance.merge_snapshot(
-        spark,
-        path,
-        upserts,
-        removed_keys,
-        key=cfg.key_col,
-        epoch=epoch,
-        n_buckets=cfg.merge_buckets,
-    )
-    if rep["written"]:
-        todo = [
-            os.path.join(path, f"{maintenance._BUCKET_COL}={b}")
-            for b in range(cfg.merge_buckets)
-            if os.path.isdir(
-                os.path.join(path, f"{maintenance._BUCKET_COL}={b}")
-            )
-            and maintenance._read_mark(path, b) == epoch
-        ]
-        with maintenance.writer_lock(path, tag="compaction"):
-            # Buckets are independent directories. The merge writes each
-            # one as a single file, so most calls return after a listing
-            # with no Spark job; the small thread pool matters only for
-            # buckets AQE split above its advisory size, whose crash-safe
-            # rewrites then overlap (opt guide 2.6 -- overlap independent
-            # jobs) instead of running one after another.
-            if len(todo) > 1:
-                from concurrent.futures import ThreadPoolExecutor, as_completed
-
-                # collect per-bucket outcomes so a failed weekly run states
-                # exactly which buckets were rewritten before re-raising
-                # (r16 ADVICE: pool.map surfaced only the first exception
-                # after in-flight work drained, with partial progress
-                # nondeterministic and unreported)
-                errors: list[tuple[str, Exception]] = []
-                done_ok: list[str] = []
-                with ThreadPoolExecutor(max_workers=min(4, len(todo))) as pool:
-                    futs = {
-                        pool.submit(
-                            maintenance.compact_partition, spark, bdir
-                        ): bdir
-                        for bdir in todo
-                    }
-                    for fut in as_completed(futs):
-                        bdir = futs[fut]
-                        try:
-                            fut.result()
-                            done_ok.append(bdir)
-                        except Exception as exc:  # noqa: BLE001 - reported
-                            errors.append((bdir, exc))
-                if errors:
-                    raise RuntimeError(
-                        f"compaction failed for {len(errors)} bucket(s) "
-                        f"({[b for b, _ in errors]}); completed OK first: "
-                        f"{done_ok}"
-                    ) from errors[0][1]
-            elif todo:
-                maintenance.compact_partition(spark, todo[0])
-        rep = {**rep, "compacted": len(todo)}
-    return rep
 
 
 #: flag column of _weekly_cdc's changed-rows frame (``__`` like the
@@ -385,8 +307,14 @@ def run_weekly(spark: SparkSession, cfg: WeeklyConfig) -> WeeklyConfig:
                     snap = lake.read_lake(spark, table_path, dates).drop(
                         "importdate"
                     )
-                    cfg.results[ds]["merge"] = _merge_and_compact(
-                        spark, cfg, ds, snap, None, dates[0]
+                    cfg.results[ds]["merge"] = maintenance.merge_snapshot(
+                        spark,
+                        os.path.join(cfg.merge_dir, ds),
+                        snap,
+                        None,
+                        key=cfg.key_col,
+                        epoch=int(dates[0].replace("-", "")),
+                        n_buckets=cfg.merge_buckets,
                     )
             continue
         new_df, old_df = delta.snapshot_pair(
@@ -412,13 +340,14 @@ def run_weekly(spark: SparkSession, cfg: WeeklyConfig) -> WeeklyConfig:
             if cfg.merge_dir:
                 rem = rem.persist()
                 try:
-                    cfg.results[ds]["merge"] = _merge_and_compact(
+                    cfg.results[ds]["merge"] = maintenance.merge_snapshot(
                         spark,
-                        cfg,
-                        ds,
+                        os.path.join(cfg.merge_dir, ds),
                         changed.drop(_ADDED, "importdate"),
                         rem,
-                        newest,
+                        key=cfg.key_col,
+                        epoch=int(newest.replace("-", "")),
+                        n_buckets=cfg.merge_buckets,
                     )
                 finally:
                     rem.unpersist()

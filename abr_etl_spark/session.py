@@ -62,12 +62,12 @@ def get_spark(
         # shingle-hash here) once in the filter and again in the
         # project -- the guide's duplicated-expensive-expression
         # pathology (opt guide 4.4), measured 4x on the shingle-census
-        # shape at sf0.1 (plans/r16/doc_idf_profile_before.txt: Filter(2)
-        # carries the full xxhash64 shingle expression). Generate drops
-        # empty arrays at runtime regardless, so excluding the rule is
-        # result-neutral; arrays in this engine are computed per row, so
-        # the inferred filter never prunes anything an upstream filter
-        # didn't already. CAVEAT (r16 ADVICE): the argument covers
+        # shape at sf0.1 (`tools/plan_dump.py doc_idf_profile` without
+        # this exclusion: Filter(2) carries the full xxhash64 shingle
+        # expression). Generate drops empty arrays at runtime
+        # regardless, so excluding the rule is result-neutral; arrays
+        # in this engine are computed per row, so the inferred filter
+        # never prunes anything an upstream filter didn't already. CAVEAT (r16 ADVICE): the argument covers
         # COMPUTED arrays only -- if a future plan explodes a STORED
         # array column, the lost inferred isnotnull/size filter can no
         # longer prune that scan or its join inputs; re-evaluate the

@@ -179,10 +179,6 @@ def read_parquet(spark: SparkSession, *paths: str, **options) -> DataFrame:
     return reader.parquet(*paths)
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TPCH_TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view so operators can use spark.sql."""
     for t in TPCH_TABLES:
@@ -190,10 +186,10 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
 
 
 #: Parquet codec of every table the weekly flow writes: the lake
-#: (write_partitioned), the merged current-state table and its
-#: compaction (operators/maintenance). The lake holds text, which snappy
-#: packs poorly; zstd keeps the weekly bytes written below what inferred
-#: numeric columns cost under snappy.
+#: (write_partitioned), the merged current-state table and
+#: compact_partition's rewrites (operators/maintenance). The lake holds
+#: text, which snappy packs poorly; zstd keeps the weekly bytes written
+#: below what inferred numeric columns cost under snappy.
 PARQUET_COMPRESSION = "zstd"
 
 

@@ -278,12 +278,12 @@ def release_schedule(
 
 def _bench_weekly_pipeline(spark, sf_dir: str, reps: int) -> list[float]:
     """Time the COMPOSED weekly flow (r11 verdict item 6): ingest ->
-    transform -> delta -> merge_snapshot -> compaction, replayed over
-    two weekly drops plus a third no-op replay of week 2 (the marker
-    fast path). Per-key queries above price each operator alone; this
-    row prices the reference-parity main() end to end so a regression
-    in the composition (extra scan between stages, a lost broadcast)
-    is visible even when every per-key number holds.
+    transform -> delta -> merge_snapshot, replayed over two weekly
+    drops plus a third no-op replay of week 2 (the marker fast path).
+    Per-key queries above price each operator alone; this row prices
+    the reference-parity main() end to end so a regression in the
+    composition (extra scan between stages, a lost broadcast) is
+    visible even when every per-key number holds.
 
     Drop synthesis (untimed setup): two pipe-delimited Agency_Data
     drops derived deterministically from sf's orders table -- week 2
@@ -343,9 +343,9 @@ def _bench_weekly_pipeline(spark, sf_dir: str, reps: int) -> list[float]:
                 lake_root=os.path.join(work, "lake"),
                 datasets=("Agency_Data",),
                 merge_dir=os.path.join(work, "merged"),
-                # 8 buckets: enough to exercise the per-bucket marker /
-                # compaction machinery while keeping the bench row from
-                # pricing 32 tiny scheduler rounds at this SF
+                # 8 buckets: enough to exercise the per-bucket marker
+                # gate and rename commit while keeping the bench row
+                # from pricing 32 tiny scheduler rounds at this SF
                 merge_buckets=8,
             )
             t0 = time.perf_counter()

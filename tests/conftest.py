@@ -7,6 +7,7 @@ from __future__ import annotations
 import math
 import os
 import warnings
+from contextlib import contextmanager
 
 import duckdb
 import pytest
@@ -143,6 +144,28 @@ def run_registry_parallel(items, call, workers=8):
                 f"{name}: failed in the parallel sweep, passed on the serial retry"
             )
     return failures
+
+
+def bucket_files(path):
+    """``__bucket=<b>`` dir name -> its data file names, for a
+    merge_snapshot table at ``path``."""
+    return {
+        d: sorted(f for f in os.listdir(os.path.join(path, d)) if f.startswith("part-"))
+        for d in os.listdir(path)
+        if d.startswith("__bucket=")
+    }
+
+
+@contextmanager
+def job_group(spark, name):
+    """Label the Spark jobs the ``with`` body launches with job group
+    ``name`` (thread-local), for group_jobs to count."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        yield
+    finally:
+        sc._jsc.clearJobGroup()
 
 
 def group_jobs(spark, group):

@@ -259,19 +259,15 @@ def test_count_memo_hit_launches_no_job(spark):
     import uuid
 
     from abr_etl_spark.functions import cache
-    from tests.conftest import group_jobs
+    from tests.conftest import group_jobs, job_group
 
     fam = "test_count_memo_hit"
     tag = uuid.uuid4().hex
     first = cache.materialize_result(_tagged_frame(spark, tag), family=fam)
     same_plan = _tagged_frame(spark, tag)
     group = f"count-memo-{uuid.uuid4().hex}"
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "repeat materialize_result")
-    try:
+    with job_group(spark, group):
         again = cache.materialize_result(same_plan, family=fam)
-    finally:
-        sc._jsc.clearJobGroup()
     assert group_jobs(spark, group) == 0
     assert again._abr_result_count == first._abr_result_count == 37
     cache.release_result_caches(fam)

@@ -4,6 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from abr_etl_spark.operators import maintenance
+from tests.conftest import bucket_files
 
 
 def test_compaction_reduces_file_count(spark, tmp_path):
@@ -432,22 +433,11 @@ def test_merge_snapshot_weekly_replay(spark, tmp_path):
     assert r3["written"] + r3["cleared"] > 0
 
 
-def _bucket_files(path):
-    """__bucket=<b> dir name -> its data files."""
-    import os
-
-    return {
-        d: [f for f in os.listdir(os.path.join(path, d)) if f.startswith("part-")]
-        for d in os.listdir(path)
-        if d.startswith("__bucket=")
-    }
-
-
 def test_merge_snapshot_writes_one_file_per_bucket(spark, aqe_on, tmp_path):
     """Bootstrap and incremental merges land each written bucket as ONE
     file, even from inputs spread over several partitions (each of
-    which holds rows of every bucket), so the weekly compaction has
-    nothing left to rewrite. AQE on, as in production sessions."""
+    which holds rows of every bucket), so no compaction pass has to
+    follow the merge. AQE on, as in production sessions."""
     from abr_etl_spark.operators.maintenance import _read_mark, merge_snapshot
 
     path = str(tmp_path / "state_layout")
@@ -455,7 +445,7 @@ def test_merge_snapshot_writes_one_file_per_bucket(spark, aqe_on, tmp_path):
         [(k, k * 2) for k in range(1, 401)], "pid long, amt long"
     ).repartition(6)
     rep1 = merge_snapshot(spark, path, base, None, key="pid", epoch=1, n_buckets=8)
-    files = _bucket_files(path)
+    files = bucket_files(path)
     assert rep1["written"] == len(files) == 8
     assert all(len(v) == 1 for v in files.values()), files
 
@@ -467,7 +457,7 @@ def test_merge_snapshot_writes_one_file_per_bucket(spark, aqe_on, tmp_path):
     rem = spark.createDataFrame([(k,) for k in sorted(removed)], "pid long")
     rep2 = merge_snapshot(spark, path, ups, rem, key="pid", epoch=2, n_buckets=8)
     assert rep2["written"] > 0
-    files = _bucket_files(path)
+    files = bucket_files(path)
     rewritten = [d for d in files if _read_mark(path, int(d.split("=")[1])) == 2]
     assert len(rewritten) == rep2["written"]
     assert all(len(files[d]) == 1 for d in rewritten), files

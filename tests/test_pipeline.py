@@ -7,7 +7,7 @@ import os
 import pytest
 
 from abr_etl_spark import pipeline
-from tests.conftest import group_jobs
+from tests.conftest import bucket_files, group_jobs, job_group
 
 
 def _write_drop(drop):
@@ -22,13 +22,14 @@ def _write_drop(drop):
 
 
 def test_weekly_config_has_no_compaction_switch(tmp_path):
-    """A merge is always followed by compaction of the buckets it
-    rewrote: asking to skip it raises instead of being ignored."""
+    """The merge writes the buckets it rewrites compacted, so there is
+    no compaction to switch off: asking to skip it raises instead of
+    being ignored."""
     import dataclasses
 
     fields = {f.name for f in dataclasses.fields(pipeline.WeeklyConfig)}
     assert "compact_merged" not in fields
-    with pytest.raises(ValueError, match="always compacts"):
+    with pytest.raises(ValueError, match="merged buckets compacted"):
         pipeline.WeeklyConfig(
             drop_dir=str(tmp_path), lake_root=str(tmp_path), compact_merged=False
         )
@@ -148,7 +149,7 @@ def test_unzip_drop_duplicate_basename_extracts_nothing(tmp_path):
 @pytest.mark.slow
 def test_run_weekly_cdc_chain_two_drops(spark, tmp_path):
     """r10 verdict item 2: the WHOLE weekly chain composes -- ingest ->
-    transform -> delta -> merge_snapshot -> compaction -- replayed over
+    transform -> delta -> merge_snapshot -- replayed over
     two weekly drops arriving one at a time. After each week the merged
     current-state table equals that week's snapshot (= snapshot_latest
     minus removed keys), and re-running the week is a per-bucket
@@ -181,12 +182,11 @@ def test_run_weekly_cdc_chain_two_drops(spark, tmp_path):
     assert rep1["written"] > 0 and rep1["skipped"] == 0
     assert _merged_rows(spark, tmp_path) == {(f"p{i}", str(i)) for i in range(20)}
 
-    # ---- week 2 drop lands; full chain incl. delta + merge + compaction
+    # ---- week 2 drop lands; full chain incl. delta + merge
     (drop / "VIC190429_ABR_Agency_Data.txt").write_text("\n".join(week2) + "\n")
     out2 = pipeline.run_weekly(spark, pipeline.WeeklyConfig(**cfg_kw))
     rep2 = out2.results["Agency_Data"]["merge"]
     assert rep2["written"] + rep2["cleared"] > 0
-    assert rep2.get("compacted", 0) == rep2["written"]
     want2 = {(f"p{i}", "999" if i < 5 else str(i)) for i in range(18)} | {
         ("q1", "1001")
     }
@@ -277,7 +277,7 @@ def test_run_weekly_schema_evolution_across_weeks(spark, tmp_path):
     assert rep3["written"] == 0 and rep3["cleared"] == 0
 
 
-# ------------------------------------------- merge + compaction, two weeks
+# ------------------------------------------------------ merge, two weeks
 
 
 def _two_week_drops(tmp_path):
@@ -324,179 +324,112 @@ def _merged_rows(spark, tmp_path):
     }
 
 
-def test_weekly_compaction_launches_no_spark_job(
-    spark, aqe_on, tmp_path, monkeypatch
-):
-    """Job budget of the weekly compaction step: merge_snapshot writes
-    every bucket as one file, so compacting the buckets a week rewrote
-    is a listing per bucket and launches ZERO Spark jobs. Each
-    compaction call labels its jobs with a job group (thread-local, so
-    the pool's calls are labelled too). AQE is on, as in production
-    (the merge's rebalance hint needs it); no bucket here comes near
-    AQE's advisory size, so none is split and the count is
-    deterministic. A merge that leaves several files per bucket makes
-    this count non-zero."""
-    import uuid
-
+def _two_weeks_counting_compactions(spark, tmp_path, monkeypatch, group):
+    """Run weeks 1 and 2 through run_weekly with compact_partition
+    counted and its jobs labelled with job group ``group``. AQE is on
+    (callers take ``aqe_on``), as in production, so the rebalance hint
+    lands every bucket a week rewrites as one file; no bucket here
+    nears AQE's advisory size. Checks each week's rewritten buckets and
+    the merged rows; returns (compact_partition calls, week 2's drop
+    dir, merged table path, week 2's rows)."""
     from abr_etl_spark.operators import maintenance
-
-    group = f"compact-{uuid.uuid4().hex}"
-    real = maintenance.compact_partition
-    calls = []
-
-    def labelled(spark_, path, **kw):
-        sc = spark_.sparkContext
-        sc.setJobGroup(group, "weekly compaction")
-        try:
-            calls.append(path)
-            return real(spark_, path, **kw)
-        finally:
-            sc._jsc.clearJobGroup()
-
-    monkeypatch.setattr(maintenance, "compact_partition", labelled)
-    drop1, drop2, week2 = _two_week_drops(tmp_path)
-    rep1 = pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop1)).results
-    rep2 = pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop2)).results
-    rep1, rep2 = rep1["Agency_Data"]["merge"], rep2["Agency_Data"]["merge"]
-    assert rep1["compacted"] == rep1["written"] == 8
-    assert rep2["compacted"] == rep2["written"] > 1
-    assert len(calls) == rep1["compacted"] + rep2["compacted"]
-    assert group_jobs(spark, group) == 0
-    assert _merged_rows(spark, tmp_path) == week2
-
-
-def test_run_weekly_replay_after_partial_compaction_failure(
-    spark, tmp_path, monkeypatch
-):
-    """A compaction that fails for one bucket fails the run and names
-    that bucket; replaying the same week afterwards succeeds and the
-    merged table is exactly the week's snapshot. The failure is raised
-    before compact_partition touches the disk; the test below covers a
-    crash between its delete and its rename."""
-    import threading
-
-    from abr_etl_spark.operators import maintenance
-
-    drop1, drop2, week2 = _two_week_drops(tmp_path)
-    pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop1))
-
-    real = maintenance.compact_partition
-    lock = threading.Lock()
-    failed = []
-
-    def flaky(spark_, path, **kw):
-        with lock:
-            fail = not failed
-            if fail:
-                failed.append(path)
-        if fail:
-            raise OSError(f"injected compaction failure for {path}")
-        return real(spark_, path, **kw)
-
-    monkeypatch.setattr(maintenance, "compact_partition", flaky)
-    with pytest.raises(RuntimeError, match="compaction failed") as err:
-        pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop2))
-    [bad] = failed
-    assert os.path.basename(bad).startswith("__bucket=")
-    assert bad in str(err.value)
-
-    monkeypatch.undo()
-    out = pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop2))
-    rep = out.results["Agency_Data"]["merge"]
-    assert rep["written"] == 0 and rep["cleared"] == 0
-    assert _merged_rows(spark, tmp_path) == week2
-
-
-def test_run_weekly_replay_after_compaction_crash_after_delete(
-    spark, tmp_path, monkeypatch
-):
-    """Week 2's compaction crashes after deleting each bucket it
-    rewrites and before renaming the rewrite in, so those buckets are
-    gone while their epoch markers say week 2 is done. The replay
-    swaps the staged rewrites in, and the table is week 2 again."""
-    import shutil
-
-    from abr_etl_spark.operators import maintenance
-
-    drop1, drop2, week2 = _two_week_drops(tmp_path)
-    pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop1))
-
-    def crash_after_delete(staged, path):
-        shutil.rmtree(path)
-        raise OSError(f"injected crash before renaming {staged}")
-
-    monkeypatch.setattr(maintenance, "_swap_in", crash_after_delete)
-    with pytest.raises(RuntimeError, match="compaction failed"):
-        pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop2))
-    monkeypatch.undo()
-    table = tmp_path / "merged/Agency_Data"
-    assert any(d.name.endswith("__compacting") for d in table.iterdir())
-
-    out = pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop2))
-    rep = out.results["Agency_Data"]["merge"]
-    assert rep["written"] == 0 and rep["cleared"] == 0
-    assert not any(d.name.endswith("__compacting") for d in table.iterdir())
-    assert _merged_rows(spark, tmp_path) == week2
-
-
-def test_vacuum_cannot_settle_a_live_compaction(spark, tmp_path, monkeypatch):
-    """run_weekly compacts merged buckets under the table's writer lock.
-    A vacuum_snapshot that overlaps the compaction at its worst moment
-    -- a staged copy with ``_SUCCESS`` whose swap has not run -- raises
-    and leaves that copy to its writer, which swaps it in. Without the
-    lock the vacuum would swap it in first and the writer's own swap
-    would delete the bucket."""
-    import threading
-
-    from abr_etl_spark.operators import maintenance
-
-    drop1, drop2, week2 = _two_week_drops(tmp_path)
-    pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop1))
-    table = str(tmp_path / "merged/Agency_Data")
-    real = maintenance._swap_in
-    one_at_a_time = threading.Lock()
-    vacuums = []
-
-    def vacuum_then_swap(staged, path):
-        if one_at_a_time.locked():  # the vacuum's own swap
-            return real(staged, path)
-        assert os.path.exists(os.path.join(staged, "_SUCCESS"))
-        with one_at_a_time:
-            try:
-                vacuums.append(maintenance.vacuum_snapshot(table))
-            except RuntimeError as exc:
-                vacuums.append(str(exc))
-        real(staged, path)
-
-    monkeypatch.setattr(maintenance, "_swap_in", vacuum_then_swap)
-    pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop2))
-    monkeypatch.undo()
-    assert vacuums
-    assert all("another writer holds" in str(v) for v in vacuums), vacuums
-    assert not any(d.endswith("__compacting") for d in os.listdir(table))
-    assert maintenance.vacuum_snapshot(table)["settled_compactions"] == 0
-    assert _merged_rows(spark, tmp_path) == week2
-
-
-def test_run_weekly_clean_replay_compacts_nothing(spark, tmp_path, monkeypatch):
-    """Replaying a week that finished cleanly calls compact_partition
-    for no bucket."""
-    from abr_etl_spark.operators import maintenance
-
-    drop1, drop2, week2 = _two_week_drops(tmp_path)
-    pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop1))
-    pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop2))
 
     real = maintenance.compact_partition
     calls = []
 
     def counted(spark_, path, **kw):
         calls.append(path)
-        return real(spark_, path, **kw)
+        with job_group(spark_, group):
+            return real(spark_, path, **kw)
 
     monkeypatch.setattr(maintenance, "compact_partition", counted)
+    drop1, drop2, week2 = _two_week_drops(tmp_path)
+    table = tmp_path / "merged/Agency_Data"
+    reps = []
+    for drop, epoch in ((drop1, 20190422), (drop2, 20190429)):
+        out = pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop))
+        reps.append(out.results["Agency_Data"]["merge"])
+        files = bucket_files(table)
+        rewritten = [
+            b
+            for b in files
+            if maintenance._read_mark(str(table), int(b.split("=")[1])) == epoch
+        ]
+        assert len(rewritten) == reps[-1]["written"] > 1
+        assert all(len(files[b]) == 1 for b in rewritten), files
+    assert reps[0]["written"] == 8
+    assert _merged_rows(spark, tmp_path) == week2
+    return calls, drop2, table, week2
+
+
+def test_weekly_compaction_launches_no_spark_job(
+    spark, aqe_on, tmp_path, monkeypatch
+):
+    """The merge's write is each rewritten bucket's only one: over two
+    weeks run_weekly calls compact_partition for no bucket, so no
+    compaction job runs, and every bucket a week rewrote is one file."""
+    import uuid
+
+    group = f"compact-{uuid.uuid4().hex}"
+    calls, _, _, _ = _two_weeks_counting_compactions(
+        spark, tmp_path, monkeypatch, group
+    )
+    assert calls == []
+    assert group_jobs(spark, group) == 0
+
+
+def test_run_weekly_clean_replay_compacts_nothing(
+    spark, aqe_on, tmp_path, monkeypatch
+):
+    """Replaying a week that finished cleanly writes and clears nothing,
+    leaves every bucket file in place, and, like the two weeks before
+    it, calls compact_partition for no bucket."""
+    calls, drop2, table, week2 = _two_weeks_counting_compactions(
+        spark, tmp_path, monkeypatch, "compact-replay"
+    )
+    before = bucket_files(table)
     out = pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop2))
     rep = out.results["Agency_Data"]["merge"]
-    assert rep["written"] == 0
+    assert rep["written"] == rep["cleared"] == 0
+    assert bucket_files(table) == before
     assert calls == []
+    assert _merged_rows(spark, tmp_path) == week2
+
+
+def test_run_weekly_replay_after_compaction_crash_after_delete(
+    spark, tmp_path, monkeypatch
+):
+    """A compact_partition call on a merged bucket crashes after
+    deleting the bucket and before renaming its rewrite in, so the
+    bucket is gone while its epoch marker says week 2 is done, and the
+    marker gate would skip it for good. The replay's merge_snapshot
+    settles the staged rewrite first, and the table is week 2 again.
+    AQE is off, as in the test session, so week 2's merge leaves
+    several files in a bucket it rewrote and the compaction has work."""
+    import shutil
+
+    from abr_etl_spark.operators import maintenance
+
+    drop1, drop2, week2 = _two_week_drops(tmp_path)
+    pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop1))
+    pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop2))
+    table = tmp_path / "merged/Agency_Data"
+    name = next(b for b, fs in sorted(bucket_files(table).items()) if len(fs) > 1)
+
+    def crash_after_delete(staged, path):
+        shutil.rmtree(path)
+        raise OSError(f"injected crash before renaming {staged}")
+
+    monkeypatch.setattr(maintenance, "_swap_in", crash_after_delete)
+    with pytest.raises(OSError, match="injected crash"):
+        maintenance.compact_partition(spark, str(table / name))
+    monkeypatch.undo()
+    assert not (table / name).exists()
+    assert (table / f".{name}__compacting/_SUCCESS").exists()
+
+    out = pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop2))
+    rep = out.results["Agency_Data"]["merge"]
+    assert rep["written"] == 0 and rep["cleared"] == 0
+    assert not any(d.name.endswith("__compacting") for d in table.iterdir())
+    assert len(bucket_files(table)[name]) == 1
     assert _merged_rows(spark, tmp_path) == week2

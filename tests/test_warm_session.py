@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 import __spark_entry__ as entry
 from abr_etl_spark.functions.cache import release_result_caches
 from abr_etl_spark.sources import lake
-from tests.conftest import SF_SMOKE, group_jobs
+from tests.conftest import SF_SMOKE, group_jobs, job_group
 
 #: the catalog keys perfbench's catalog_mix workload times
 CATALOG_MIX = (
@@ -50,11 +50,8 @@ def test_repeated_catalog_pass_compiles_no_new_class(spark):
 
 def _jobs_of(spark, fn):
     group = f"warm-{uuid.uuid4().hex}"
-    spark.sparkContext.setJobGroup(group, "warm session")
-    try:
+    with job_group(spark, group):
         out = fn()
-    finally:
-        spark.sparkContext._jsc.clearJobGroup()
     return out, group_jobs(spark, group)
 
 

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from abr_etl_spark import pipeline
 from abr_etl_spark.operators import maintenance
 from abr_etl_spark.sources import lake, routed_ingest
-from tests.conftest import group_jobs
+from tests.conftest import group_jobs, job_group
 
 DS = "Agency_Data"
 HEADER = "pid|abn|org_nm|son_pc|acn|son_dpid"
@@ -222,13 +222,9 @@ def _label(spark, monkeypatch, module, attr, groups):
     calls = groups.setdefault("calls", {})
 
     def labelled(*args, **kw):
-        sc = spark.sparkContext
-        sc.setJobGroup(group, attr)
-        try:
+        with job_group(spark, group):
             calls[attr] = calls.get(attr, 0) + 1
             return real(*args, **kw)
-        finally:
-            sc._jsc.clearJobGroup()
 
     monkeypatch.setattr(module, attr, labelled)
 

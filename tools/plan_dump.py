@@ -3,7 +3,10 @@
 plans/<tag>/<key>_<suffix>.txt and optionally time each key.
 
 Usage:
-  python tools/plan_dump.py --tag r16 --suffix before [--time N] key...
+  python tools/plan_dump.py [--tag dumps] [--suffix before] [--time N] key...
+
+plans/<tag>/ is scratch output (git-ignored): regenerate a dump when a
+plan claim needs one instead of keeping it.
 
 Timing methodology matches bench.py (.count(), median of N reps) so
 numbers here are comparable to BENCH_PERKEY.json.
@@ -23,7 +26,7 @@ from contextlib import redirect_stdout
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("keys", nargs="+")
-    ap.add_argument("--tag", default="r16")
+    ap.add_argument("--tag", default="dumps")
     ap.add_argument("--suffix", default="before")
     ap.add_argument("--time", type=int, default=0, help="timing reps (0=off)")
     ap.add_argument("--sf-dir", default=os.environ.get(
