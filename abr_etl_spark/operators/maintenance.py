@@ -44,8 +44,8 @@ def compact_partition(
     larger than the target -- is left in place and costs no Spark job
     (returns 1); only a multi-file partition, or one file over the
     target, is rewritten. The weekly flow does not call it:
-    merge_snapshot writes each bucket it rewrites as one file under
-    AQE, and it settles a compaction of one of its buckets that crashed
+    merge_snapshot writes each bucket it rewrites as one file, and it
+    settles a compaction of one of its buckets that crashed
     before it reads any marker. The call takes no writer lock, so do
     not run it on a merged table's bucket beside a merge or a vacuum.
     """
@@ -540,16 +540,62 @@ def writer_lock(path: str, *, tag: str = "") -> Iterator[None]:
 def _write_buckets(df: DataFrame, path: str) -> None:
     """Write ``df`` as ``__bucket=<b>/`` dirs, one file per bucket (see
     the Layout note of _merge_snapshot_locked). This write is the
-    bucket's only one: no compaction pass follows it. The rebalance
-    hint needs AQE; with AQE off Spark drops it and a bucket keeps one
-    file per input partition that held its rows. Files are zstd, as in
-    the lake (``lake.PARQUET_COMPRESSION``)."""
+    bucket's only one: no compaction pass follows it. Under AQE a
+    rebalance hint lands each bucket in one task (split only above the
+    advisory size); with AQE off Spark drops that hint, and a bucket
+    would keep one file per input partition that held its rows, one
+    more with every merge, so a plain repartition on the bucket column
+    takes its place. Files are zstd, as in the lake
+    (``lake.PARQUET_COMPRESSION``)."""
+    aqe = df.sparkSession.conf.get("spark.sql.adaptive.enabled", "true")
+    if aqe.lower() == "true":
+        df = df.hint("rebalance", _BUCKET_COL)
+    else:
+        df = df.repartition(_BUCKET_COL)
     (
-        df.hint("rebalance", _BUCKET_COL)
-        .write.partitionBy(_BUCKET_COL)
+        df.write.partitionBy(_BUCKET_COL)
         .option("compression", PARQUET_COMPRESSION)
         .parquet(path)
     )
+
+
+#: sidecar naming the table's bucket layout, ``{"key": ..., "n_buckets":
+#: ...}`` (leading underscore: invisible to Spark's file listing). A
+#: merge with another key or bucket count would hash a key's new row
+#: into a different bucket than its old one and keep both.
+_LAYOUT_FILE = "_layout.json"
+
+
+def _check_layout(path: str, key: str, n_buckets: int) -> None:
+    """Raise ValueError when ``path``'s recorded layout is not ``(key,
+    n_buckets)``. A table written before the sidecar existed adopts the
+    caller's layout."""
+    import json
+    import os
+
+    p = os.path.join(path, _LAYOUT_FILE)
+    if not os.path.exists(p):
+        _write_layout(path, key, n_buckets)
+        return
+    with open(p) as fh:
+        have = json.load(fh)
+    want = {"key": key, "n_buckets": int(n_buckets)}
+    if have != want:
+        raise ValueError(
+            f"merge_snapshot: {path} is bucketed as {have}, not {want}; "
+            "changing the key or the bucket count requires an explicit "
+            "rebuild"
+        )
+
+
+def _write_layout(path: str, key: str, n_buckets: int) -> None:
+    import json
+    import os
+
+    tmp = os.path.join(path, f".tmp{_LAYOUT_FILE}")
+    with open(tmp, "w") as fh:
+        json.dump({"key": key, "n_buckets": int(n_buckets)}, fh)
+    os.replace(tmp, os.path.join(path, _LAYOUT_FILE))
 
 
 def merge_snapshot(
@@ -572,7 +618,10 @@ def merge_snapshot(
     scale the same slot is a lease with a TTL in the table's catalog
     entry -- the acquire/validate/steal protocol is identical.
 
-    Under the lock, and before any marker is read, the merge settles a
+    Under the lock, and before anything on disk changes, the call's
+    ``key`` and ``n_buckets`` must match the layout the bootstrap
+    recorded in ``_layout.json``, or the merge raises ValueError naming
+    both. Then, before any marker is read, the merge settles a
     compaction of one of the table's buckets that crashed
     (finish_compactions): such a crash can delete a bucket whose marker
     says it is current, and the marker gate would then skip it for
@@ -582,6 +631,7 @@ def merge_snapshot(
 
     with writer_lock(path, tag=f"epoch={epoch}"):
         if os.path.isdir(path):
+            _check_layout(path, key, n_buckets)
             finish_compactions(path)
         return _merge_snapshot_locked(
             spark,
@@ -613,11 +663,13 @@ def _merge_snapshot_locked(
     Layout: parquet hash-partitioned on ``pmod(xxhash64(key),
     n_buckets)`` with every row stamped by the epoch that last rewrote
     its bucket. Each written bucket is ONE file: both the bootstrap and
-    the staging write rebalance on the bucket column first (under AQE,
-    get_spark's default), so the merge's own job lands the bucket's
-    final layout; AQE still splits a bucket above its advisory size
-    into several files. A merge touches ONLY the buckets containing
-    delta keys:
+    the staging write rebalance on the bucket column first (a
+    repartition with AQE off; see _write_buckets), so the merge's own
+    job lands the bucket's final layout; AQE still splits a bucket
+    above its advisory size into several files. The bootstrap records
+    ``key`` and ``n_buckets`` in ``_layout.json``, and merge_snapshot
+    refuses a call with another layout. A merge touches ONLY the
+    buckets containing delta keys:
 
     1. affected buckets  = distinct bucket ids of the delta's keys
        (<= n_buckets rows collected -- metadata scale). NULL join keys
@@ -712,6 +764,7 @@ def _merge_snapshot_locked(
                     f"{_BUCKET_COL}=<int>"
                 )
             buckets.append(int(raw))
+        _write_layout(path, key, n_buckets)
         for b in buckets:
             _write_mark(path, b, epoch)
         return {"written": len(buckets), "skipped": 0, "cleared": 0}

@@ -14,6 +14,41 @@ from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "abr-etl-spark"
 
+#: HotSpot's tier-4 (C2) JIT thresholds at 10x the JDK 17 defaults
+#: (5000 / 600 / 15000 / 40000), for the driver JVM. A weekly run is
+#: one short process over one bounded drop, and at that size the driver
+#: spent more CPU compiling Spark than running it. Split by thread
+#: (``/proc/<driver pid>/task/*/stat``, polled every 0.1 s), one
+#: perfbench weekly_churn round (seed 3, 10k Agency_Data rows, 4 vCPUs,
+#: untimed output checks included) used ~59 CPU s at the defaults: the
+#: C2 compiler threads took 28.9 s, C1 4.8 s, Spark's task threads
+#: 9.2 s and the py4j threads 5.3 s (medians of 3 runs). Most of what
+#: C2 compiled was planner and scheduler code that runs a few thousand
+#: times per run. At these thresholds that code stays at C1, while row
+#: loops that run millions of times still reach C2: C2 took 10.1 s,
+#: task threads 7.8 s and py4j threads 5.9 s, and the round's wall was
+#: flat. C1 only (``-XX:TieredStopAtLevel=1``) also keeps the row loops
+#: at C1: a 200k-row round took 41.9 s of wall and 68.5 s of task-thread
+#: CPU against 34.5 s and 53.1 s at these thresholds. The price of the
+#: thresholds is that a loop run a few hundred thousand times reaches
+#: C2 later, so a compute-heavy catalog key can run slower in a short
+#: session (ann_pareto_frontier at sf0.1: +8% warm, median of 10 pairs).
+DRIVER_JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=50000"
+    " -XX:Tier4MinInvocationThreshold=6000"
+    " -XX:Tier4CompileThreshold=150000"
+    " -XX:Tier4BackEdgeThreshold=400000"
+)
+
+#: Path count above which Spark lists a read's paths in a Spark job
+#: (``spark.sql.sources.parallelPartitionDiscovery.threshold``, 32 by
+#: default), raised for local masters only. In local mode that job's
+#: tasks run in this JVM anyway, so it adds a job and its scheduling to
+#: every read of more than 32 directories (merge_snapshot reading 64
+#: pending buckets) and lists nothing faster. Cluster masters keep
+#: Spark's default, where the job spreads the listing over executors.
+LOCAL_LISTING_THRESHOLD = 1 << 20
+
 
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
@@ -78,6 +113,10 @@ def get_spark(
             "InferFiltersFromGenerate",
         )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # Like spark.driver.memory, this reaches the driver JVM through
+        # spark-submit's --conf, so it holds only for the session that
+        # launches the JVM.
+        .config("spark.driver.extraJavaOptions", DRIVER_JIT_OPTIONS)
         .config("spark.ui.enabled", "false")
         # Tungsten page size. Spark sizes it from the heap (64 MB at an
         # 8g driver), and a broadcast hash relation on a string key
@@ -99,6 +138,11 @@ def get_spark(
         # ~22 KB heap each); the cap bounds it at ~90 MB of heap.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
+    if master.startswith("local"):
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(LOCAL_LISTING_THRESHOLD),
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

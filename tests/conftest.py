@@ -156,6 +156,18 @@ def bucket_files(path):
     }
 
 
+def split_bucket(spark, bucket, n=3):
+    """Rewrite a merge_snapshot bucket dir as ``n`` files, so that
+    compact_partition has work: merges write each bucket as one file."""
+    import shutil
+
+    staged = os.path.join(os.path.dirname(bucket), f".{os.path.basename(bucket)}__split")
+    spark.read.parquet(bucket).repartition(n).write.parquet(staged)
+    shutil.rmtree(bucket)
+    os.rename(staged, bucket)
+    assert len(bucket_files(os.path.dirname(bucket))[os.path.basename(bucket)]) > 1
+
+
 @contextmanager
 def job_group(spark, name):
     """Label the Spark jobs the ``with`` body launches with job group

@@ -4,7 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from abr_etl_spark.operators import maintenance
-from tests.conftest import bucket_files
+from tests.conftest import bucket_files, split_bucket
 
 
 def test_compaction_reduces_file_count(spark, tmp_path):
@@ -64,9 +64,7 @@ def test_unfinished_compaction_neither_duplicates_nor_loses_rows(
     )
     maintenance.merge_snapshot(spark, path, rows, None, key="k", epoch=1, n_buckets=4)
     bucket = os.path.join(path, "__bucket=1")
-    # the test session runs with AQE off, so the bucket has one file
-    # per input partition and compaction rewrites it
-    assert len([f for f in os.listdir(bucket) if f.startswith("part-")]) > 1
+    split_bucket(spark, bucket)  # so compaction rewrites it
 
     def crash(staged, dst):
         raise OSError("injected crash before the swap")
@@ -465,6 +463,77 @@ def test_merge_snapshot_writes_one_file_per_bucket(spark, aqe_on, tmp_path):
         (k, -k if k % 7 == 1 else k * 2) for k in range(1, 401) if k not in removed
     } | {(k, k) for k in range(401, 431)}
     assert _rows(spark, path) == expected
+
+
+def test_merge_snapshot_writes_one_file_per_bucket_with_aqe_off(spark, tmp_path):
+    """With AQE off (the test session) Spark drops the rebalance hint,
+    and the merge repartitions on the bucket column instead: over a
+    bootstrap and three merges of inputs spread over several
+    partitions, every bucket stays one file."""
+    from abr_etl_spark.operators.maintenance import _read_mark, merge_snapshot
+
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+    path = str(tmp_path / "state_layout_no_aqe")
+    want = {k: k * 2 for k in range(1, 401)}
+    base = spark.createDataFrame(sorted(want.items()), "pid long, amt long")
+    merge_snapshot(spark, path, base.repartition(6), None, key="pid", epoch=1, n_buckets=8)
+    assert all(len(v) == 1 for v in bucket_files(path).values())
+    for epoch in (2, 3, 4):
+        ups = {k: -k * epoch for k in range(epoch, 400, 9)}
+        ups |= {k: k for k in range(400 + 10 * epoch, 405 + 10 * epoch)}
+        gone = {k for k in range(epoch + 3, 400, 31) if k not in ups}
+        rep = merge_snapshot(
+            spark,
+            path,
+            spark.createDataFrame(sorted(ups.items()), "pid long, amt long").repartition(5),
+            spark.createDataFrame([(k,) for k in sorted(gone)], "pid long").repartition(3),
+            key="pid",
+            epoch=epoch,
+            n_buckets=8,
+        )
+        files = bucket_files(path)
+        rewritten = [d for d in files if _read_mark(path, int(d.split("=")[1])) == epoch]
+        assert len(rewritten) == rep["written"] > 1
+        assert all(len(v) == 1 for v in files.values()), files
+        want = {k: v for k, v in (want | ups).items() if k not in gone}
+    assert _rows(spark, path) == set(want.items())
+
+
+def _tree_bytes(path):
+    """Relative path -> content of every file under ``path``."""
+    import os
+
+    out = {}
+    for d, _, files in os.walk(path):
+        for f in files:
+            p = os.path.join(d, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, path)] = fh.read()
+    return out
+
+
+def test_merge_snapshot_refuses_another_bucket_layout(spark, tmp_path):
+    """A table bootstrapped with 64 buckets and merged with 4 would keep
+    a key's old row in its 64-layout bucket and land the new row in
+    another one, duplicating the key. The bootstrap records the layout,
+    and a merge with another bucket count or key raises ValueError
+    naming both layouts before it changes anything on disk."""
+    from abr_etl_spark.operators.maintenance import merge_snapshot
+
+    path = str(tmp_path / "state_relayout")
+    base = spark.createDataFrame([(k, k * 2) for k in range(1, 201)], "pid long, amt long")
+    merge_snapshot(spark, path, base, None, key="pid", epoch=1, n_buckets=64)
+    before = _tree_bytes(path)
+    ups = spark.createDataFrame([(k, -k) for k in range(1, 201, 5)], "pid long, amt long")
+    with pytest.raises(ValueError, match=r"'n_buckets': 64.*'n_buckets': 4"):
+        merge_snapshot(spark, path, ups, None, key="pid", epoch=2, n_buckets=4)
+    with pytest.raises(ValueError, match=r"'key': 'pid'.*'key': 'amt'"):
+        merge_snapshot(spark, path, ups, None, key="amt", epoch=2, n_buckets=64)
+    assert _tree_bytes(path) == before
+    merge_snapshot(spark, path, ups, None, key="pid", epoch=2, n_buckets=64)
+    assert _rows(spark, path) == {
+        (k, -k if k % 5 == 1 else k * 2) for k in range(1, 201)
+    }
 
 
 def test_merge_snapshot_clears_emptied_bucket(spark, tmp_path):
@@ -959,9 +1028,7 @@ def test_vacuum_settles_compaction_staging(spark, tmp_path, monkeypatch):
     maintenance.merge_snapshot(spark, path, rows, None, key="k", epoch=1, n_buckets=4)
     want = sorted(map(tuple, maintenance.read_merged_snapshot(spark, path).collect()))
     done, cut = os.path.join(path, "__bucket=1"), os.path.join(path, "__bucket=2")
-    # AQE is off in tests: each bucket has several files, so
-    # compaction rewrites it
-    assert len([f for f in os.listdir(done) if f.startswith("part-")]) > 1
+    split_bucket(spark, done)  # so compaction rewrites it
 
     def crash(staged, dst):
         raise OSError("injected crash before the swap")

@@ -7,7 +7,7 @@ import os
 import pytest
 
 from abr_etl_spark import pipeline
-from tests.conftest import bucket_files, group_jobs, job_group
+from tests.conftest import bucket_files, group_jobs, job_group, split_bucket
 
 
 def _write_drop(drop):
@@ -404,8 +404,8 @@ def test_run_weekly_replay_after_compaction_crash_after_delete(
     bucket is gone while its epoch marker says week 2 is done, and the
     marker gate would skip it for good. The replay's merge_snapshot
     settles the staged rewrite first, and the table is week 2 again.
-    AQE is off, as in the test session, so week 2's merge leaves
-    several files in a bucket it rewrote and the compaction has work."""
+    The bucket is split into several files first, so the compaction has
+    work."""
     import shutil
 
     from abr_etl_spark.operators import maintenance
@@ -414,7 +414,12 @@ def test_run_weekly_replay_after_compaction_crash_after_delete(
     pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop1))
     pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop2))
     table = tmp_path / "merged/Agency_Data"
-    name = next(b for b, fs in sorted(bucket_files(table).items()) if len(fs) > 1)
+    name = next(
+        b
+        for b in sorted(bucket_files(table))
+        if maintenance._read_mark(str(table), int(b.split("=")[1])) == 20190429
+    )
+    split_bucket(spark, str(table / name))
 
     def crash_after_delete(staged, path):
         shutil.rmtree(path)

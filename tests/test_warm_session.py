@@ -1,7 +1,8 @@
 """A warm session redoes no work: a repeated catalog pass compiles no
-generated class again (the codegen cache holds the working set), and
-reading a parquet table learns its schema from the footers on the
-driver instead of in a Spark job."""
+generated class again (the codegen cache holds the working set), the
+driver JVM leaves short-lived code to its C1 compiler, and reading a
+parquet table learns its schema from the footers and lists its paths on
+the driver instead of in a Spark job."""
 
 import uuid
 
@@ -152,3 +153,34 @@ def test_bucketed_reregister_and_stream_open_launch_no_schema_job(spark, tmp_pat
     inferred = spark.read.parquet(str(drops)).schema
     assert lake.parquet_schema(spark, [str(drops)]) == inferred
     assert stream.schema == normalize_event_time(spark.read.parquet(str(drops)), "ts").schema
+
+
+def test_driver_jvm_runs_with_raised_c2_thresholds(spark):
+    """get_spark launches the driver JVM with the tier-4 (C2) JIT
+    thresholds at 10x the JDK 17 defaults, so planner and scheduler
+    code that runs a few thousand times per run is not compiled twice."""
+    jvm = spark.sparkContext._jvm
+    args = set(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
+    assert {
+        "-XX:Tier4InvocationThreshold=50000",
+        "-XX:Tier4MinInvocationThreshold=6000",
+        "-XX:Tier4CompileThreshold=150000",
+        "-XX:Tier4BackEdgeThreshold=400000",
+    } <= args
+
+
+def test_reading_64_bucket_dirs_launches_no_job(spark, tmp_path):
+    """Spark lists more than 32 paths (its parallel-discovery threshold)
+    in a Spark job with one task per path. A local session lists them on
+    the driver, so merge_snapshot's read of 64 pending buckets, and a
+    read of a whole 64-bucket table, launch no job."""
+    path = str(tmp_path / "b64")
+    spark.range(128).select(
+        F.col("id").alias("k"), (F.col("id") % 64).alias("__bucket")
+    ).write.partitionBy("__bucket").parquet(path)
+    dirs = [f"{path}/__bucket={b}" for b in range(64)]
+    buckets, jobs = _jobs_of(spark, lambda: lake.read_parquet(spark, *dirs, basePath=path))
+    assert jobs == 0
+    table, jobs = _jobs_of(spark, lambda: lake.read_parquet(spark, path))
+    assert jobs == 0
+    assert buckets.count() == table.count() == 128
