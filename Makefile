@@ -12,5 +12,5 @@ verify:
 	$(PYTEST)
 
 verify-full:
-	$(PYTEST) -m "slow or not slow"
+	$(PYTEST) -m "slow or not slow" --durations=20
 	python -m pytest perfbench/tests -q -p no:cacheprovider

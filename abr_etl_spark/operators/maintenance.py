@@ -439,12 +439,14 @@ def write_stats_manifest(
 #: (e.g. 4096 buckets over 100 TB -> ~25 GB per bucket rewrite).
 MERGE_BUCKETS = 64
 
+#: per-row epoch column that older versions stamped on every row; the
+#: merge and read_merged_snapshot ignore it, so their tables still work
 _EPOCH_COL = "__epoch"
 _BUCKET_COL = "__bucket"
 #: sidecar dir holding one tiny text file per bucket with the last
 #: epoch that rewrote it -- the METADATA the idempotence gate reads
-#: instead of scanning bucket rows (leading underscore: invisible to
-#: Spark's file listing, like _SUCCESS / _zorder_manifest).
+#: (leading underscore: invisible to Spark's file listing, like
+#: _SUCCESS / _zorder_manifest).
 _MARKS_DIR = "_epoch_marks"
 
 
@@ -456,8 +458,8 @@ def _mark_path(path: str, b: int) -> str:
 
 def _write_mark(path: str, b: int, epoch: int) -> None:
     """Atomically stamp bucket ``b``'s epoch marker (tmp + rename, so a
-    crash never leaves a torn marker -- a missing marker just falls
-    back to the row-scan gate)."""
+    crash never leaves a torn marker -- a missing marker just leaves
+    the bucket pending, and the next merge of its keys rewrites it)."""
     import os
 
     d = os.path.join(path, _MARKS_DIR)
@@ -497,7 +499,7 @@ def writer_lock(path: str, *, tag: str = "") -> Iterator[None]:
     lock = path.rstrip("/") + ".__merge_lock"
     parent = os.path.dirname(lock)
     if parent:
-        os.makedirs(parent, exist_ok=True)  # bootstrap: table dir's parent
+        os.makedirs(parent, exist_ok=True)  # first merge: table dir's parent
     for attempt in (0, 1):
         try:
             fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
@@ -568,34 +570,27 @@ _LAYOUT_FILE = "_layout.json"
 
 def _check_layout(path: str, key: str, n_buckets: int) -> None:
     """Raise ValueError when ``path``'s recorded layout is not ``(key,
-    n_buckets)``. A table written before the sidecar existed adopts the
-    caller's layout."""
+    n_buckets)``. A table without the sidecar (a new one, or one written
+    before the sidecar existed) adopts the caller's layout."""
     import json
     import os
 
     p = os.path.join(path, _LAYOUT_FILE)
+    want = {"key": key, "n_buckets": int(n_buckets)}
     if not os.path.exists(p):
-        _write_layout(path, key, n_buckets)
+        tmp = os.path.join(path, f".tmp{_LAYOUT_FILE}")
+        with open(tmp, "w") as fh:
+            json.dump(want, fh)
+        os.replace(tmp, p)
         return
     with open(p) as fh:
         have = json.load(fh)
-    want = {"key": key, "n_buckets": int(n_buckets)}
     if have != want:
         raise ValueError(
             f"merge_snapshot: {path} is bucketed as {have}, not {want}; "
             "changing the key or the bucket count requires an explicit "
             "rebuild"
         )
-
-
-def _write_layout(path: str, key: str, n_buckets: int) -> None:
-    import json
-    import os
-
-    tmp = os.path.join(path, f".tmp{_LAYOUT_FILE}")
-    with open(tmp, "w") as fh:
-        json.dump({"key": key, "n_buckets": int(n_buckets)}, fh)
-    os.replace(tmp, os.path.join(path, _LAYOUT_FILE))
 
 
 def merge_snapshot(
@@ -618,21 +613,22 @@ def merge_snapshot(
     scale the same slot is a lease with a TTL in the table's catalog
     entry -- the acquire/validate/steal protocol is identical.
 
-    Under the lock, and before anything on disk changes, the call's
-    ``key`` and ``n_buckets`` must match the layout the bootstrap
-    recorded in ``_layout.json``, or the merge raises ValueError naming
-    both. Then, before any marker is read, the merge settles a
-    compaction of one of the table's buckets that crashed
-    (finish_compactions): such a crash can delete a bucket whose marker
-    says it is current, and the marker gate would then skip it for
-    good. A table with nothing to settle costs one listing.
+    Under the lock the table directory is created if missing, so a
+    table's first merge is an ordinary merge into an empty table. Before
+    any bucket changes, the call's ``key`` and ``n_buckets`` must match
+    the layout the first merge recorded in ``_layout.json``, or the
+    merge raises ValueError naming both. Then, before any marker is
+    read, the merge settles a compaction of one of the table's buckets
+    that crashed (finish_compactions): such a crash can delete a bucket
+    whose marker says it is current, and the marker gate would then
+    skip it for good. A table with nothing to settle costs one listing.
     See _merge_snapshot_locked for the merge semantics."""
     import os
 
     with writer_lock(path, tag=f"epoch={epoch}"):
-        if os.path.isdir(path):
-            _check_layout(path, key, n_buckets)
-            finish_compactions(path)
+        os.makedirs(path, exist_ok=True)
+        _check_layout(path, key, n_buckets)
+        finish_compactions(path)
         return _merge_snapshot_locked(
             spark,
             path,
@@ -661,15 +657,17 @@ def _merge_snapshot_locked(
     the SINK that persists it).
 
     Layout: parquet hash-partitioned on ``pmod(xxhash64(key),
-    n_buckets)`` with every row stamped by the epoch that last rewrote
-    its bucket. Each written bucket is ONE file: both the bootstrap and
-    the staging write rebalance on the bucket column first (a
-    repartition with AQE off; see _write_buckets), so the merge's own
-    job lands the bucket's final layout; AQE still splits a bucket
-    above its advisory size into several files. The bootstrap records
-    ``key`` and ``n_buckets`` in ``_layout.json``, and merge_snapshot
-    refuses a call with another layout. A merge touches ONLY the
-    buckets containing delta keys:
+    n_buckets)``; the epoch that last rewrote a bucket lives only in
+    its marker (``_epoch_marks/<bucket>``), not in its rows. Each
+    written bucket is ONE file: the staging write rebalances on the
+    bucket column first (a repartition with AQE off; see
+    _write_buckets), so the merge's own job lands the bucket's final
+    layout; AQE still splits a bucket above its advisory size into
+    several files. The first merge records ``key`` and ``n_buckets`` in
+    ``_layout.json``, and merge_snapshot refuses a call with another
+    layout. The first merge is no special case: it finds every bucket
+    pending and missing, stages them all and renames each in. A merge
+    touches ONLY the buckets containing delta keys:
 
     1. affected buckets  = distinct bucket ids of the delta's keys
        (<= n_buckets rows collected -- metadata scale). NULL join keys
@@ -682,9 +680,9 @@ def _merge_snapshot_locked(
        pure metadata, no parquet rows touched; buckets already at
        >= epoch are SKIPPED, so re-running a week (checkpoint replay,
        operator retry) costs a few stat calls, not a 25 GB bucket
-       scan. Pre-marker tables (bucket dir without a marker) fall back
-       to the row-scan ``max(__epoch)`` gate for just those buckets
-       and gain markers on their next rewrite;
+       scan. An unmarked bucket (only a table written before markers
+       existed has one) is pending: step 3 re-merges it, which gives
+       the same rows, and stamps its marker;
     3. merge             = (current-bucket rows anti-joined on ALL
        delta keys) UNION upserts -- upsert semantics, so replaying a
        delta against a table that already absorbed it reproduces the
@@ -731,44 +729,9 @@ def _merge_snapshot_locked(
     import shutil
 
     data_cols = [c for c in upserts.columns if c not in (_EPOCH_COL, _BUCKET_COL)]
-    stamped = (
-        upserts.select(*data_cols)
-        .withColumn(_EPOCH_COL, F.lit(epoch).cast("long"))
-        .withColumn(_BUCKET_COL, _bucket_expr(key, n_buckets))
+    bucketed = upserts.select(*data_cols).withColumn(
+        _BUCKET_COL, _bucket_expr(key, n_buckets)
     )
-    if not os.path.isdir(path):
-        if not upserts.select(key).where(F.col(key).isNull()).isEmpty():
-            raise ValueError(
-                f"merge_snapshot: NULL values in key column {key!r} -- "
-                "the upsert contract requires non-null keys"
-            )
-        _write_buckets(stamped, path)
-        # the partitionBy write already materialized one dir per
-        # bucket -- list them instead of re-running the upsert lineage
-        # through a distinct().collect() (r16: one less evaluation of
-        # the ingest+delta plan per bootstrap)
-        buckets = []
-        for d in os.listdir(path):
-            if not d.startswith(f"{_BUCKET_COL}="):
-                continue
-            raw = d.split("=", 1)[1]
-            if not raw.isdigit():
-                # name the contract violation instead of a bare int()
-                # traceback (r16 ADVICE): _bucket_expr writes integer
-                # bucket ids only, so any other partition dir (e.g.
-                # __HIVE_DEFAULT_PARTITION__ from a NULL slipping past
-                # the pre-write check) means the table is not ours
-                raise ValueError(
-                    f"merge_snapshot: non-integer bucket partition "
-                    f"{d!r} under {path} -- bucket dirs must be "
-                    f"{_BUCKET_COL}=<int>"
-                )
-            buckets.append(int(raw))
-        _write_layout(path, key, n_buckets)
-        for b in buckets:
-            _write_mark(path, b, epoch)
-        return {"written": len(buckets), "skipped": 0, "cleared": 0}
-
     stale = [
         d
         for d in os.listdir(path)
@@ -802,29 +765,11 @@ def _merge_snapshot_locked(
     if not affected:
         return {"written": 0, "skipped": 0, "cleared": 0}
 
-    # ---- idempotence gate: marker files first (metadata-only), row
-    # scan only for pre-marker buckets
-    done: set[int] = set()
-    fallback: list[int] = []
-    for b in affected:
-        m = _read_mark(path, b)
-        if m is not None:
-            if m >= epoch:
-                done.add(b)
-        elif os.path.isdir(f"{path}/{_BUCKET_COL}={b}"):
-            fallback.append(b)
-    if fallback:
-        marks = (
-            read_parquet(
-                spark,
-                *[f"{path}/{_BUCKET_COL}={b}" for b in fallback],
-                basePath=path,
-            )
-            .groupBy(_BUCKET_COL)
-            .agg(F.max(_EPOCH_COL).alias("e"))
-            .collect()
-        )
-        done |= {r[_BUCKET_COL] for r in marks if r["e"] >= epoch}
+    # ---- idempotence gate: marker files only; an unmarked bucket is
+    # pending, and re-merging it (an upsert) gives the same rows
+    done = {
+        b for b in affected if (m := _read_mark(path, b)) is not None and m >= epoch
+    }
     pending = [b for b in affected if b not in done]
     staging = f"{path}/.staging_epoch_{epoch}"
     if not pending:
@@ -843,7 +788,7 @@ def _merge_snapshot_locked(
         for b in pending
         if os.path.isdir(f"{path}/{_BUCKET_COL}={b}")
     ]
-    fresh = stamped.where(F.col(_BUCKET_COL).isin(pending))
+    fresh = bucketed.where(F.col(_BUCKET_COL).isin(pending))
     if pending_dirs:
         # Schema-evolution contract (additive-only): a week that ADDS a
         # column evolves the table -- surviving rows are NULL-backfilled
@@ -890,11 +835,9 @@ def _merge_snapshot_locked(
                 for c in data_cols
             ]
         )
-        survivors = (
-            current.join(F.broadcast(all_keys.distinct()), key, "left_anti")
-            .withColumn(_EPOCH_COL, F.lit(epoch).cast("long"))
-            .withColumn(_BUCKET_COL, _bucket_expr(key, n_buckets))
-        )
+        survivors = current.join(
+            F.broadcast(all_keys.distinct()), key, "left_anti"
+        ).withColumn(_BUCKET_COL, _bucket_expr(key, n_buckets))
         merged = survivors.unionByName(fresh)
     else:
         merged = fresh

@@ -243,8 +243,9 @@ def _data_file(part_dir: str) -> str | None:
 
 def _non_text_columns(parquet_file: str) -> dict[str, str]:
     """Data columns of one parquet footer that are not strings, with
-    their types. Columns named ``__*`` are bookkeeping (merge_snapshot's
-    ``__epoch``) and keep their type."""
+    their types. Columns named ``__*`` are bookkeeping, not feed data
+    (such as the ``__epoch`` column in the rows of a merge_snapshot
+    table an older version wrote), and keep their type."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 

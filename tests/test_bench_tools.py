@@ -64,7 +64,25 @@ def test_release_schedule_frees_each_family_after_its_last_consumer():
 @pytest.mark.slow
 def test_bench_ab_runs_a_ref_against_the_working_tree(tmp_path):
     """HEAD (extracted with git archive) against the working tree: exit
-    0, one JSON line with the payload fields, temp trees removed."""
+    0, one JSON line with the payload fields, temp trees removed. The
+    harness runs from a copy committed to a fresh git repository, so the
+    test also passes in a tree that is not a git checkout."""
+    import shutil
+
+    tree = tmp_path / "tree"
+    ignore = shutil.ignore_patterns("__pycache__", "*.pyc")
+    shutil.copytree(os.path.join(ROOT, "abr_etl_spark"), tree / "abr_etl_spark", ignore=ignore)
+    (tree / "tools").mkdir()
+    shutil.copy(os.path.join(ROOT, "tools", "bench_ab.py"), tree / "tools")
+    shutil.copy(os.path.join(ROOT, "__spark_entry__.py"), tree)
+    git = ["git", "-C", str(tree)]
+    ident = ["-c", "user.name=bench", "-c", "user.email=bench@localhost"]
+    subprocess.run([*git, "init", "-q"], check=True)
+    subprocess.run([*git, "add", "-A"], check=True)
+    subprocess.run(
+        [*git, *ident, "-c", "commit.gpgsign=false", "commit", "-q", "-m", "tree"],
+        check=True,
+    )
     env = {
         **os.environ,
         "SPARK_GRAFT_SF_DIR": SF_SMOKE,
@@ -73,7 +91,7 @@ def test_bench_ab_runs_a_ref_against_the_working_tree(tmp_path):
     }
     run = subprocess.run(
         [sys.executable, "tools/bench_ab.py", "HEAD", ".", "q1_pricing_summary", "1"],
-        cwd=ROOT,
+        cwd=tree,
         env=env,
         stdout=subprocess.PIPE,
         stderr=subprocess.DEVNULL,

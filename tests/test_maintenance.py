@@ -515,7 +515,7 @@ def _tree_bytes(path):
 def test_merge_snapshot_refuses_another_bucket_layout(spark, tmp_path):
     """A table bootstrapped with 64 buckets and merged with 4 would keep
     a key's old row in its 64-layout bucket and land the new row in
-    another one, duplicating the key. The bootstrap records the layout,
+    another one, duplicating the key. The first merge records the layout,
     and a merge with another bucket count or key raises ValueError
     naming both layouts before it changes anything on disk."""
     from abr_etl_spark.operators.maintenance import merge_snapshot
@@ -601,7 +601,7 @@ def _rows(spark, path):
 def test_merge_snapshot_rejects_null_keys(spark, tmp_path):
     """NULL join keys can never anti-join-match, so a NULL-key upsert
     would duplicate every epoch -- the contract rejects them at entry
-    (r10 advice item 2), on both the bootstrap and incremental paths."""
+    (r10 advice item 2), on a table's first merge and on later ones."""
     import pytest
 
     from abr_etl_spark.operators.maintenance import merge_snapshot
@@ -746,6 +746,111 @@ def test_merge_snapshot_crash_before_marker_recovers(
     monkeypatch.undo()
     merge_snapshot(spark, path, ups, None, key="pid", epoch=2, n_buckets=4)
     assert _rows(spark, path) == expected
+
+
+def _row_list(spark, path):
+    from abr_etl_spark.operators.maintenance import read_merged_snapshot
+
+    return sorted(map(tuple, read_merged_snapshot(spark, path).collect()))
+
+
+def test_merge_snapshot_first_merge_crash_resumes(spark, tmp_path, monkeypatch):
+    """A table's first merge is an ordinary merge into an empty table:
+    it stages every bucket and renames each in. A crash after the first
+    bucket's rename resumes on replay from the staged files: the
+    snapshot's exact rows, every bucket marked, no staging left."""
+    import os
+
+    from abr_etl_spark.operators.maintenance import _read_mark, merge_snapshot
+
+    path = str(tmp_path / "state_first_crash")
+    base = spark.createDataFrame(
+        [(k, k * 2) for k in range(1, 201)], "pid long, amt long"
+    )
+    _crash_rename_after(monkeypatch, 1)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        merge_snapshot(spark, path, base, None, key="pid", epoch=1, n_buckets=4)
+    monkeypatch.undo()
+    r = merge_snapshot(spark, path, base, None, key="pid", epoch=1, n_buckets=4)
+    assert r == {"written": 3, "skipped": 1, "cleared": 0}
+    assert _row_list(spark, path) == sorted(map(tuple, base.collect()))
+    assert [_read_mark(path, b) for b in range(4)] == [1, 1, 1, 1]
+    assert not [d for d in os.listdir(path) if d.startswith(".staging_epoch_")]
+
+
+def test_merge_snapshot_remerges_an_unmarked_bucket(spark, tmp_path):
+    """The marker is the only record of a bucket's epoch: a bucket
+    without one is pending, so replaying the epoch re-merges it (an
+    upsert: the rows do not change) and restores its marker, while the
+    marked buckets are skipped."""
+    import os
+
+    from abr_etl_spark.operators.maintenance import (
+        _mark_path,
+        _read_mark,
+        merge_snapshot,
+    )
+
+    path = str(tmp_path / "state_unmarked")
+    _mk_state(spark, path, n=200, buckets=4)
+    ups = spark.createDataFrame(
+        [(k, -k) for k in range(1, 201, 5)], "pid long, amt long"
+    )
+    r = merge_snapshot(spark, path, ups, None, key="pid", epoch=2, n_buckets=4)
+    assert r["written"] == 4
+    before = _row_list(spark, path)
+    os.unlink(_mark_path(path, 2))
+    r2 = merge_snapshot(spark, path, ups, None, key="pid", epoch=2, n_buckets=4)
+    assert r2 == {"written": 1, "skipped": 3, "cleared": 0}
+    assert _row_list(spark, path) == before
+    assert _read_mark(path, 2) == 2
+
+
+def test_merge_snapshot_merges_a_table_with_epoch_rows(spark, tmp_path):
+    """Older versions stamped every row with an ``__epoch`` column. Such
+    a table still merges: rewritten buckets drop the column, untouched
+    ones keep it on disk, and read_merged_snapshot returns only the data
+    columns."""
+    import pyarrow.parquet as pq
+
+    from abr_etl_spark.operators import maintenance
+
+    path = str(tmp_path / "state_epoch_rows")
+    want = {k: k * 2 for k in range(1, 201)}
+    old = spark.createDataFrame(sorted(want.items()), "pid long, amt long")
+    maintenance._write_buckets(
+        old.withColumn("__epoch", F.lit(1).cast("long")).withColumn(
+            "__bucket", maintenance._bucket_expr("pid", 8)
+        ),
+        path,
+    )
+    for b in range(8):
+        maintenance._write_mark(path, b, 1)
+
+    ups = {k: -k for k in (3, 5)} | {501: 7}
+    rem = [(9,)]
+    r = maintenance.merge_snapshot(
+        spark,
+        path,
+        spark.createDataFrame(sorted(ups.items()), "pid long, amt long"),
+        spark.createDataFrame(rem, "pid long"),
+        key="pid",
+        epoch=2,
+        n_buckets=8,
+    )
+    assert 0 < r["written"] < 8
+    want = {k: v for k, v in (want | ups).items() if k != 9}
+    back = maintenance.read_merged_snapshot(spark, path)
+    assert back.columns == ["pid", "amt"]
+    assert _row_list(spark, path) == sorted(want.items())
+    has_epoch = {
+        (
+            maintenance._read_mark(path, int(d.split("=")[1])),
+            "__epoch" in pq.read_schema(f"{path}/{d}/{fs[0]}").names,
+        )
+        for d, fs in bucket_files(path).items()
+    }
+    assert has_epoch == {(1, True), (2, False)}
 
 
 def test_merge_snapshot_stale_staging_from_other_epoch_raises(
