@@ -434,9 +434,12 @@ def write_stats_manifest(
 
 # ------------------------------------------------------------- CDC apply
 
-#: default hash-bucket count for merge_snapshot tables. At 100 TB pick
-#: buckets so one bucket's rows fit a comfortable rewrite task set
-#: (e.g. 4096 buckets over 100 TB -> ~25 GB per bucket rewrite).
+#: cap on the bucket count merge_snapshot sizes a new table with: the
+#: smallest power of two >= the table's estimated bytes over
+#: ``spark.sql.files.maxPartitionBytes`` (128 MiB by default, so a
+#: bucket read back is one scan split), at most this many. A table of
+#: ~8 GiB or more, or of unknown size, gets the cap; a larger layout
+#: is asked for explicitly (``n_buckets``).
 MERGE_BUCKETS = 64
 
 #: per-row epoch column that older versions stamped on every row; the
@@ -568,29 +571,72 @@ def _write_buckets(df: DataFrame, path: str) -> None:
 _LAYOUT_FILE = "_layout.json"
 
 
-def _check_layout(path: str, key: str, n_buckets: int) -> None:
-    """Raise ValueError when ``path``'s recorded layout is not ``(key,
-    n_buckets)``. A table without the sidecar (a new one, or one written
-    before the sidecar existed) adopts the caller's layout."""
+def bucket_dirs(path: str) -> list[str]:
+    """The ``__bucket=<b>`` directories of the merged table at ``path``
+    ([] for a table that holds none, or no table)."""
+    import os
+
+    if not os.path.isdir(path):
+        return []
+    return [d for d in os.listdir(path) if d.startswith(f"{_BUCKET_COL}=")]
+
+
+def _sized_buckets(df: DataFrame) -> int:
+    """Bucket count for a new table holding ``df``: the smallest power
+    of two >= its estimated bytes over
+    ``spark.sql.files.maxPartitionBytes``, capped at MERGE_BUCKETS. The
+    estimate is the optimized plan's ``sizeInBytes`` (file sizes for a
+    file scan; Long.MaxValue, so the cap, when Spark cannot tell), which
+    launches no Spark job."""
+    stats = df._jdf.queryExecution().optimizedPlan().stats()
+    est = int(str(stats.sizeInBytes()))  # a Scala BigInt
+    split = df.sparkSession._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    splits = max(1, -(-est // split))
+    return min(MERGE_BUCKETS, 1 << (splits - 1).bit_length())
+
+
+def _check_layout(
+    path: str, key: str, n_buckets: int | None, upserts: DataFrame
+) -> int:
+    """The bucket count to merge into ``path`` with. A table with the
+    sidecar keeps its recorded layout: ``n_buckets=None`` adopts it, and
+    a call with another key or count raises ValueError. A new table
+    records ``(key, n_buckets)``, its count sized from ``upserts``
+    (_sized_buckets) when ``n_buckets`` is None. A table without the
+    sidecar that already holds buckets (written before the sidecar
+    existed) adopts an explicit count; with None it raises, since its
+    layout cannot be guessed."""
     import json
     import os
 
     p = os.path.join(path, _LAYOUT_FILE)
+    have = None
+    if os.path.exists(p):
+        with open(p) as fh:
+            have = json.load(fh)
+        if n_buckets is None:
+            n_buckets = have["n_buckets"]
+    elif n_buckets is None:
+        if bucket_dirs(path):
+            raise ValueError(
+                f"merge_snapshot: {path} holds buckets but records no "
+                f"layout ({_LAYOUT_FILE}); pass the n_buckets it was "
+                "written with"
+            )
+        n_buckets = _sized_buckets(upserts)
     want = {"key": key, "n_buckets": int(n_buckets)}
-    if not os.path.exists(p):
+    if have is None:
         tmp = os.path.join(path, f".tmp{_LAYOUT_FILE}")
         with open(tmp, "w") as fh:
             json.dump(want, fh)
         os.replace(tmp, p)
-        return
-    with open(p) as fh:
-        have = json.load(fh)
-    if have != want:
+    elif have != want:
         raise ValueError(
             f"merge_snapshot: {path} is bucketed as {have}, not {want}; "
             "changing the key or the bucket count requires an explicit "
             "rebuild"
         )
+    return want["n_buckets"]
 
 
 def merge_snapshot(
@@ -601,7 +647,7 @@ def merge_snapshot(
     *,
     key: str,
     epoch: int,
-    n_buckets: int = MERGE_BUCKETS,
+    n_buckets: int | None = None,
 ) -> dict:
     """Single-writer guard around _merge_snapshot_locked: two merges
     interleaving their staging writes and bucket renames on one table
@@ -614,10 +660,13 @@ def merge_snapshot(
     entry -- the acquire/validate/steal protocol is identical.
 
     Under the lock the table directory is created if missing, so a
-    table's first merge is an ordinary merge into an empty table. Before
-    any bucket changes, the call's ``key`` and ``n_buckets`` must match
-    the layout the first merge recorded in ``_layout.json``, or the
-    merge raises ValueError naming both. Then, before any marker is
+    table's first merge is an ordinary merge into an empty table. The
+    first merge records ``key`` and the bucket count in
+    ``_layout.json``: ``n_buckets``, or with the default None a count
+    sized from the upserts' bytes (_sized_buckets; pass the whole table,
+    not a delta). Before any bucket changes, a later call adopts the
+    recorded count when ``n_buckets`` is None; a call with another key
+    or count raises ValueError naming both. Then, before any marker is
     read, the merge settles a compaction of one of the table's buckets
     that crashed (finish_compactions): such a crash can delete a bucket
     whose marker says it is current, and the marker gate would then
@@ -627,7 +676,7 @@ def merge_snapshot(
 
     with writer_lock(path, tag=f"epoch={epoch}"):
         os.makedirs(path, exist_ok=True)
-        _check_layout(path, key, n_buckets)
+        n_buckets = _check_layout(path, key, n_buckets, upserts)
         finish_compactions(path)
         return _merge_snapshot_locked(
             spark,
@@ -648,7 +697,7 @@ def _merge_snapshot_locked(
     *,
     key: str,
     epoch: int,
-    n_buckets: int = MERGE_BUCKETS,
+    n_buckets: int,
 ) -> dict:
     """Maintain a materialized CURRENT-STATE table from CDC deltas --
     the writer the reference's downstream consumers run weekly
@@ -664,9 +713,12 @@ def _merge_snapshot_locked(
     _write_buckets), so the merge's own job lands the bucket's final
     layout; AQE still splits a bucket above its advisory size into
     several files. The first merge records ``key`` and ``n_buckets`` in
-    ``_layout.json``, and merge_snapshot refuses a call with another
-    layout. The first merge is no special case: it finds every bucket
-    pending and missing, stages them all and renames each in. A merge
+    ``_layout.json`` -- by default a count sized from the table's bytes,
+    one bucket per ``spark.sql.files.maxPartitionBytes`` rounded up to
+    a power of two and capped at MERGE_BUCKETS, so a small table is one
+    file, not MERGE_BUCKETS tiny ones -- and merge_snapshot refuses a
+    call with another layout. The first merge is no special case: it
+    finds every bucket pending and missing, stages them all and renames each in. A merge
     touches ONLY the buckets containing delta keys:
 
     1. affected buckets  = distinct bucket ids of the delta's keys
@@ -716,7 +768,9 @@ def _merge_snapshot_locked(
     one file per bucket, and the merge's write is the bucket's only
     one: nothing reads it back to compact it. A bucket above AQE's
     advisory partition size lands as advisory-sized files, which is
-    the layout a compaction would aim for anyway.
+    the layout a compaction would aim for anyway. Buckets follow bytes:
+    a sized table's bucket is about one scan split, so the write's file
+    and footer count grows with the table, not with MERGE_BUCKETS.
     Untouched buckets are never read; a fully-replayed epoch reads no
     buckets at all. The affected buckets' schema is merged from their
     footers on the driver (``lake.read_parquet``), so learning it
@@ -762,8 +816,6 @@ def _merge_snapshot_locked(
             "the upsert contract requires non-null keys"
         )
     affected = sorted(r["b"] for r in stats)
-    if not affected:
-        return {"written": 0, "skipped": 0, "cleared": 0}
 
     # ---- idempotence gate: marker files only; an unmarked bucket is
     # pending, and re-merging it (an upsert) gives the same rows
@@ -772,16 +824,17 @@ def _merge_snapshot_locked(
     }
     pending = [b for b in affected if b not in done]
     staging = f"{path}/.staging_epoch_{epoch}"
-    if not pending:
-        shutil.rmtree(staging, ignore_errors=True)  # fully-committed leftover
-        return {"written": 0, "skipped": len(done), "cleared": 0}
-
     if os.path.isdir(staging):
         if os.path.exists(os.path.join(staging, "_SUCCESS")):
-            # crashed AFTER the merged write: resume the rename commit
+            # crashed AFTER the merged write: resume the rename commit,
+            # which finishes every unmarked bucket of its recorded
+            # outcome, also when this call's keys touch none of them
+            # (or there are no keys at all)
             w, c = _commit_staging(path, staging, epoch, pending)
             return {"written": w, "skipped": len(done), "cleared": c}
         shutil.rmtree(staging)  # crashed DURING the write: no renames ran
+    if not pending:
+        return {"written": 0, "skipped": len(done), "cleared": 0}
 
     pending_dirs = [
         f"{path}/{_BUCKET_COL}={b}"

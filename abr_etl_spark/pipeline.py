@@ -5,7 +5,7 @@
     ingest -> per-dataset transform -> partitioned lake write ->
     (per-dataset post actions) delta of the two newest partitions -> CDC
     apply (merge_snapshot current-state table, bootstrapped
-    from the first snapshot) -> stable-named CSV export
+    from the newest full snapshot) -> stable-named CSV export
 
 The merge writes each bucket it rewrites once, already compacted (one
 file per bucket under AQE), so no compaction pass follows it; a
@@ -64,14 +64,17 @@ class WeeklyConfig:
     #: root for materialized current-state tables (<merge_dir>/<ds>):
     #: when set, each delta dataset's computed CDC (updated+added,
     #: removed) is APPLIED via maintenance.merge_snapshot -- the full
-    #: downstream half the reference's consumers build by hand. The
-    #: first snapshot bootstraps the table; each later week merges with
-    #: epoch = int(yyyymmdd), so replaying a week is a per-bucket
-    #: metadata no-op.
+    #: downstream half the reference's consumers build by hand. A first
+    #: week, and a table that holds no bucket yet (merge_dir first set
+    #: on a lake with history), take the week's full snapshot; each
+    #: later week merges its delta. The epoch is int(yyyymmdd), so
+    #: replaying a week is a per-bucket metadata no-op that also resumes
+    #: a crashed commit.
     merge_dir: str | None = None
-    #: hash-bucket count for the merged tables (tests shrink it; at
-    #: scale see maintenance.MERGE_BUCKETS sizing note).
-    merge_buckets: int = maintenance.MERGE_BUCKETS
+    #: hash-bucket count for the merged tables. None: the table's
+    #: recorded layout; a new table is sized from its bytes (see
+    #: maintenance.MERGE_BUCKETS).
+    merge_buckets: int | None = None
     results: dict = field(default_factory=dict)
     #: not a setting: the merge writes the buckets it rewrites
     #: compacted. Accepted as True for perfbench's callers.
@@ -262,11 +265,14 @@ def run_weekly(spark: SparkSession, cfg: WeeklyConfig) -> WeeklyConfig:
     from the footers on the driver (``lake.read_lake``; no Spark job
     before the CDC's own). A dataset with no file in the drop is
     skipped, and its result says why (``{"skipped": reason}``); any
-    other ingest error, such as a zero-byte file, raises. Before
-    anything lands, the run raises ValueError on a lake or merged table
-    landed with inferred types (naming ``lake.migrate_to_text``) and on
-    a drop whose header lacks a column of its lake table (naming the
-    columns)."""
+    other ingest error, such as a zero-byte file, raises. A first week
+    (a lake of one snapshot), and a merged table that holds no bucket
+    yet on a lake with history, merge the newest full snapshot, read on
+    its own so that it sizes a new table; any other week merges its
+    delta. Before anything lands, the run raises ValueError on a lake
+    or merged table landed with inferred types (naming
+    ``lake.migrate_to_text``) and on a drop whose header lacks a column
+    of its lake table (naming the columns)."""
     check_disabled(cfg.lake_root)
     _require_text_tables(cfg)
 
@@ -295,27 +301,34 @@ def run_weekly(spark: SparkSession, cfg: WeeklyConfig) -> WeeklyConfig:
 
         if ds not in cfg.delta_datasets:
             continue
+        merged = os.path.join(cfg.merge_dir, ds) if cfg.merge_dir else None
         try:
             newest, previous = lake.newest_previous(table_path)
         except ValueError as exc:
             log.info("dataset %s: %s", ds, exc)
-            if cfg.merge_dir:
-                # first week: bootstrap the current-state table from the
-                # single snapshot (no delta to apply yet)
-                dates = lake.discover_partitions_listing(table_path)
-                if len(dates) == 1:
-                    snap = lake.read_lake(spark, table_path, dates).drop(
-                        "importdate"
-                    )
-                    cfg.results[ds]["merge"] = maintenance.merge_snapshot(
-                        spark,
-                        os.path.join(cfg.merge_dir, ds),
-                        snap,
-                        None,
-                        key=cfg.key_col,
-                        epoch=int(dates[0].replace("-", "")),
-                        n_buckets=cfg.merge_buckets,
-                    )
+            dates = lake.discover_partitions_listing(table_path) if merged else []
+            if not dates:
+                continue
+            newest, previous = dates[-1], None
+        if merged and (previous is None or not maintenance.bucket_dirs(merged)):
+            # the full snapshot goes to a first week, whose replay then
+            # resumes a crashed first merge (a committed one is a
+            # per-bucket no-op), and to a table holding no bucket on a
+            # lake with history. It sizes a new table's buckets, so it
+            # is the newest partition read alone: a filter on the CDC's
+            # two-partition read keeps both partitions' bytes in the
+            # plan's estimate. The week's delta is already in it.
+            cfg.results[ds]["merge"] = maintenance.merge_snapshot(
+                spark,
+                merged,
+                lake.read_lake(spark, table_path, [newest]).drop("importdate"),
+                None,
+                key=cfg.key_col,
+                epoch=int(newest.replace("-", "")),
+                n_buckets=cfg.merge_buckets,
+            )
+            merged = None
+        if previous is None:
             continue
         new_df, old_df = delta.snapshot_pair(
             lake.read_lake(spark, table_path, [newest, previous]),
@@ -337,12 +350,12 @@ def run_weekly(spark: SparkSession, cfg: WeeklyConfig) -> WeeklyConfig:
         # the likelier they outlive the run in the old generation.
         changed = changed.persist()
         try:
-            if cfg.merge_dir:
+            if merged:
                 rem = rem.persist()
                 try:
                     cfg.results[ds]["merge"] = maintenance.merge_snapshot(
                         spark,
-                        os.path.join(cfg.merge_dir, ds),
+                        merged,
                         changed.drop(_ADDED, "importdate"),
                         rem,
                         key=cfg.key_col,

@@ -44,8 +44,8 @@ DRIVER_JIT_OPTIONS = (
 #: (``spark.sql.sources.parallelPartitionDiscovery.threshold``, 32 by
 #: default), raised for local masters only. In local mode that job's
 #: tasks run in this JVM anyway, so it adds a job and its scheduling to
-#: every read of more than 32 directories (merge_snapshot reading 64
-#: pending buckets) and lists nothing faster. Cluster masters keep
+#: every read of more than 32 directories (merge_snapshot reading up to
+#: 64 pending buckets of a large table) and lists nothing faster. Cluster masters keep
 #: Spark's default, where the job spreads the listing over executors.
 LOCAL_LISTING_THRESHOLD = 1 << 20
 

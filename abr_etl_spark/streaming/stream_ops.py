@@ -364,6 +364,8 @@ def stream_cdc_apply(
     Scale shape per batch: exactly merge_snapshot's -- partition-pruned
     read of affected buckets, broadcast anti-join, bucket-local
     rewrite; untouched buckets never read, replays read only markers.
+    ``n_buckets`` stays explicit: the first micro-batch is not the
+    table, so merge_snapshot's sizing from its bytes would undersize it.
     """
     from abr_etl_spark.operators.maintenance import merge_snapshot
 

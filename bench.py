@@ -343,10 +343,6 @@ def _bench_weekly_pipeline(spark, sf_dir: str, reps: int) -> list[float]:
                 lake_root=os.path.join(work, "lake"),
                 datasets=("Agency_Data",),
                 merge_dir=os.path.join(work, "merged"),
-                # 8 buckets: enough to exercise the per-bucket marker
-                # gate and rename commit while keeping the bench row
-                # from pricing 32 tiny scheduler rounds at this SF
-                merge_buckets=8,
             )
             t0 = time.perf_counter()
             pipeline.run_weekly(

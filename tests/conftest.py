@@ -168,6 +168,20 @@ def split_bucket(spark, bucket, n=3):
     assert len(bucket_files(os.path.dirname(bucket))[os.path.basename(bucket)]) > 1
 
 
+def crash_rename_after(monkeypatch, n_calls):
+    """Patch os.rename to die after its n-th successful call."""
+    real = os.rename
+    state = {"left": n_calls}
+
+    def flaky(src, dst):
+        if state["left"] == 0:
+            raise RuntimeError("injected crash")
+        state["left"] -= 1
+        return real(src, dst)
+
+    monkeypatch.setattr(os, "rename", flaky)
+
+
 @contextmanager
 def job_group(spark, name):
     """Label the Spark jobs the ``with`` body launches with job group

@@ -4,7 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from abr_etl_spark.operators import maintenance
-from tests.conftest import bucket_files, split_bucket
+from tests.conftest import bucket_files, crash_rename_after, split_bucket
 
 
 def test_compaction_reduces_file_count(spark, tmp_path):
@@ -536,6 +536,82 @@ def test_merge_snapshot_refuses_another_bucket_layout(spark, tmp_path):
     }
 
 
+def _layout(path):
+    import json
+    import os
+
+    with open(os.path.join(path, maintenance._LAYOUT_FILE)) as fh:
+        return json.load(fh)
+
+
+def test_merge_snapshot_sizes_a_new_table_from_its_bytes(spark, tmp_path):
+    """With the default n_buckets a new table's bucket count follows its
+    bytes: a small file-scan snapshot is one bucket, recorded in
+    _layout.json, and the estimate launches no Spark job."""
+    from tests.conftest import group_jobs, job_group
+
+    src = str(tmp_path / "snap")
+    spark.createDataFrame(
+        [(k, k * 2) for k in range(1, 201)], "pid long, amt long"
+    ).write.parquet(src)
+    snap = spark.read.parquet(src)
+    with job_group(spark, "merge-sizing"):
+        assert maintenance._sized_buckets(snap) == 1
+    assert group_jobs(spark, "merge-sizing") == 0
+
+    path = str(tmp_path / "state_sized")
+    maintenance.merge_snapshot(spark, path, snap, None, key="pid", epoch=1)
+    assert _layout(path) == {"key": "pid", "n_buckets": 1}
+    assert maintenance.bucket_dirs(path) == ["__bucket=0"]
+    assert _rows(spark, path) == {(k, k * 2) for k in range(1, 201)}
+
+
+def test_merge_snapshot_default_keeps_a_recorded_layout(spark, tmp_path):
+    """A frame Spark cannot size (createDataFrame: Long.MaxValue bytes)
+    gets the MERGE_BUCKETS cap, and every later default call adopts the
+    recorded 64 and merges correctly."""
+    path = str(tmp_path / "state_capped")
+    base = spark.createDataFrame(
+        [(k, k * 2) for k in range(1, 201)], "pid long, amt long"
+    )
+    maintenance.merge_snapshot(spark, path, base, None, key="pid", epoch=1)
+    assert _layout(path) == {"key": "pid", "n_buckets": maintenance.MERGE_BUCKETS}
+    assert len(maintenance.bucket_dirs(path)) > 1
+
+    src = str(tmp_path / "ups")
+    spark.createDataFrame(
+        [(k, -k) for k in range(1, 201, 5)], "pid long, amt long"
+    ).write.parquet(src)
+    ups = spark.read.parquet(src)  # small enough to size as 1 bucket
+    maintenance.merge_snapshot(spark, path, ups, None, key="pid", epoch=2)
+    assert _layout(path) == {"key": "pid", "n_buckets": maintenance.MERGE_BUCKETS}
+    assert _rows(spark, path) == {
+        (k, -k if k % 5 == 1 else k * 2) for k in range(1, 201)
+    }
+
+
+def test_merge_snapshot_default_refuses_an_unrecorded_layout(spark, tmp_path):
+    """A table that holds buckets but no _layout.json (written before
+    the sidecar existed) raises under a default call, which would
+    otherwise guess its bucket count; the explicit count still merges."""
+    import os
+
+    path = str(tmp_path / "state_legacy")
+    base = _mk_state(spark, path, buckets=4)
+    os.remove(os.path.join(path, maintenance._LAYOUT_FILE))
+    ups = spark.createDataFrame([(1, -1)], "pid long, amt long")
+    with pytest.raises(ValueError, match="records no layout.*n_buckets"):
+        maintenance.merge_snapshot(spark, path, ups, None, key="pid", epoch=2)
+    assert not os.path.exists(os.path.join(path, maintenance._LAYOUT_FILE))
+    maintenance.merge_snapshot(
+        spark, path, ups, None, key="pid", epoch=2, n_buckets=4
+    )
+    assert _layout(path) == {"key": "pid", "n_buckets": 4}
+    assert _rows(spark, path) == {
+        (k, -1 if k == 1 else k * 2) for k in range(1, 101)
+    }
+
+
 def test_merge_snapshot_clears_emptied_bucket(spark, tmp_path):
     """A bucket whose every key is removed must be CLEARED, not left
     stale (the hole plain dynamic-partition overwrite falls into when
@@ -663,22 +739,6 @@ def test_merge_snapshot_replay_reads_no_bucket_rows(spark, tmp_path, monkeypatch
     assert _rows(spark, path) == {tuple(r) for r in s1.collect()}
 
 
-def _crash_rename_after(monkeypatch, n_calls):
-    """Patch os.rename to die after its n-th successful call."""
-    import os
-
-    real = os.rename
-    state = {"left": n_calls}
-
-    def flaky(src, dst):
-        if state["left"] == 0:
-            raise RuntimeError("injected crash")
-        state["left"] -= 1
-        return real(src, dst)
-
-    monkeypatch.setattr(os, "rename", flaky)
-
-
 def test_merge_snapshot_crash_between_renames_recovers(
     spark, tmp_path, monkeypatch
 ):
@@ -699,7 +759,7 @@ def test_merge_snapshot_crash_between_renames_recovers(
         (k, k * 100) if k % 3 == 1 else (k, k * 2) for k in range(1, 201)
     }
     # crash after the FIRST bucket's aside rename (its swap is half-done)
-    _crash_rename_after(monkeypatch, 1)
+    crash_rename_after(monkeypatch, 1)
     with pytest.raises(RuntimeError, match="injected crash"):
         merge_snapshot(spark, path, ups, None, key="pid", epoch=2, n_buckets=4)
     monkeypatch.undo()
@@ -767,7 +827,7 @@ def test_merge_snapshot_first_merge_crash_resumes(spark, tmp_path, monkeypatch):
     base = spark.createDataFrame(
         [(k, k * 2) for k in range(1, 201)], "pid long, amt long"
     )
-    _crash_rename_after(monkeypatch, 1)
+    crash_rename_after(monkeypatch, 1)
     with pytest.raises(RuntimeError, match="injected crash"):
         merge_snapshot(spark, path, base, None, key="pid", epoch=1, n_buckets=4)
     monkeypatch.undo()
@@ -775,6 +835,42 @@ def test_merge_snapshot_first_merge_crash_resumes(spark, tmp_path, monkeypatch):
     assert r == {"written": 3, "skipped": 1, "cleared": 0}
     assert _row_list(spark, path) == sorted(map(tuple, base.collect()))
     assert [_read_mark(path, b) for b in range(4)] == [1, 1, 1, 1]
+    assert not [d for d in os.listdir(path) if d.startswith(".staging_epoch_")]
+
+
+@pytest.mark.parametrize("replayed", ["bucket0", "nothing"])
+def test_merge_snapshot_resumes_a_commit_its_keys_do_not_touch(
+    spark, tmp_path, monkeypatch, replayed
+):
+    """A first merge crashes after its first bucket lands with its
+    marker. A replay of the same epoch whose keys all hash to that
+    marked bucket, or that has no key at all, still finishes the staged
+    commit of the other three, instead of deleting the only copy of
+    their rows or leaving it staged."""
+    import os
+
+    from abr_etl_spark.operators.maintenance import (
+        _bucket_expr,
+        _read_mark,
+        merge_snapshot,
+    )
+
+    path = str(tmp_path / "state_foreign_resume")
+    base = spark.createDataFrame(
+        [(k, k * 2) for k in range(1, 201)], "pid long, amt long"
+    )
+    crash_rename_after(monkeypatch, 1)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        merge_snapshot(spark, path, base, None, key="pid", epoch=1, n_buckets=4)
+    monkeypatch.undo()
+    assert [_read_mark(path, b) for b in range(4)] == [1, None, None, None]
+    in_b0 = base.where(_bucket_expr("pid", 4) == 0)
+    if replayed == "nothing":
+        in_b0 = in_b0.limit(0)
+    r = merge_snapshot(spark, path, in_b0, None, key="pid", epoch=1, n_buckets=4)
+    skipped = int(replayed == "bucket0")
+    assert r == {"written": 3, "skipped": skipped, "cleared": 0}
+    assert _row_list(spark, path) == sorted(map(tuple, base.collect()))
     assert not [d for d in os.listdir(path) if d.startswith(".staging_epoch_")]
 
 
@@ -865,7 +961,7 @@ def test_merge_snapshot_stale_staging_from_other_epoch_raises(
     path = str(tmp_path / "state_stale")
     _mk_state(spark, path, n=50, buckets=4)
     ups = spark.createDataFrame([(1, 111)], "pid long, amt long")
-    _crash_rename_after(monkeypatch, 0)
+    crash_rename_after(monkeypatch, 0)
     with pytest.raises(RuntimeError, match="injected crash"):
         merge_snapshot(spark, path, ups, None, key="pid", epoch=2, n_buckets=4)
     monkeypatch.undo()

@@ -4,6 +4,7 @@ inferred types is refused until it is migrated, malformed drops leave
 the lake readable, and the flow keeps to its Spark-job budget."""
 
 import csv
+import json
 import os
 import uuid
 
@@ -13,7 +14,7 @@ from pyspark.sql import functions as F
 from abr_etl_spark import pipeline
 from abr_etl_spark.operators import maintenance
 from abr_etl_spark.sources import lake, routed_ingest
-from tests.conftest import group_jobs, job_group
+from tests.conftest import crash_rename_after, group_jobs, job_group
 
 DS = "Agency_Data"
 HEADER = "pid|abn|org_nm|son_pc|acn|son_dpid"
@@ -296,6 +297,15 @@ def test_run_weekly_reads_only_the_two_compared_partitions(
     )
     groups = {}
     _label(spark, monkeypatch, lake, "read_lake", groups)
+    read = []
+    labelled = lake.read_lake
+    monkeypatch.setattr(
+        lake,
+        "read_lake",
+        lambda spark, path, parts=None: read.append(parts) or labelled(
+            spark, path, parts
+        ),
+    )
     # p1's last landed son_dpid is "39"; p2 is unchanged; p3 is new
     drop = _drop(
         tmp_path / "w41",
@@ -303,7 +313,9 @@ def test_run_weekly_reads_only_the_two_compared_partitions(
         ["p1|1|A|0800|1|9", "p2|2|B|0870|2|2", "p3|3|C|0810|3|3"],
     )
     res = pipeline.run_weekly(spark, _cfg(tmp_path, drop)).results[DS]
-    assert groups["calls"]["read_lake"] == 1
+    # the new merged table takes the newest snapshot, read on its own
+    assert read == [["2018-10-07"], ["2018-10-07", weeks[-1]]]
+    assert groups["calls"]["read_lake"] == 2
     assert group_jobs(spark, groups["read_lake"]) == 0
     assert (res["newest"], res["previous"]) == ("2018-10-07", weeks[-1])
     assert set(_csv_rows(res["updated_csv"])) == {"p1"}
@@ -349,3 +361,164 @@ def test_drop_without_a_delta_dataset_file_says_why(spark, tmp_path):
     assert _contents(tmp_path / "merged") == merged_before
     updated = tmp_path / "export/DELTA/UPDATED" / DS / "importdate=2019-04-29"
     assert not os.path.exists(updated)
+
+
+# --------------------------------------------------- merged-table bootstrap
+
+
+def _feed_drops(tmp_path, weeks, last=(10, 4, 4)):
+    """``weeks`` drops of a 300-row Agency_Data feed (seed 7), each
+    week updating, removing and adding 10, 4 and 4 rows (the last week
+    ``last``); returns the feed, at its last week, and the drop dirs."""
+    from perfbench.abrgen import AbrFeed
+
+    feed = AbrFeed(7, 300)
+    drops = []
+    for w in range(weeks):
+        if w:
+            feed.advance(*(last if w == weeks - 1 else (10, 4, 4)))
+        drops.append(tmp_path / f"feed{w}")
+        feed.write_drop(str(drops[-1]), datasets=(DS,))
+    return feed, drops
+
+
+def _late_cfg(tmp_path, drop, merge=True, **kw):
+    return pipeline.WeeklyConfig(
+        drop_dir=str(drop),
+        lake_root=str(tmp_path / "lake"),
+        datasets=(DS,),
+        merge_dir=str(tmp_path / "merged") if merge else None,
+        **kw,
+    )
+
+
+def _assert_merged_is_newest(spark, tmp_path, feed):
+    merged = maintenance.read_merged_snapshot(spark, str(tmp_path / "merged" / DS))
+    newest = lake.read_lake(spark, str(tmp_path / "lake/DATA" / DS)).where(
+        F.col("importdate") == feed.date.isoformat()
+    )
+    cols = sorted(merged.columns)
+    got = {tuple(r) for r in merged.select(*cols).collect()}
+    assert {r[cols.index("pid")] for r in got} == set(feed.register)
+    assert got == {tuple(r) for r in newest.select(*cols).collect()}
+
+
+def _layout_buckets(path):
+    with open(os.path.join(path, maintenance._LAYOUT_FILE)) as fh:
+        return json.load(fh)["n_buckets"]
+
+
+def _staging(path):
+    return [d for d in os.listdir(path) if d.startswith(".staging_epoch_")]
+
+
+@pytest.mark.parametrize(
+    "weeks,last,buckets,renames",
+    [
+        (3, (10, 4, 4), None, 0),
+        (3, (10, 4, 4), 4, 1),
+        (1, None, 4, 1),
+        (3, (0, 0, 0), 4, 1),
+    ],
+    ids=["late-sized", "late-4-buckets", "first-week", "late-unchanged-week"],
+)
+def test_first_merge_crash_replays_to_the_register(
+    spark, tmp_path, monkeypatch, weeks, last, buckets, renames
+):
+    """The first merge into a merged table crashes in its rename commit:
+    before any bucket lands (one sized bucket), or after the first of
+    four lands with its marker. The table is set late (week 3) or in a
+    first week (a lake of one snapshot), where the replay merges the
+    full snapshot again. In the last case the week repeats the previous
+    one: the replay finds a bucket, so it merges the week's delta, which
+    is empty. Every replay resumes the staged commit and leaves the
+    week's register."""
+    feed, drops = _feed_drops(tmp_path, weeks, last)
+    for d in drops[:-1]:
+        pipeline.run_weekly(spark, _late_cfg(tmp_path, d, merge=False))
+    crash_rename_after(monkeypatch, renames)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        pipeline.run_weekly(
+            spark, _late_cfg(tmp_path, drops[-1], merge_buckets=buckets)
+        )
+    monkeypatch.undo()
+    merged = str(tmp_path / "merged" / DS)
+    assert len(maintenance.bucket_dirs(merged)) == renames
+    assert _staging(merged)
+    pipeline.run_weekly(spark, _late_cfg(tmp_path, drops[-1], merge_buckets=buckets))
+    _assert_merged_is_newest(spark, tmp_path, feed)
+    assert not _staging(merged)
+
+
+@pytest.mark.parametrize(
+    "split,buckets", [(False, 1), (True, 4)], ids=["default-split", "small-split"]
+)
+def test_merge_dir_set_on_a_lake_with_history_takes_the_full_snapshot(
+    spark, tmp_path, monkeypatch, split, buckets
+):
+    """Two weeks land without a merged table; the third sets merge_dir.
+    The new table holds the week's whole register, not the week's
+    delta, and is sized from the newest partition read on its own: one
+    bucket at the default scan split. With a split of a third of one
+    week's bytes (set around the merge only, so the ingest is not split
+    too) that is 4 buckets, where the CDC's two-partition read, whose
+    plan estimate keeps both partitions' bytes under the importdate
+    filter, would give 8."""
+    feed, drops = _feed_drops(tmp_path, 3)
+    for d in drops[:2]:
+        pipeline.run_weekly(spark, _late_cfg(tmp_path, d, merge=False))
+    table = str(tmp_path / "lake/DATA" / DS)
+    week2 = lake.discover_partitions_listing(table)[-1]
+    plan = lake.read_lake(spark, table, [week2]).drop("importdate")._jdf
+    stats = plan.queryExecution().optimizedPlan().stats()
+    small = str(int(str(stats.sizeInBytes())) // 3)
+    conf = "spark.sql.files.maxPartitionBytes"
+    default = spark.conf.get(conf)
+    real = maintenance.merge_snapshot
+
+    def small_split(fn, *args, **kw):
+        spark.conf.set(conf, small)
+        try:
+            return fn(*args, **kw)
+        finally:
+            spark.conf.set(conf, default)
+
+    if split:
+        monkeypatch.setattr(
+            maintenance, "merge_snapshot", lambda *a, **kw: small_split(real, *a, **kw)
+        )
+    res = pipeline.run_weekly(spark, _late_cfg(tmp_path, drops[2])).results[DS]
+    assert res["merge"] == {"written": buckets, "skipped": 0, "cleared": 0}
+    _assert_merged_is_newest(spark, tmp_path, feed)
+    merged = str(tmp_path / "merged" / DS)
+    assert _layout_buckets(merged) == buckets
+    assert len(maintenance.bucket_dirs(merged)) == buckets
+    newest = feed.date.isoformat()
+    alone = lake.read_lake(spark, table, [newest])
+    both = lake.read_lake(spark, table, [newest, week2]).where(
+        F.col("importdate").cast("string") == newest
+    )
+    sized = [
+        small_split(maintenance._sized_buckets, df.drop("importdate"))
+        for df in (alone, both)
+    ]
+    assert sized == [4, 8]
+
+
+def test_default_merge_writes_one_file_per_week(spark, tmp_path):
+    """With the default WeeklyConfig a small feed's merged table is one
+    bucket, so each week's merge writes exactly one file and the table
+    stays one file (a fixed MERGE_BUCKETS layout would write dozens)."""
+    feed, drops = _feed_drops(tmp_path, 3)
+    merged = str(tmp_path / "merged" / DS)
+    for d in drops:
+        res = pipeline.run_weekly(spark, _late_cfg(tmp_path, d)).results[DS]
+        assert res["merge"]["written"] == 1
+        files = [
+            f
+            for _, _, fs in os.walk(merged)
+            for f in fs
+            if f.endswith(".parquet")
+        ]
+        assert len(files) == 1
+    _assert_merged_is_newest(spark, tmp_path, feed)
