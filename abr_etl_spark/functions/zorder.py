@@ -5,8 +5,7 @@ DuckDB (`div=' // '`) -- unrolled with literal powers of two so neither
 engine needs variable bit shifts, and bit-for-bit equal on non-negative
 inputs (where truncating and flooring integer division agree).
 
-Used by plans/analytics8.zorder_layout (the locality report + oracle)
-and operators/maintenance.write_zordered (the clustering writer).
+Used by plans/analytics8.zorder_layout (the locality report + oracle).
 """
 
 from __future__ import annotations

@@ -1,8 +1,8 @@
 """Join strategy utilities for skew and co-location at scale.
 
 AQE handles moderate skew (session.py enables skewJoin); these utilities
-cover the cases AQE can't: pathological hot keys in aggregations
-(two-phase salted agg) and repeated fact-fact joins (bucketed tables that
+cover the cases AQE can't: pathological hot keys on a join that must
+shuffle (salted join) and repeated fact-fact joins (bucketed tables that
 eliminate the shuffle entirely).
 """
 
@@ -44,27 +44,6 @@ def salted_join(
     return (
         salted_l.join(salted_s, on=[key, "__salt"], how=how).drop("__salt")
     )
-
-
-def two_phase_agg(
-    df: DataFrame,
-    key: str,
-    agg_col: str,
-    *,
-    salt: int = 16,
-) -> DataFrame:
-    """Hot-key-safe sum: partial agg on (key, salt), then final on key.
-
-    Spark's hash aggregate already does map-side partials; the explicit
-    salted phase additionally splits a hot key ACROSS reducers in the
-    first shuffle, bounding any single task. Output: (key, sum_<agg_col>).
-    """
-    partial = (
-        df.withColumn("__salt", (F.rand(seed=42) * salt).cast("int"))
-        .groupBy(key, "__salt")
-        .agg(F.sum(agg_col).alias("__part"))
-    )
-    return partial.groupBy(key).agg(F.sum("__part").alias(f"sum_{agg_col}"))
 
 
 def write_bucketed(

@@ -1,12 +1,18 @@
-"""Lake maintenance: small-file compaction and per-dataset transforms.
+"""Lake maintenance: small-file compaction, per-dataset transforms, and
+the current-state table the weekly CDC is merged into.
 
 Compaction is THE recurring ops problem of streaming/weekly ingest at
 scale: thousands of small files per partition destroy scan throughput
 (per-file open cost, tiny row groups, starved vectorized readers).
+finish_compactions settles a compaction that crashed.
 
 The transform registry realizes the reference's TransformLocation
 placeholder (transform.go:3-7, empty ``locationTransformSQL``): named SQL
 transforms applied to a dataset between ingest and lake write.
+
+merge_snapshot applies a week's CDC to a hash-bucketed current-state
+table through a staged, crash-safe rename commit; read_merged_snapshot
+reads it back and vacuum_snapshot removes what crashed commits left.
 """
 
 from __future__ import annotations
@@ -153,285 +159,6 @@ def location_transform(df: DataFrame) -> DataFrame:
     return out
 
 
-def _bucket_case_sql(col: str, bounds: list[float]) -> str:
-    """Unrolled binary search: map ``col`` to its quantile bucket in
-    [0, len(bounds)+1) via a depth-log2(B) nested CASE over the LITERAL
-    sorted inner boundaries -- log2(B) comparisons per row, pure
-    JVM-side arithmetic, no join and no shuffle (the map-side
-    range-id assignment a lakehouse OPTIMIZE ZORDER does after its
-    boundary-sampling job)."""
-
-    def rec(lo: int, hi: int) -> str:
-        if hi - lo == 1:
-            return str(lo)
-        mid = (lo + hi) // 2
-        b = repr(float(bounds[mid - 1]))
-        return (
-            f"(CASE WHEN {col} < {b} THEN {rec(lo, mid)}"
-            f" ELSE {rec(mid, hi)} END)"
-        )
-
-    return rec(0, len(bounds) + 1)
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    x: str,
-    y: str,
-    *,
-    bits: int = 8,
-    n_files: int = 8,
-) -> int:
-    """Write ``df`` as parquet clustered on the z-order (Morton)
-    interleave of two numeric SQL expressions -- the layout that gives
-    every output file a bounded rectangle in BOTH dimensions, so
-    per-file (and per-row-group) min/max column stats prune scans
-    filtered on either one (the reason lakehouse tables z-order instead
-    of sorting by a single key; plans/analytics8.zorder_layout is the
-    read-side locality report over the same interleave formula).
-
-    Each dimension is first RANK-BUCKETED into 2^bits quantile buckets:
-    one approxQuantile pass per dimension computes the 2^bits - 1 inner
-    boundaries (a column-pruned aggregation job, deterministic GK
-    summaries, nothing shuffled), and each row's bucket is then an
-    unrolled log2-depth binary-search CASE over those literal
-    boundaries -- so ARBITRARY key domains (beyond 2^bits, negative,
-    skewed) cluster correctly and monotonically; distant values can
-    never alias into the same Morton cell the way a raw pmod fold
-    would. The Morton interleave runs on the bucket ids, which are
-    non-negative and < 2^bits by construction. (Boundary comparison is
-    in DOUBLE: above 2^53 adjacent integers may share a bucket --
-    still monotonic, so pruning degrades gracefully, never aliases.)
-
-    Mechanics after bucketing: repartitionByRange on the z-key
-    (range-sampled boundaries -> balanced files regardless of key skew)
-    + sortWithinPartitions, helper columns projected away before the
-    write. Two metadata-scale quantile jobs plus the ONE range exchange
-    any clustering write needs. Returns the output file count
-    (<= n_files; the range partitioner may emit fewer for tiny
-    inputs). Locality + file-level pruning contracts are
-    pytest-asserted (tests/test_maintenance.py).
-    """
-    import glob
-    import os
-
-    from abr_etl_spark.functions.zorder import zkey_sql
-
-    n_buckets = 1 << bits
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    staged = df.withColumn("__zx", F.expr(x).cast("double")).withColumn(
-        "__zy", F.expr(y).cast("double")
-    )
-    bx, by = staged.stat.approxQuantile(
-        ["__zx", "__zy"], probs, 1.0 / (4 * n_buckets)
-    )
-    # materialize the bucket ids ONCE per row -- zkey_sql substitutes its
-    # operand text once per bit, which would re-run the binary search
-    # 2*bits times per row if handed the CASE expression directly
-    bucketed = staged.withColumn(
-        "__zxb", F.expr(_bucket_case_sql("__zx", bx)).cast("long")
-    ).withColumn("__zyb", F.expr(_bucket_case_sql("__zy", by)).cast("long"))
-    zk = zkey_sql("__zxb", "__zyb", " DIV ", bits=bits)
-    (
-        bucketed.withColumn("__zkey", F.expr(zk))
-        .repartitionByRange(n_files, "__zkey")
-        .sortWithinPartitions("__zkey")
-        .drop("__zkey", "__zx", "__zy", "__zxb", "__zyb")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    files = [
-        f
-        for f in glob.glob(os.path.join(path, "part-*"))
-        if os.path.isfile(f) and not f.endswith(".crc")
-    ]
-    # plain-column cluster keys get a per-file min/max manifest so
-    # read_zordered can do FILE-level pruning (the skipping layer a
-    # vanilla parquet scan lacks: Spark only drops row groups inside
-    # each reader task, never whole files)
-    cols = [c for c in (x, y) if c in df.columns]
-    if cols:
-        _write_zorder_manifest(path, files, cols, spark=df.sparkSession)
-    return len(files)
-
-
-ZORDER_MANIFEST = "_zorder_manifest.json"
-
-
-#: file count above which manifest footer reads fan out over executors
-#: instead of a driver loop (each footer read is ~1 ms locally but
-#: ~10-50 ms against object storage; 10^5 files would serialize minutes
-#: on the driver).
-DIST_MANIFEST_MIN = 256
-
-
-#: footer min/max types the JSON manifest can carry verbatim; anything
-#: else (timestamp/date/binary pyarrow stats objects) is skipped so the
-#: conservative reader simply never prunes on that column.
-_JSON_SAFE_STATS = (bool, int, float, str)
-
-
-def _footer_stats(f: str, cols: list[str]) -> dict:
-    """Min/max of ``cols`` for ONE parquet file from its footer only
-    (no data pages touched). Conservative on every degenerate input:
-    a column absent from the file, with any row group missing stats,
-    or whose stats are not JSON-serializable (timestamp/date/binary)
-    is omitted -- read_zordered then never prunes on it, it never
-    raises (write_stats_manifest is advertised for ANY parquet dir)."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(f).metadata
-    names = md.schema.names
-    stats: dict[str, list] = {}
-    for c in cols:
-        if c not in names:
-            continue
-        j = names.index(c)
-        mins, maxs = [], []
-        for i in range(md.num_row_groups):
-            st = md.row_group(i).column(j).statistics
-            if (
-                st is None
-                or not st.has_min_max
-                or not isinstance(st.min, _JSON_SAFE_STATS)
-                or not isinstance(st.max, _JSON_SAFE_STATS)
-            ):
-                mins, maxs = [], []
-                break
-            mins.append(st.min)
-            maxs.append(st.max)
-        if mins:
-            stats[c] = [min(mins), max(maxs)]
-    return {"file": os.path.basename(f), "stats": stats}
-
-
-def _manifest_entries_distributed(
-    spark: SparkSession, files: list[str], cols: list[str]
-) -> list[dict]:
-    """Footer reads fanned out over executors (Arrow mapInPandas over
-    the FILE LIST, not the data) -- the 100 TB path where 10^5 footers
-    would serialize a driver loop. Only (file, stats-json) tuples come
-    back; executors must share the filesystem (true of any cluster
-    deployment)."""
-    import json
-
-    import pandas as pd
-
-    cols_b = list(cols)
-
-    def compute(batches):
-        for pdf in batches:
-            out = [
-                (
-                    (e := _footer_stats(p, cols_b))["file"],
-                    json.dumps(e["stats"]),
-                )
-                for p in pdf["path"]
-            ]
-            yield pd.DataFrame(out, columns=["file", "stats"])
-
-    fdf = spark.createDataFrame(
-        [(f,) for f in sorted(files)], "path string"
-    ).repartition(min(len(files) // 32 + 1, 64))
-    rows = fdf.mapInPandas(compute, "file string, stats string").collect()
-    return sorted(
-        ({"file": r.file, "stats": json.loads(r.stats)} for r in rows),
-        key=lambda e: e["file"],
-    )
-
-
-def _write_zorder_manifest(
-    path: str,
-    files: list[str],
-    cols: list[str],
-    spark: SparkSession | None = None,
-) -> None:
-    """Per-file min/max stats for the cluster columns, from the parquet
-    FOOTERS only (no data read) -- the write-time metadata a lakehouse
-    table format keeps in its log. Driver-side below DIST_MANIFEST_MIN
-    files (metadata-scale loop); fanned out over executors above it."""
-    import json
-    import os
-
-    if spark is not None and len(files) >= DIST_MANIFEST_MIN:
-        entries = _manifest_entries_distributed(spark, files, cols)
-    else:
-        entries = [_footer_stats(f, cols) for f in sorted(files)]
-    with open(os.path.join(path, ZORDER_MANIFEST), "w") as fh:
-        json.dump(entries, fh)
-
-
-def read_zordered(
-    spark: SparkSession,
-    path: str,
-    ranges: dict[str, tuple] | None = None,
-) -> tuple[DataFrame, int]:
-    """Read a write_zordered directory with FILE-level min/max pruning:
-    files whose manifest rectangle misses every ``{col: (lo, hi)}``
-    range are never handed to the scan at all (the reader still applies
-    row-group pruning inside the survivors). Pruning is conservative --
-    a file is read unless its stats PROVE it irrelevant -- so callers
-    apply their .where() as usual. Returns (df, n_files_selected).
-
-    Falls back to the plain directory scan when no manifest exists or a
-    queried column has no stats. The file-list decision is driver-side
-    over manifest entries (metadata-scale, same as any lakehouse
-    planner)."""
-    import json
-    import os
-
-    manifest = os.path.join(path, ZORDER_MANIFEST)
-    if not ranges or not os.path.exists(manifest):
-        df = spark.read.parquet(path)
-        return df, -1
-    with open(manifest) as fh:
-        entries = json.load(fh)
-    keep = []
-    for e in entries:
-        ok = True
-        for c, (lo, hi) in ranges.items():
-            st = e["stats"].get(c)
-            if st is not None and (st[1] < lo or st[0] > hi):
-                ok = False
-                break
-        if ok:
-            keep.append(os.path.join(path, e["file"]))
-    if not keep:  # provably empty result; keep the schema via one file
-        df = spark.read.parquet(
-            os.path.join(path, entries[0]["file"])
-        ).limit(0)
-        return df, 0
-    return spark.read.parquet(*keep), len(keep)
-
-
-def write_stats_manifest(
-    spark: SparkSession, path: str, cols: list[str]
-) -> int:
-    """Attach a file-level min/max manifest to ANY existing parquet
-    directory (not just write_zordered output) -- the lake-wide
-    secondary index: run it over a hot partition after compaction and
-    read_zordered's pruning reader works there unchanged (it only
-    consults the manifest). Stats come from footers only; the read
-    fans out over executors past DIST_MANIFEST_MIN files. Returns the
-    number of files indexed."""
-    import glob
-    import os
-
-    files = [
-        f
-        for pat in ("part-*", "*.parquet")
-        for f in glob.glob(os.path.join(path, pat))
-        if os.path.isfile(f) and not f.endswith(".crc")
-    ]
-    files = sorted(set(files))
-    if files:
-        _write_zorder_manifest(path, files, cols, spark=spark)
-    return len(files)
-
-
 # ------------------------------------------------------------- CDC apply
 
 #: cap on the bucket count merge_snapshot sizes a new table with: the
@@ -449,7 +176,7 @@ _BUCKET_COL = "__bucket"
 #: sidecar dir holding one tiny text file per bucket with the last
 #: epoch that rewrote it -- the METADATA the idempotence gate reads
 #: (leading underscore: invisible to Spark's file listing, like
-#: _SUCCESS / _zorder_manifest).
+#: _SUCCESS / _layout.json).
 _MARKS_DIR = "_epoch_marks"
 
 
@@ -620,8 +347,10 @@ def _check_layout(
         if bucket_dirs(path):
             raise ValueError(
                 f"merge_snapshot: {path} holds buckets but records no "
-                f"layout ({_LAYOUT_FILE}); pass the n_buckets it was "
-                "written with"
+                f"layout ({_LAYOUT_FILE}); record it once with "
+                f"merge_snapshot(spark, {path!r}, <empty frame>, None, "
+                f"key={key!r}, epoch=<any>, n_buckets=<the count it was "
+                "written with>), which writes no bucket"
             )
         n_buckets = _sized_buckets(upserts)
     want = {"key": key, "n_buckets": int(n_buckets)}

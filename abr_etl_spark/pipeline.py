@@ -38,8 +38,14 @@ from pyspark.sql import functions as F
 
 from abr_etl_spark.operators import delta, maintenance
 from abr_etl_spark.sources import lake, routed_ingest
+from abr_etl_spark.sources.abr_schemas import AGENCY_DELTA_KEY
 
 log = logging.getLogger("abr_etl_spark.pipeline")
+
+#: the datasets whose two newest snapshots are compared (and, with
+#: merge_dir, merged), as the reference computes only the agency delta
+#: (agency-delta.go); their key is AGENCY_DELTA_KEY
+_DELTA_DATASETS = ("Agency_Data",)
 
 
 class PipelineDisabled(RuntimeError):
@@ -51,9 +57,6 @@ class WeeklyConfig:
     drop_dir: str
     lake_root: str
     datasets: tuple[str, ...] = tuple(routed_ingest.FILE_ROUTES)
-    key_col: str = "pid"
-    sep: str = "|"
-    delta_datasets: tuple[str, ...] = ("Agency_Data",)
     export_dir: str | None = None
     #: optional weekly zip drop (the reference's VIC_ABR_Extract.zip,
     #: extract.go:20-27): unzipped into drop_dir before routing.
@@ -69,12 +72,9 @@ class WeeklyConfig:
     #: on a lake with history), take the week's full snapshot; each
     #: later week merges its delta. The epoch is int(yyyymmdd), so
     #: replaying a week is a per-bucket metadata no-op that also resumes
-    #: a crashed commit.
+    #: a crashed commit. A new table's bucket count is sized from its
+    #: bytes (see maintenance.MERGE_BUCKETS) and later weeks keep it.
     merge_dir: str | None = None
-    #: hash-bucket count for the merged tables. None: the table's
-    #: recorded layout; a new table is sized from its bytes (see
-    #: maintenance.MERGE_BUCKETS).
-    merge_buckets: int | None = None
     results: dict = field(default_factory=dict)
     #: not a setting: the merge writes the buckets it rewrites
     #: compacted. Accepted as True for perfbench's callers.
@@ -235,7 +235,7 @@ def _require_text_tables(cfg: WeeklyConfig) -> None:
     Spark job)."""
     for ds in cfg.datasets:
         lake.require_text(os.path.join(cfg.lake_root, "DATA", ds))
-        if cfg.merge_dir and ds in cfg.delta_datasets:
+        if cfg.merge_dir and ds in _DELTA_DATASETS:
             lake.require_text(os.path.join(cfg.merge_dir, ds))
 
 
@@ -249,7 +249,7 @@ def _require_lake_columns(cfg: WeeklyConfig) -> None:
     file in the drop has nothing to check."""
     for ds in cfg.datasets:
         try:
-            header = routed_ingest.probe_drop_header(cfg.drop_dir, ds, cfg.sep)
+            header = routed_ingest.probe_drop_header(cfg.drop_dir, ds)
         except FileNotFoundError:
             continue
         lake.require_columns(os.path.join(cfg.lake_root, "DATA", ds), header)
@@ -287,9 +287,7 @@ def run_weekly(spark: SparkSession, cfg: WeeklyConfig) -> WeeklyConfig:
 
     for ds in cfg.datasets:
         try:
-            df = routed_ingest.ingest_delimited(
-                spark, cfg.drop_dir, ds, sep=cfg.sep
-            )
+            df = routed_ingest.ingest_delimited(spark, cfg.drop_dir, ds)
         except FileNotFoundError as exc:
             log.info("dataset %s: %s", ds, exc)
             cfg.results[ds] = {"skipped": str(exc)}
@@ -299,7 +297,7 @@ def run_weekly(spark: SparkSession, cfg: WeeklyConfig) -> WeeklyConfig:
         lake.write_partitioned(df, table_path)
         cfg.results[ds] = {"table_path": table_path}
 
-        if ds not in cfg.delta_datasets:
+        if ds not in _DELTA_DATASETS:
             continue
         merged = os.path.join(cfg.merge_dir, ds) if cfg.merge_dir else None
         try:
@@ -323,20 +321,19 @@ def run_weekly(spark: SparkSession, cfg: WeeklyConfig) -> WeeklyConfig:
                 merged,
                 lake.read_lake(spark, table_path, [newest]).drop("importdate"),
                 None,
-                key=cfg.key_col,
+                key=AGENCY_DELTA_KEY,
                 epoch=int(newest.replace("-", "")),
-                n_buckets=cfg.merge_buckets,
             )
             merged = None
         if previous is None:
             continue
         new_df, old_df = delta.snapshot_pair(
             lake.read_lake(spark, table_path, [newest, previous]),
-            cfg.key_col,
+            AGENCY_DELTA_KEY,
             newest=newest,
             previous=previous,
         )
-        changed, rem = _weekly_cdc(new_df, old_df, cfg.key_col)
+        changed, rem = _weekly_cdc(new_df, old_df, AGENCY_DELTA_KEY)
         cfg.results[ds].update(
             {"newest": newest, "previous": previous}
         )
@@ -358,9 +355,8 @@ def run_weekly(spark: SparkSession, cfg: WeeklyConfig) -> WeeklyConfig:
                         merged,
                         changed.drop(_ADDED, "importdate"),
                         rem,
-                        key=cfg.key_col,
+                        key=AGENCY_DELTA_KEY,
                         epoch=int(newest.replace("-", "")),
-                        n_buckets=cfg.merge_buckets,
                     )
                 finally:
                     rem.unpersist()

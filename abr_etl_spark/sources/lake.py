@@ -370,7 +370,7 @@ def read_lake(
     The schema is mergeSchema's, learnt on the driver from the footers
     of the files read (``read_parquet``; no Spark job): the weekly-feed
     evolution contract (additive columns only -- see
-    ``abr_schemas.ingest_abr``) means partitions written before a
+    ``pipeline._require_lake_columns``) means partitions written before a
     column appeared lack it on disk, and the merge surfaces the new
     column as NULL there instead of the read schema being whichever
     file listed first. Destructive changes (drop / retype) are rejected
@@ -432,24 +432,6 @@ def newest_previous(
     if len(parts) < 2:
         raise ValueError("Not enough partitions to run delta")
     return parts[-1], parts[-2]
-
-
-def write_clustered(
-    df: DataFrame,
-    path: str,
-    cluster_col: str,
-    *,
-    n_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write parquet range-clustered on ``cluster_col``: rows are range-
-    partitioned then sorted within each file, so every file covers a
-    narrow value range and parquet min/max stats (zone maps) let any
-    engine skip whole files on range predicates -- the cheap 80% of an
-    index at 100 TB.
-    """
-    part = df.repartitionByRange(*( [n_files] if n_files else [] ), F.col(cluster_col))
-    part.sortWithinPartitions(cluster_col).write.mode(mode).parquet(path)
 
 
 def export_stable_csv(df: DataFrame, directory: str, filename: str) -> str:

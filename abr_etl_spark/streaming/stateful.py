@@ -52,72 +52,6 @@ def running_counts_stateful(events: DataFrame) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------- Spark 4 API
-# transformWithState (arbitrary-state v2): the Spark-4-native successor to
-# applyInPandasWithState -- typed state variables created in init(), TTL
-# support, timers, and initial-state bootstrap. The runtime requires
-# protobuf for the state-server protocol, which this environment doesn't
-# ship, so the operator is import-gated: running_counts_tws raises a clear
-# ImportError where protobuf is absent and the equivalence test skips.
-# (Same semantics as running_counts_stateful above; a deployment on a
-# protobuf-equipped cluster can switch between them freely.)
-# Availability re-checks: r8 absent, r9 absent, r10 absent, r11 absent
-# (2026-08-14), r12 absent (2026-08-15: `importlib.util.find_spec` finds
-# neither google.protobuf nor grpc), r13 absent (2026-08-15 and again
-# 2026-08-16: import google.protobuf still raises ModuleNotFoundError),
-# r15 absent (2026-08-16: re-checked, same ModuleNotFoundError),
-# r16 absent (2026-08-17: re-checked, same ModuleNotFoundError)
-# -- the gated twin stays pytest-skipped; promote to a driver-checked
-# key the round protobuf appears.
-
-try:  # pragma: no cover - exercised only where protobuf exists
-    import google.protobuf  # noqa: F401
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    _HAS_TWS = True
-
-    class _RunningCountProcessor(StatefulProcessor):
-        """Per-user cumulative count in a typed ValueState."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._count = handle.getValueState("count", "count LONG")
-
-        def handleInputRows(self, key, rows, timerValues):
-            prev = self._count.get()[0] if self._count.exists() else 0
-            total = prev + sum(len(pdf) for pdf in rows)
-            self._count.update((total,))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events_total": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-except ImportError:  # pragma: no cover
-    _HAS_TWS = False
-
-
-def running_counts_tws(events: DataFrame) -> DataFrame:
-    """Per-user cumulative event counts via transformWithState (Spark 4
-    arbitrary-state v2). Raises ImportError where the runtime lacks
-    protobuf; use running_counts_stateful (applyInPandasWithState) there."""
-    if not _HAS_TWS:
-        raise ImportError(
-            "transformWithState requires protobuf; use "
-            "running_counts_stateful on this runtime"
-        )
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_RunningCountProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 # Self-contained worker pickling: these module-level functions cross the
 # driver/worker boundary (Arrow/stateful UDFs). By default cloudpickle
 # serializes them BY REFERENCE, so a Python worker spawned from a driver

@@ -168,6 +168,24 @@ def split_bucket(spark, bucket, n=3):
     assert len(bucket_files(os.path.dirname(bucket))[os.path.basename(bucket)]) > 1
 
 
+def lay_out_merged(spark, table, n_buckets, key="pid"):
+    """Record ``n_buckets`` as the bucket layout of the merged table at
+    ``table``: one merge_snapshot of an empty frame, which writes
+    ``_layout.json`` and no bucket. Later merges, run_weekly's
+    included, keep that layout."""
+    from abr_etl_spark.operators import maintenance
+
+    maintenance.merge_snapshot(
+        spark,
+        str(table),
+        spark.createDataFrame([], f"{key} string"),
+        None,
+        key=key,
+        epoch=0,
+        n_buckets=n_buckets,
+    )
+
+
 def crash_rename_after(monkeypatch, n_calls):
     """Patch os.rename to die after its n-th successful call."""
     real = os.rename

@@ -261,32 +261,3 @@ def test_dup_inflation_zero_token_source_matches_oracle(spark, tmp_path):
         )
     finally:
         con.close()
-
-
-def test_stats_manifest_json_unsafe_and_missing_columns(spark, tmp_path):
-    """write_stats_manifest is advertised for ANY parquet directory:
-    timestamp/date stats (non-JSON-serializable pyarrow objects) and
-    absent columns must degrade to no-stats-for-that-column, never
-    raise (r9 ADVICE item 4); pruning on the surviving numeric column
-    still works."""
-    from abr_etl_spark.operators.maintenance import (
-        read_zordered,
-        write_stats_manifest,
-    )
-
-    p = str(tmp_path / "t.parquet")
-    spark.range(100).select(
-        F.col("id"),
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("ts"),
-        F.to_date(F.lit("2024-01-01")).alias("d"),
-    ).repartition(4, "id").write.mode("overwrite").parquet(p)
-    n = write_stats_manifest(spark, p, ["id", "ts", "d", "nope"])
-    assert n >= 1
-    df, n_files = read_zordered(spark, p, ranges={"id": (0, 5)})
-    assert 0 < n_files
-    assert df.where(F.col("id") <= 5).count() == 6
-    # ts/d/nope produced no stats; a range query on them reads all files
-    df2, n2 = read_zordered(
-        spark, p, ranges={"ts": ("2020-01-01", "2020-01-02")}
-    )
-    assert n2 == n  # conservative: no stats -> never pruned

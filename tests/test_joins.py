@@ -28,21 +28,6 @@ def test_salted_join_matches_plain(spark):
     )
 
 
-def test_two_phase_agg_matches_plain(spark):
-    l = load_table(spark, SF_ORACLE, "lineitem")
-    plain = {
-        r["l_orderkey"]: round(r["s"], 2)
-        for r in l.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("s"))
-        .collect()
-    }
-    salted = {
-        r["l_orderkey"]: round(r["sum_l_quantity"], 2)
-        for r in joins.two_phase_agg(l, "l_orderkey", "l_quantity").collect()
-    }
-    assert plain == salted
-
-
 def test_bucketed_join_has_no_exchange(spark, tmp_path):
     spark.sql("CREATE DATABASE IF NOT EXISTS bktest")
     spark.catalog.setCurrentDatabase("bktest")

@@ -110,32 +110,23 @@ def test_full_reference_flow_export(spark, lake_path, tmp_path):
     assert (n_updated, n_added) == (10, 5)
 
 
-def test_write_clustered_enables_file_skipping(spark, tmp_path):
-    from abr_etl_spark.sources.lake import write_clustered
-
-    df = spark.range(100000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-    )
-    path = str(tmp_path / "clustered")
-    write_clustered(df, path, "k", n_files=8)
-    import glob
-
-    import pyarrow.parquet as pq
-
-    files = glob.glob(f"{path}/part-*.parquet")
-    assert len(files) == 8
-    # each file covers a narrow, non-overlapping-ish range (zone maps)
-    ranges = []
-    for f in files:
-        md = pq.read_metadata(f)
-        col = md.row_group(0).column(0).statistics
-        ranges.append((col.min, col.max))
-    ranges.sort()
-    widths = [hi - lo for lo, hi in ranges]
-    assert max(widths) < 100000 / 4  # far narrower than the full domain
-    # and a range predicate reads correct results
-    got = spark.read.parquet(path).where(F.col("k").between(1000, 1999)).count()
-    assert got == 1000
+def test_schema_evolution_mergeschema(spark, tmp_path):
+    """A lake partition written BEFORE a column existed must read back
+    null-filled under the merged schema -- the schema-evolution
+    contract every long-lived lake needs (lake.read_parquet merges the
+    footers' schemas on the driver)."""
+    path = str(tmp_path / "evolving")
+    spark.createDataFrame(
+        [(1, "a"), (2, "b")], "id long, name string"
+    ).write.parquet(f"{path}/batch=1")
+    spark.createDataFrame(
+        [(3, "c", 9.5)], "id long, name string, score double"
+    ).write.parquet(f"{path}/batch=2")
+    back = lake.read_parquet(spark, path)
+    assert set(back.columns) == {"id", "name", "score", "batch"}
+    assert back.count() == 3
+    assert back.where(F.col("score").isNull()).count() == 2
+    assert back.where((F.col("id") == 3) & (F.col("score") == 9.5)).count() == 1
 
 
 def test_discover_partitions_listing_matches_scan(spark, lake_path):

@@ -1,4 +1,4 @@
-"""Compaction and the per-dataset transform registry."""
+"""Compaction, the per-dataset transform registry and the merged current-state table."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -98,283 +98,6 @@ def test_transform_registry_applies_location_rules(spark):
 def test_transform_registry_passthrough_unknown_dataset(spark):
     df = spark.createDataFrame([("x",)], "pid string")
     assert maintenance.apply_transform("Funds", df) is df
-
-
-def test_write_zordered_locality_beats_single_sort(spark, tmp_path):
-    """The z-ordered layout bounds per-file extent in BOTH dimensions;
-    a single-column sort bounds only its own. Compare mean normalized
-    per-file extents on a deterministic 2-D grid."""
-    from pyspark.sql import functions as F
-
-    from abr_etl_spark.operators import maintenance
-
-    side = 64
-    df = (
-        spark.range(side * side)
-        .select(
-            (F.col("id") % side).alias("a"),
-            (F.col("id") / side).cast("long").alias("b"),
-        )
-    )
-
-    def mean_extents(path):
-        got = (
-            spark.read.parquet(path)
-            .withColumn("f", F.input_file_name())
-            .groupBy("f")
-            .agg(
-                (F.max("a") - F.min("a")).alias("ea"),
-                (F.max("b") - F.min("b")).alias("eb"),
-            )
-            .collect()
-        )
-        n = len(got)
-        return (
-            sum(r.ea for r in got) / n / (side - 1),
-            sum(r.eb for r in got) / n / (side - 1),
-        )
-
-    zpath = str(tmp_path / "zorder")
-    n_files = maintenance.write_zordered(df, zpath, "a", "b", n_files=16)
-    assert 1 < n_files <= 16
-    za, zb = mean_extents(zpath)
-
-    spath = str(tmp_path / "singlesort")
-    (
-        df.repartitionByRange(16, "a")
-        .sortWithinPartitions("a")
-        .write.mode("overwrite")
-        .parquet(spath)
-    )
-    sa, sb = mean_extents(spath)
-
-    # single-column sort: a tightly bounded, b spans ~everything
-    assert sa < 0.2 and sb > 0.9
-    # z-order: BOTH dims bounded well below the full range
-    assert za < 0.6 and zb < 0.6
-    # and the z layout's worse dim beats the single-sort's worse dim
-    assert max(za, zb) < sb
-
-
-def test_write_zordered_roundtrip_preserves_rows(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from abr_etl_spark.operators import maintenance
-
-    df = spark.range(1000).select(
-        F.col("id").alias("a"), (F.col("id") * 7 % 1000).alias("b")
-    )
-    path = str(tmp_path / "z2")
-    maintenance.write_zordered(df, path, "a", "b", n_files=4)
-    back = spark.read.parquet(path)
-    assert back.count() == 1000
-    assert back.agg(F.sum("a")).collect()[0][0] == 999 * 1000 // 2
-
-
-def test_write_zordered_enables_rowgroup_pruning(spark, tmp_path):
-    """The point of the layout, measured: with a pushed-down range
-    filter on one dimension, the z-ordered files' parquet row-group
-    stats exclude most of the data AT THE SCAN (numOutputRows from the
-    executed plan), while a randomly-partitioned layout must surface
-    every row. Results are identical either way."""
-    from pyspark.sql import functions as F
-
-    from abr_etl_spark.operators import maintenance
-
-    side = 256
-    df = spark.range(side * side).select(
-        (F.col("id") % side).alias("a"),
-        (F.col("id") / side).cast("long").alias("b"),
-    )
-    zp, rp = str(tmp_path / "z"), str(tmp_path / "r")
-    maintenance.write_zordered(df, zp, "a", "b", n_files=16)
-    df.repartition(16).write.mode("overwrite").parquet(rp)
-
-    def scan_rows(path):
-        q = spark.read.parquet(path).where(
-            (F.col("a") >= 8) & (F.col("a") <= 15)
-        )
-        # collect, not count: count()'s executed plan is the aggregate
-        # (AQE re-plans it) and the scan node's metrics stay unpopulated
-        res = len(q.collect())
-        plan = q._jdf.queryExecution().executedPlan()
-
-        def walk(node):
-            out = []
-            if "Scan" in node.nodeName():
-                m = node.metrics()
-                it = m.keysIterator()
-                while it.hasNext():
-                    k = it.next()
-                    if k == "numOutputRows":
-                        out.append(m.apply(k).value())
-            for i in range(node.children().size()):
-                out += walk(node.children().apply(i))
-            return out
-
-        return res, sum(walk(plan))
-
-    n_z, scanned_z = scan_rows(zp)
-    n_r, scanned_r = scan_rows(rp)
-    assert n_z == n_r == side * 8  # identical results
-    assert scanned_r == side * side  # random layout reads everything
-    # clustered layout: most row groups statically excluded
-    assert scanned_z < 0.5 * scanned_r
-
-
-def _scan_metric(q, key):
-    """Sum a named metric over every Scan node of q's EXECUTED plan."""
-    plan = q._jdf.queryExecution().executedPlan()
-
-    def walk(node):
-        out = []
-        if "Scan" in node.nodeName():
-            m = node.metrics()
-            it = m.keysIterator()
-            while it.hasNext():
-                k = it.next()
-                if k == key:
-                    out.append(m.apply(k).value())
-        for i in range(node.children().size()):
-            out += walk(node.children().apply(i))
-        return out
-
-    return sum(walk(plan))
-
-
-def test_write_zordered_file_level_pruning_large_domain(spark, tmp_path):
-    """FILE-level min/max pruning on a key domain far beyond 2^16 -- the
-    regime where the old pmod fold aliased distant values into one
-    Morton cell. The quantile rank-bucketing keeps per-file rectangles
-    bounded on the ORIGINAL columns, so a 2-D predicate must read
-    strictly fewer files than were written ('numFiles' from the
-    executed scan), while an unsorted control layout prunes nothing.
-    Results are identical either way."""
-    from pyspark.sql import functions as F
-
-    from abr_etl_spark.operators import maintenance
-
-    side = 200
-    stride = 1_000_003  # domain spans ~2*10^8 >> 65536
-    df = spark.range(side * side).select(
-        ((F.col("id") % side) * stride).alias("a"),
-        ((F.col("id") / side).cast("long") * stride).alias("b"),
-    )
-    zp, rp = str(tmp_path / "zbig"), str(tmp_path / "rbig")
-    n_written = maintenance.write_zordered(df, zp, "a", "b", n_files=16)
-    assert n_written == 16
-    df.repartition(16).write.mode("overwrite").parquet(rp)
-
-    lo, hi = 10 * stride, 29 * stride  # 20 of 200 values per dim
-    ranges = {"a": (lo, hi), "b": (lo, hi)}
-
-    pruned, n_kept = maintenance.read_zordered(spark, zp, ranges)
-    qz = pruned.where(
-        (F.col("a").between(lo, hi)) & (F.col("b").between(lo, hi))
-    )
-    qr = spark.read.parquet(rp).where(
-        (F.col("a").between(lo, hi)) & (F.col("b").between(lo, hi))
-    )
-    n_z, n_r = len(qz.collect()), len(qr.collect())
-    files_z = _scan_metric(qz, "numFiles")
-    files_r = _scan_metric(qr, "numFiles")
-    assert n_z == n_r == 20 * 20  # identical results
-    assert files_r == 16  # unsorted control: every file read
-    # clustered layout: the 10%x10% query rectangle touches a strict
-    # minority of the 16 files; the manifest pruned the rest BEFORE the
-    # scan, and the executed plan's numFiles agrees with the planner
-    assert files_z == n_kept and files_z < 8, (files_z, n_kept)
-    # control sanity: without ranges the reader falls back to all files
-    allback, flag = maintenance.read_zordered(spark, zp)
-    assert flag == -1 and allback.count() == side * side
-
-
-def test_read_zordered_conservative_and_empty(spark, tmp_path):
-    """Stats pruning must be a conservative superset (never drops a
-    matching row) and a provably-empty range returns 0 rows with the
-    original schema, touching at most one footer."""
-    from pyspark.sql import functions as F
-
-    from abr_etl_spark.operators import maintenance
-
-    df = spark.range(10_000).select(
-        F.col("id").alias("a"), (F.col("id") * 3).alias("b")
-    )
-    zp = str(tmp_path / "zc")
-    maintenance.write_zordered(df, zp, "a", "b", n_files=8)
-
-    got, n_kept = maintenance.read_zordered(spark, zp, {"a": (500, 600)})
-    rows = got.where(F.col("a").between(500, 600)).count()
-    assert rows == 101 and 0 < n_kept < 8
-
-    empty, n0 = maintenance.read_zordered(
-        spark, zp, {"a": (100_000, 200_000)}
-    )
-    assert n0 == 0 and empty.count() == 0
-    assert empty.columns == ["a", "b"]
-
-
-def test_manifest_distributed_equals_driver_loop(spark, tmp_path):
-    """The executor-fanned footer-read path produces the IDENTICAL
-    manifest to the driver loop (same files, same stats, same order)."""
-    import glob
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from abr_etl_spark.operators import maintenance
-
-    df = spark.range(5000).select(
-        F.col("id").alias("a"), (F.col("id") * 13 % 5000).alias("b")
-    )
-    zp = str(tmp_path / "zm")
-    maintenance.write_zordered(df, zp, "a", "b", n_files=8)
-    files = [
-        f
-        for f in glob.glob(os.path.join(zp, "part-*"))
-        if os.path.isfile(f) and not f.endswith(".crc")
-    ]
-    driver = [maintenance._footer_stats(f, ["a", "b"]) for f in sorted(files)]
-    dist = maintenance._manifest_entries_distributed(spark, files, ["a", "b"])
-    assert dist == driver
-    # and the written manifest (driver path at this file count) matches
-    on_disk = json.load(open(os.path.join(zp, maintenance.ZORDER_MANIFEST)))
-    assert on_disk == driver
-
-
-def test_stats_manifest_on_plain_lake_partition(spark, tmp_path):
-    """The manifest + pruning reader work on ANY parquet directory: a
-    plain range-partitioned (non-z-ordered) lake partition gets
-    file-level pruning on its sort column after write_stats_manifest."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from abr_etl_spark.operators import maintenance
-
-    p = str(tmp_path / "lakepart")
-    (
-        spark.range(100_000)
-        .select(F.col("id").alias("k"), (F.col("id") % 13).alias("v"))
-        .repartitionByRange(10, "k")
-        .sortWithinPartitions("k")
-        .write.mode("overwrite")
-        .parquet(p)
-    )
-    n = maintenance.write_stats_manifest(spark, p, ["k"])
-    assert n == 10
-    assert os.path.exists(os.path.join(p, maintenance.ZORDER_MANIFEST))
-    got, kept = maintenance.read_zordered(
-        spark, p, {"k": (20_000, 29_999)}
-    )
-    rows = got.where(F.col("k").between(20_000, 29_999)).count()
-    assert rows == 10_000
-    # 10% of the key range: repartitionByRange SAMPLES boundaries, so
-    # the range can straddle up to 3 of the 10 files on an unlucky
-    # sample (r10 advice: observed kept=3 once) -- still a strict
-    # minority of the 10, which is the property under test
-    assert 0 < kept <= 3
 
 
 @pytest.mark.slow
@@ -593,7 +316,9 @@ def test_merge_snapshot_default_keeps_a_recorded_layout(spark, tmp_path):
 def test_merge_snapshot_default_refuses_an_unrecorded_layout(spark, tmp_path):
     """A table that holds buckets but no _layout.json (written before
     the sidecar existed) raises under a default call, which would
-    otherwise guess its bucket count; the explicit count still merges."""
+    otherwise guess its bucket count. The call the error names, an
+    empty frame with the explicit count, records the layout and writes
+    no bucket; a default call then merges."""
     import os
 
     path = str(tmp_path / "state_legacy")
@@ -603,10 +328,14 @@ def test_merge_snapshot_default_refuses_an_unrecorded_layout(spark, tmp_path):
     with pytest.raises(ValueError, match="records no layout.*n_buckets"):
         maintenance.merge_snapshot(spark, path, ups, None, key="pid", epoch=2)
     assert not os.path.exists(os.path.join(path, maintenance._LAYOUT_FILE))
-    maintenance.merge_snapshot(
-        spark, path, ups, None, key="pid", epoch=2, n_buckets=4
+    before = bucket_files(path)
+    rep = maintenance.merge_snapshot(
+        spark, path, ups.limit(0), None, key="pid", epoch=2, n_buckets=4
     )
+    assert rep == {"written": 0, "skipped": 0, "cleared": 0}
+    assert bucket_files(path) == before
     assert _layout(path) == {"key": "pid", "n_buckets": 4}
+    maintenance.merge_snapshot(spark, path, ups, None, key="pid", epoch=2)
     assert _rows(spark, path) == {
         (k, -1 if k == 1 else k * 2) for k in range(1, 101)
     }

@@ -7,7 +7,13 @@ import os
 import pytest
 
 from abr_etl_spark import pipeline
-from tests.conftest import bucket_files, group_jobs, job_group, split_bucket
+from tests.conftest import (
+    bucket_files,
+    group_jobs,
+    job_group,
+    lay_out_merged,
+    split_bucket,
+)
 
 
 def _write_drop(drop):
@@ -172,8 +178,8 @@ def test_run_weekly_cdc_chain_two_drops(spark, tmp_path):
         lake_root=str(tmp_path / "lake"),
         datasets=("Agency_Data",),
         merge_dir=str(tmp_path / "merged"),
-        merge_buckets=4,
     )
+    lay_out_merged(spark, tmp_path / "merged/Agency_Data", 4)
 
     # ---- week 1: bootstrap
     (drop / "VIC190422_ABR_Agency_Data.txt").write_text("\n".join(week1) + "\n")
@@ -233,9 +239,9 @@ def test_run_weekly_schema_evolution_across_weeks(spark, tmp_path):
             lake_root=str(lake_root),
             datasets=("Agency_Data",),
             merge_dir=str(merge_dir),
-            merge_buckets=4,
         )
 
+    lay_out_merged(spark, merge_dir / "Agency_Data", 4)
     # week 1: two columns
     drop1 = tmp_path / "drop1"
     drop1.mkdir()
@@ -309,7 +315,6 @@ def _merge_cfg(tmp_path, drop):
         lake_root=str(tmp_path / "lake"),
         datasets=("Agency_Data",),
         merge_dir=str(tmp_path / "merged"),
-        merge_buckets=8,
     )
 
 
@@ -345,6 +350,7 @@ def _two_weeks_counting_compactions(spark, tmp_path, monkeypatch, group):
     monkeypatch.setattr(maintenance, "compact_partition", counted)
     drop1, drop2, week2 = _two_week_drops(tmp_path)
     table = tmp_path / "merged/Agency_Data"
+    lay_out_merged(spark, table, 8)
     reps = []
     for drop, epoch in ((drop1, 20190422), (drop2, 20190429)):
         out = pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop))
@@ -411,9 +417,10 @@ def test_run_weekly_replay_after_compaction_crash_after_delete(
     from abr_etl_spark.operators import maintenance
 
     drop1, drop2, week2 = _two_week_drops(tmp_path)
+    table = tmp_path / "merged/Agency_Data"
+    lay_out_merged(spark, table, 8)
     pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop1))
     pipeline.run_weekly(spark, _merge_cfg(tmp_path, drop2))
-    table = tmp_path / "merged/Agency_Data"
     name = next(
         b
         for b in sorted(bucket_files(table))

@@ -403,37 +403,6 @@ def test_streaming_queries_vs_oracle(spark, ddb, key):
     assert_matches_oracle(df, ddb, streaming_queries.ORACLES[key], key)
 
 
-def test_running_counts_tws_equals_stateful(spark, tmp_path):
-    """Spark-4 transformWithState running counts == the
-    applyInPandasWithState implementation (and == a plain groupBy count
-    steady state). Skips where the runtime lacks protobuf (the
-    transformWithState state-server dependency)."""
-    import pytest as _pt
-
-    _pt.importorskip("google.protobuf")
-    src_dir = _stage_events(tmp_path)
-    stream = stream_ops.read_event_stream(spark, src_dir)
-    q = stream_ops.run_stream_to_memory(
-        stateful.running_counts_tws(stream), "tws_out", output_mode="update"
-    )
-    try:
-        got = {
-            (r["user_id"], r["n_events_total"])
-            for r in spark.sql(
-                "select user_id, max(n_events_total) as n_events_total "
-                "from tws_out group by user_id"
-            ).collect()
-        }
-        ev = load_table(spark, SF_SMOKE, "events")
-        want = {
-            (r["user_id"], r["n"])
-            for r in ev.groupBy("user_id").agg(F.count("*").alias("n")).collect()
-        }
-        assert got == want and len(got) > 0
-    finally:
-        q.stop()
-
-
 def test_driver_key_stream_running_counts_multibatch(spark):
     """The driver-facing stream_running_counts key must (a) equal the
     plain batch GROUP BY (the oracle's view) and (b) genuinely carry

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from abr_etl_spark import pipeline
 from abr_etl_spark.operators import maintenance
 from abr_etl_spark.sources import lake, routed_ingest
-from tests.conftest import crash_rename_after, group_jobs, job_group
+from tests.conftest import crash_rename_after, group_jobs, job_group, lay_out_merged
 
 DS = "Agency_Data"
 HEADER = "pid|abn|org_nm|son_pc|acn|son_dpid"
@@ -32,7 +32,6 @@ def _cfg(tmp_path, drop, **kw):
         lake_root=str(tmp_path / "lake"),
         datasets=(DS,),
         merge_dir=str(tmp_path / "merged"),
-        merge_buckets=4,
         export_dir=str(tmp_path / "export"),
         **kw,
     )
@@ -352,7 +351,6 @@ def test_drop_without_a_delta_dataset_file_says_why(spark, tmp_path):
         lake_root=str(tmp_path / "lake"),
         datasets=(DS, "Funds"),
         merge_dir=str(tmp_path / "merged"),
-        merge_buckets=4,
         export_dir=str(tmp_path / "export"),
     )
     res = pipeline.run_weekly(spark, cfg).results
@@ -427,7 +425,8 @@ def test_first_merge_crash_replays_to_the_register(
 ):
     """The first merge into a merged table crashes in its rename commit:
     before any bucket lands (one sized bucket), or after the first of
-    four lands with its marker. The table is set late (week 3) or in a
+    four lands with its marker (a table laid out with four buckets
+    first). The table is set late (week 3) or in a
     first week (a lake of one snapshot), where the replay merges the
     full snapshot again. In the last case the week repeats the previous
     one: the replay finds a bucket, so it merges the week's delta, which
@@ -436,16 +435,16 @@ def test_first_merge_crash_replays_to_the_register(
     feed, drops = _feed_drops(tmp_path, weeks, last)
     for d in drops[:-1]:
         pipeline.run_weekly(spark, _late_cfg(tmp_path, d, merge=False))
+    merged = str(tmp_path / "merged" / DS)
+    if buckets is not None:
+        lay_out_merged(spark, merged, buckets)
     crash_rename_after(monkeypatch, renames)
     with pytest.raises(RuntimeError, match="injected crash"):
-        pipeline.run_weekly(
-            spark, _late_cfg(tmp_path, drops[-1], merge_buckets=buckets)
-        )
+        pipeline.run_weekly(spark, _late_cfg(tmp_path, drops[-1]))
     monkeypatch.undo()
-    merged = str(tmp_path / "merged" / DS)
     assert len(maintenance.bucket_dirs(merged)) == renames
     assert _staging(merged)
-    pipeline.run_weekly(spark, _late_cfg(tmp_path, drops[-1], merge_buckets=buckets))
+    pipeline.run_weekly(spark, _late_cfg(tmp_path, drops[-1]))
     _assert_merged_is_newest(spark, tmp_path, feed)
     assert not _staging(merged)
 
